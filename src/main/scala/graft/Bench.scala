@@ -57,30 +57,33 @@ object Bench {
     * an N-executor run into a driver-local one. */
   def submittedMaster: Boolean = sys.props.contains("spark.master")
 
-  def session(cpus: Int): SparkSession = {
+  /** The one session configuration: every main and the test suites build
+    * their session from this. */
+  def builder(cpus: Int): SparkSession.Builder = {
     val base = SparkSession.builder()
-      .appName(s"graft-bench-$cpus")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       // Hadoop LocalFS default 4KB read buffer ⇒ ~1M read() syscalls per
       // scanned GB; syscalls are what this hypervisor throttles. 4MB buffers
       // cut them 1000× (standard cluster tuning, not a sandbox hack).
       .config("spark.hadoop.io.file.buffer.size", (4 * 1024 * 1024).toString)
-    val builder =
-      if (submittedMaster) base
-      else {
-        // local mode: shuffle/spill on tmpfs (this sandbox's virtio disk
-        // turns syscall-heavy shuffle I/O into hypervisor steal-time
-        // stalls; on a real cluster this is the NVMe-local-scratch
-        // equivalent), shuffle partitions = thread count
-        val localDir = "/dev/shm/graft-spark"
-        new java.io.File(localDir).mkdirs()
-        base.master(s"local[$cpus]")
-          .config("spark.sql.shuffle.partitions", cpus.toString)
-          .config("spark.ui.enabled", "false")
-          .config("spark.local.dir", localDir)
-      }
-    val s = builder.getOrCreate()
+    if (submittedMaster) base
+    else {
+      // local mode: shuffle/spill on tmpfs (a virtio disk turns
+      // syscall-heavy shuffle I/O into hypervisor steal-time stalls, see
+      // BASELINE.md; on a real cluster this is the NVMe-local-scratch
+      // equivalent), shuffle partitions = thread count
+      val localDir = "/dev/shm/graft-spark"
+      new java.io.File(localDir).mkdirs()
+      base.master(s"local[$cpus]")
+        .config("spark.sql.shuffle.partitions", cpus.toString)
+        .config("spark.ui.enabled", "false")
+        .config("spark.local.dir", localDir)
+    }
+  }
+
+  def session(cpus: Int): SparkSession = {
+    val s = builder(cpus).appName(s"graft-bench-$cpus").getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }

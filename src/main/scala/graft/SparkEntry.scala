@@ -3,6 +3,7 @@ package graft
 import graft.cast.CastPlanner
 import graft.io.{ClipsGenerator, OracleTables}
 import graft.spec._
+import graft.streaming.AvailableNow
 import graft.text.TextAnalysis
 import graft.validate._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -82,114 +83,14 @@ object SparkEntry {
     else if (dir.contains("sf0.01")) 20000L
     else 5000L
 
-  /** Ceiling on rows the streaming-sink detach will copy to the driver —
-    * far above any monitor output (q35-q37 emit 4-20 rows at sf0.01), far
-    * below driver-OOM territory. */
-  val MaxStreamingSinkRows = 1000000L
-
   /** State partitions for the BOUNDED-group streaming monitors (windowed
     * aggregations over window × codec/band — tens of live groups at any
     * corpus size, because windows close under the watermark and the
     * category axes are fixed): sized to the state bound, not the host —
-    * see [[runAvailableNow]]'s scaladoc for the measured rationale.
+    * see [[graft.streaming.AvailableNow]]'s scaladoc for the measured
+    * rationale.
     * Key-scale monitors (q35/q87) deliberately do NOT use this. */
   val BoundedMonitorStateParts = 4
-
-  /** Drain a streaming DataFrame through Trigger.AvailableNow into a memory
-    * sink and return the sink table — how the q35-q37 streaming queries
-    * produce a finite, oracle-comparable result. Sink name and checkpoint
-    * are per-invocation (a bench session may run the query after verify). */
-  /** `statePartitions > 0` overrides `spark.sql.shuffle.partitions` for
-    * the DURATION of the streaming query (restored after): a stateful
-    * operator's state-store partition count is fixed to the shuffle
-    * partitions of its first batch, and a monitor whose group cardinality
-    * is BOUNDED small (window × codec, ~tens of live groups) pays one
-    * state-store commit per partition per trigger for zero extra
-    * parallelism — measured r9: q81's 8-trigger replay drops ~8 s → ~3 s
-    * at 4 state partitions (OPTIMIZATION_r09.md). Scale-safe because it
-    * is sized to the operator's STATE BOUND, not to this host: the
-    * map-side work (scans, decode UDFs, partial aggregation) keeps the
-    * input's own parallelism; only the ≤O(groups) merged partials cross
-    * the exchange. Monitors with row-scale key spaces (q35/q87 key on
-    * clip_id/fingerprint) keep the session default. */
-  private[graft] def runAvailableNow(df: DataFrame, name: String,
-      mode: String, maxRows: Long = MaxStreamingSinkRows,
-      statePartitions: Int = 0): DataFrame = {
-    val s = df.sparkSession
-    val sink = s"${name}_${System.nanoTime()}"
-    // checkpoint on tmpfs when available: the state store snapshots one
-    // entry per key (q35 keys on clip_id — 200k files-worth of sync writes
-    // at sf0.1), and this host throttles syscall-heavy disk I/O (see
-    // BASELINE.md); a real cluster points this at its fast scratch/DFS
-    val ckptBase =
-      if (new java.io.File("/dev/shm").isDirectory) {
-        val d = new java.io.File(s"/dev/shm/graft-ckpt")
-        d.mkdirs(); d.toPath
-      } else java.nio.file.Files.createTempDirectory("graft-ckpt")
-    val ckpt = java.nio.file.Files.createTempDirectory(ckptBase, name).toString
-    // state-store backend (round-4 verdict #5): RocksDB is the DEFAULT —
-    // measured faster than the HDFS-backed provider for these monitors on
-    // this host (q35 at sf0.1, 200k keys in one batch: 2.5-3.0 s vs
-    // 3.8-4.4 s min-of-3 across two draws each; q37 equal-or-better —
-    // numbers in BASELINE.md), and it is also the standard cluster
-    // recommendation for large state (millions of live keys don't live on
-    // the executor heap). SPARK_GRAFT_STATESTORE=hdfs restores Spark's
-    // built-in default for comparison runs.
-    val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-    // remember the caller's provider so the RocksDB default cannot leak
-    // into later streaming queries on the shared session (round-5 advice)
-    val prevProvider = s.conf.getOption(ProviderKey)
-    if (!sys.env.get("SPARK_GRAFT_STATESTORE").contains("hdfs"))
-      s.conf.set(ProviderKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val PartsKey = "spark.sql.shuffle.partitions"
-    val prevParts = s.conf.getOption(PartsKey)
-    if (statePartitions > 0) s.conf.set(PartsKey, statePartitions.toString)
-    try {
-      val q = df.writeStream.outputMode(mode)
-        .format("memory").queryName(sink)
-        .option("checkpointLocation", s"$ckpt/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // detach the result from the sink so BOTH per-invocation resources can
-      // be released (round-4 review: repeated bench/verify runs would
-      // otherwise accumulate tmpfs checkpoint dirs and driver-held sink
-      // tables). Monitor outputs are summary-sized by design (dup keys,
-      // orphan ids, window rates), so a driver copy is fine.
-      val sinkDf = s.table(sink)
-      val schema = sinkDf.schema
-      // driver-copy guard (round-4 verdict #7): this detach is sized for
-      // SUMMARY outputs (dup keys, orphan ids, window rates). The memory sink
-      // already holds the rows on the driver, but the extra copy below would
-      // double that; fail loudly if a future query routes a row-scale result
-      // through here instead of silently becoming a driver-OOM path.
-      try {
-        val sinkRows = sinkDf.count()
-        require(sinkRows <= maxRows,
-          s"runAvailableNow($name): sink holds $sinkRows rows > " +
-            s"$maxRows — streaming monitor outputs must be " +
-            "summary-sized; write row-scale results to a file sink instead")
-        val rows = sinkDf.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-      } finally {
-        // cleanup runs on the guard path too — a failed invocation must not
-        // leak the tmpfs checkpoint dir or the driver-held sink table
-        s.catalog.dropTempView(sink)
-        try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ckpt))
-        catch { case _: Exception => () }
-      }
-    } finally {
-      prevProvider match {
-        case Some(v) => s.conf.set(ProviderKey, v)
-        case None => s.conf.unset(ProviderKey)
-      }
-      prevParts match {
-        case Some(v) => s.conf.set(PartsKey, v)
-        case None => s.conf.unset(PartsKey)
-      }
-    }
-  }
 
   /** The materialized clips table as a file-source STREAM (the ingest shape
     * of the north-rule pipeline): schema from the parquet footer, all files
@@ -617,13 +518,13 @@ object SparkEntry {
     // clips table carries no timestamp; a constant is a valid event time
     // and exercises the same watermark + state machinery).
     "q35_streaming_dup_counts" -> ((s, dir) => {
-      val stream = clipsStream(s, clipCount(dir))
-        .select(col("clip_id"),
-          lit("2024-01-01 00:00:00").cast("timestamp").as("ts"))
-      val counts = graft.streaming.StreamingDedup.duplicateCounts(
-        stream, "clip_id", "ts")
-      runAvailableNow(counts.toDF(), "q35", "append")
-        .select(col("key").as("clip_id"), col("dup_count"))
+      AvailableNow.drain(s, "q35", "append") { c =>
+        val stream = clipsStream(c, clipCount(dir))
+          .select(col("clip_id"),
+            lit("2024-01-01 00:00:00").cast("timestamp").as("ts"))
+        graft.streaming.StreamingDedup.duplicateCounts(
+          stream, "clip_id", "ts").toDF()
+      }.rows.select(col("key").as("clip_id"), col("dup_count"))
     }),
 
     // Streaming referential monitor (StreamingValidator.orphanStream):
@@ -632,11 +533,12 @@ object SparkEntry {
     // q23's batch anti-join exactly.
     "q36_streaming_orphans" -> ((s, dir) => {
       val n = clipCount(dir)
-      val stream = clipsStream(s, n).select(col("clip_id"))
-      val orphans = graft.streaming.StreamingValidator.orphanStream(
-        stream, OracleTables.catalog(s, n), Seq("clip_id"),
-        broadcastCatalog = true)
-      runAvailableNow(orphans, "q36", "append")
+      AvailableNow.drain(s, "q36", "append") { c =>
+        graft.streaming.StreamingValidator.orphanStream(
+          clipsStream(c, n).select(col("clip_id")),
+          OracleTables.catalog(c, n), Seq("clip_id"),
+          broadcastCatalog = true)
+      }.rows
     }),
 
     // Streaming windowed violation-rate monitor
@@ -649,15 +551,15 @@ object SparkEntry {
     // independent of watermark progression (append mode would hold back
     // unfinalized windows).
     "q37_streaming_window_rates" -> ((s, dir) => {
-      val stream = clipsStream(s, clipCount(dir))
-        .withColumn("ts",
-          timestamp_seconds(lit(1704067200L) +
-            coalesce(col("dur_ms").cast("long"), lit(-1L))))
-      val rates = graft.streaming.StreamingValidator.violationRateByWindow(
-        stream, ClipsGenerator.spec, "ts", "1 hour", "10 minutes")
-      runAvailableNow(rates, "q37", "complete",
-        statePartitions = BoundedMonitorStateParts)
-        .select(
+      AvailableNow.drain(s, "q37", "complete",
+          statePartitions = BoundedMonitorStateParts) { c =>
+        val stream = clipsStream(c, clipCount(dir))
+          .withColumn("ts",
+            timestamp_seconds(lit(1704067200L) +
+              coalesce(col("dur_ms").cast("long"), lit(-1L))))
+        graft.streaming.StreamingValidator.violationRateByWindow(
+          stream, ClipsGenerator.spec, "ts", "1 hour", "10 minutes")
+      }.rows.select(
           date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hr"),
           col("codec"), col("total_rows"), col("error_rows"),
           col("error_rate"))
@@ -771,17 +673,17 @@ object SparkEntry {
       val n = clipCount(dir)
       val clips = OracleTables.clips(s, n)
       val ref = DriftCheck.digest(clips, "dur_ms")
-      val stream = clipsStream(s, n)
-        .withColumn("dur_ms",
-          when(col("codec") === "pcm_mulaw", col("dur_ms") + 5000)
-            .otherwise(col("dur_ms")))
-        .withColumn("ts", lit("2024-01-01 00:00:00").cast("timestamp"))
-      val mon = graft.streaming.StreamingDrift.monitor(
-        stream, "ts", "dur_ms", Seq("codec"), ref,
-        windowDuration = "1 hour", watermarkDelay = "10 minutes")
-      runAvailableNow(mon, "q43", "complete",
-        statePartitions = BoundedMonitorStateParts)
-        .select(
+      AvailableNow.drain(s, "q43", "complete",
+          statePartitions = BoundedMonitorStateParts) { c =>
+        val stream = clipsStream(c, n)
+          .withColumn("dur_ms",
+            when(col("codec") === "pcm_mulaw", col("dur_ms") + 5000)
+              .otherwise(col("dur_ms")))
+          .withColumn("ts", lit("2024-01-01 00:00:00").cast("timestamp"))
+        graft.streaming.StreamingDrift.monitor(
+          stream, "ts", "dur_ms", Seq("codec"), ref,
+          windowDuration = "1 hour", watermarkDelay = "10 minutes")
+      }.rows.select(
           date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hr"),
           col("codec"), col("drifted"))
     }),
@@ -1264,14 +1166,14 @@ object SparkEntry {
     // = the batch SQL the oracle runs (the q35-q37/q43 discipline).
     "q61_streaming_quality" -> ((s, dir) => {
       val n = clipCount(dir)
-      val stream = clipsStream(s, n)
-        .withColumn("ts", lit("2024-01-01 00:00:00").cast("timestamp"))
-      val cen = graft.streaming.StreamingCensus.quality(
-        stream, "ts", windowDuration = "1 hour",
-        watermarkDelay = "10 minutes")
-      runAvailableNow(cen, "q61", "complete",
-        statePartitions = BoundedMonitorStateParts)
-        .select(
+      AvailableNow.drain(s, "q61", "complete",
+          statePartitions = BoundedMonitorStateParts) { c =>
+        val stream = clipsStream(c, n)
+          .withColumn("ts", lit("2024-01-01 00:00:00").cast("timestamp"))
+        graft.streaming.StreamingCensus.quality(
+          stream, "ts", windowDuration = "1 hour",
+          watermarkDelay = "10 minutes")
+      }.rows.select(
           date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hr"),
           col("codec"), col("band"), col("clips"))
     }),
@@ -1448,22 +1350,22 @@ object SparkEntry {
     "q70_streaming_ingest" -> ((s, dir) => {
       import graft.dedup.Dedup
       import graft.streaming.StreamingIngest
-      val docs = tbl(s, dir, "documents")
-      val store = Dedup.fingerprintStore(
-        docs.where(col("doc_id") < 250), "doc_id", "text")
-      // documents.parquet is a single FILE; the file-stream source needs
-      // a directory, so stream the sf dir gated to just that file
-      val path = s"$dir/documents.parquet"
-      val stream = s.readStream.schema(s.read.parquet(path).schema)
-        .option("maxFilesPerTrigger", "1000000")
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(dir)
-        .withColumn("ts", lit("2024-01-01 00:00:00").cast("timestamp"))
-      val cen = StreamingIngest.classifyCounts(stream, "text", store,
-        "ts", windowDuration = "1 hour", watermarkDelay = "10 minutes")
-      runAvailableNow(cen, "q70", "complete",
-        statePartitions = BoundedMonitorStateParts)
-        .select(
+      AvailableNow.drain(s, "q70", "complete",
+          statePartitions = BoundedMonitorStateParts) { c =>
+        val docs = tbl(c, dir, "documents")
+        val store = Dedup.fingerprintStore(
+          docs.where(col("doc_id") < 250), "doc_id", "text")
+        // documents.parquet is a single FILE; the file-stream source needs
+        // a directory, so stream the sf dir gated to just that file
+        val path = s"$dir/documents.parquet"
+        val stream = c.readStream.schema(c.read.parquet(path).schema)
+          .option("maxFilesPerTrigger", "1000000")
+          .option("pathGlobFilter", "documents.parquet")
+          .parquet(dir)
+          .withColumn("ts", lit("2024-01-01 00:00:00").cast("timestamp"))
+        StreamingIngest.classifyCounts(stream, "text", store,
+          "ts", windowDuration = "1 hour", watermarkDelay = "10 minutes")
+      }.rows.select(
           date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hr"),
           col("status"), col("docs"))
     }),
@@ -1673,31 +1575,14 @@ object SparkEntry {
         lit("flush").as("k"),
         timestamp_seconds((lit(120) + col("id") * 5) * 60 + 30 + 1767268800L)
           .as("ts"))
-      // replay input on tmpfs when available (the runAvailableNow
-      // checkpoint rationale: syscall-heavy small-file I/O is what this
-      // host throttles; a cluster points this at fast scratch), and
-      // DELETED after the counts materialize — the previous per-invocation
-      // /tmp temp dir leaked a full 6-batch copy of the events table every
-      // run (round-8 advice)
-      val replayRoot =
-        if (new java.io.File("/dev/shm").isDirectory) {
-          val d = new java.io.File("/dev/shm/graft-latereplay")
-          d.mkdirs(); d.toPath
-        } else java.nio.file.Files.createTempDirectory("graft-latereplay")
-      val replayDir = java.nio.file.Files
-        .createTempDirectory(replayRoot, "run").toString
-      try {
+      // windowCounts returns local rows, so the replay input (a full copy
+      // of the events table) is deleted as soon as it returns
+      AvailableNow.withScratchDir("latereplay") { replayDir =>
         LateReplay.writeBatches(data.unionByName(flush), "batch", "k", "ts",
           replayDir)
-        // windowCounts detaches its result from the sink (local rows), so
-        // the replay input can be deleted as soon as it returns
         LateReplay.windowCounts(s, replayDir, "1 minute", "5 minutes",
           statePartitions = BoundedMonitorStateParts)
           .where(col("kind") =!= "window" || col("k") =!= "flush")
-      } finally {
-        try org.apache.commons.io.FileUtils
-          .deleteDirectory(new java.io.File(replayDir))
-        catch { case _: Exception => () }
       }
     }),
 
@@ -1864,15 +1749,15 @@ object SparkEntry {
           ((trueI / 10) % 4).cast("int") + 1))
       val fpU = udf((b: Array[Byte], c: String) =>
         graft.audio.ContentFingerprint.fingerprint(b, c))
-      val stream = clipsStream(s, n)
-        .where(id % 5000 =!= 17)
-        .where(!(col("codec") === "adpcm_ima" && srTrue === 8000))
-        .select(fpU(col("bytes"), col("codec")).as("fingerprint"),
-          lit("2024-01-01 00:00:00").cast("timestamp").as("ts"))
-      val counts = graft.streaming.StreamingDedup.duplicateCounts(
-        stream, "fingerprint", "ts")
-      runAvailableNow(counts.toDF(), "q87", "append")
-        .select(col("key").as("fingerprint"), col("dup_count"))
+      AvailableNow.drain(s, "q87", "append") { c =>
+        val stream = clipsStream(c, n)
+          .where(id % 5000 =!= 17)
+          .where(!(col("codec") === "adpcm_ima" && srTrue === 8000))
+          .select(fpU(col("bytes"), col("codec")).as("fingerprint"),
+            lit("2024-01-01 00:00:00").cast("timestamp").as("ts"))
+        graft.streaming.StreamingDedup.duplicateCounts(
+          stream, "fingerprint", "ts").toDF()
+      }.rows.select(col("key").as("fingerprint"), col("dup_count"))
     }),
 
     // Subword-budget mixture (round 8) — the full planning→execution loop

@@ -160,6 +160,26 @@ object ManifestCheckpoint {
     pendingAgainstManifest(spark, fingerprints(df, partitionCol), manifestDir)
       .map(_._1)
 
+  /** Deletes each pending partition's dir under `root` before a dynamic
+    * partition overwrite: that overwrite only replaces partitions that
+    * PRODUCE rows, so a re-run partition whose output went to zero would
+    * keep its stale files. Hadoop FileSystem (not java.io.File, which
+    * silently no-ops on HDFS/S3) resolved from the path's own scheme, and
+    * the dir name built with the SAME escaping Spark's partitioned writer
+    * uses (getPartitionPathString: ':', '%', '#', ... are percent-escaped
+    * on disk — a raw string-concat path would miss those dirs). */
+  private def clearPartitionDirs(spark: SparkSession, root: String,
+      pending: Seq[String]): Unit = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    val r = new org.apache.hadoop.fs.Path(root)
+    val fs = r.getFileSystem(spark.sessionState.newHadoopConf())
+    pending.foreach { p =>
+      val d = new org.apache.hadoop.fs.Path(r,
+        ExternalCatalogUtils.getPartitionPathString("partition_value", p))
+      if (fs.exists(d)) fs.delete(d, true)
+    }
+  }
+
   /** Validate only pending partitions; write violations under
     * `outDir/violations/partition_value=<v>/` and append manifest entries.
     * Returns the partitions processed this run. Idempotent: re-running
@@ -228,25 +248,7 @@ object ManifestCheckpoint {
           run0.annotated.observe(obs, aggs.head, aggs.tail: _*))))
       } else None
     val run = observed.map(_._2).getOrElse(run0)
-    // dynamic partition overwrite only replaces partitions that PRODUCE
-    // rows — a re-validated partition whose violations went to zero would
-    // keep its stale files. Clear every pending partition's dir first so
-    // the written state always matches the manifest entry. Hadoop FileSystem
-    // (not java.io.File, which silently no-ops on HDFS/S3) resolved from the
-    // output path's own scheme, and the dir name built with the SAME
-    // escaping Spark's partitioned writer uses (getPartitionPathString:
-    // ':', '%', '#', ... are percent-escaped on disk — a raw string-concat
-    // path would miss those dirs).
-    locally {
-      import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-      val vioRoot = new org.apache.hadoop.fs.Path(s"$outDir/violations")
-      val fs = vioRoot.getFileSystem(spark.sessionState.newHadoopConf())
-      pending.foreach { p =>
-        val d = new org.apache.hadoop.fs.Path(vioRoot,
-          ExternalCatalogUtils.getPartitionPathString("partition_value", p))
-        if (fs.exists(d)) fs.delete(d, true)
-      }
-    }
+    clearPartitionDirs(spark, s"$outDir/violations", pending)
     run.violations
       .withColumn("partition_value", partitionKey(partCol))
       .write.mode(SaveMode.Overwrite)
@@ -324,19 +326,7 @@ object ManifestCheckpoint {
     require(out.columns.contains("_part"),
       "transform must preserve the _part partition-label column")
     val dataRoot = s"$outDir/data"
-    // clear pending dirs first (same rationale and escaping as the
-    // violations write above: dynamic overwrite only replaces partitions
-    // that produce rows, and partition values are percent-escaped on disk)
-    locally {
-      import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-      val root = new org.apache.hadoop.fs.Path(dataRoot)
-      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-      pending.foreach { p =>
-        val d = new org.apache.hadoop.fs.Path(root,
-          ExternalCatalogUtils.getPartitionPathString("partition_value", p))
-        if (fs.exists(d)) fs.delete(d, true)
-      }
-    }
+    clearPartitionDirs(spark, dataRoot, pending)
     out.withColumnRenamed("_part", "partition_value")
       .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
@@ -346,12 +336,11 @@ object ManifestCheckpoint {
     val rowsIn = slice.groupBy(col("_part").as("partition_value"))
       .agg(count(lit(1)).as("n")).collect() // O(#pending) — narrow scan
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    // cast the partition column to string BEFORE collecting: Spark's
-    // partition-type inference turns a numeric-looking partition value
-    // (e.g. a sample rate) into an int, and a bare getString would throw
-    // ClassCastException mid-manifest-write (round-8 advice)
-    val rowsOut = spark.read.parquet(dataRoot)
-      .select(col("partition_value").cast("string").as("partition_value"))
+    // read the partition column back as the STRING it was written as:
+    // Spark's partition-type inference would turn '007' into 7 and '1.50'
+    // into 1.5, and those rows would fall out of `isin(pending)`
+    val rowsOut = spark.read.schema("partition_value STRING")
+      .parquet(dataRoot)
       .where(col("partition_value").isin(pending: _*))
       .groupBy("partition_value").agg(count(lit(1)).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap

@@ -52,13 +52,20 @@ object LateReplay {
     * single hash-repartition by batch + `partitionBy` write puts every
     * batch's rows in exactly one task (so exactly one file per batch
     * dir), and the dirs are renamed into the `b<i>` layout afterwards —
-    * same bytes-on-disk contract, one scan. */
+    * same bytes-on-disk contract, one scan. Rewriting into the same `dir`
+    * replaces the earlier batches. */
   def writeBatches(rows: DataFrame, batchCol: String, keyCol: String,
       tsCol: String, dir: String): Int = {
     val batches = rows.select(col(batchCol).cast("long")).distinct()
       .orderBy(batchCol).collect().map(_.getLong(0)) // O(batches) driver
     val t0 = 1700000000000L
     val tmp = s"$dir/_staging"
+    // a reused dir holds an earlier layout: a stale b<i> would fail the
+    // rename below, and one past this run's batch count would replay as an
+    // extra batch through the `b*` glob
+    Option(new java.io.File(dir).listFiles()).toSeq.flatten
+      .filter(f => f.getName == "_staging" || f.getName.matches("b\\d+"))
+      .foreach(org.apache.commons.io.FileUtils.deleteDirectory)
     rows.select(col(batchCol).cast("long").as("_b"),
         col(keyCol).cast("string").as("k"),
         col(tsCol).cast("timestamp").as("ts"))
@@ -90,89 +97,43 @@ object LateReplay {
     * late (window, key) groups the watermark dropped (summed over
     * micro-batch progress; see the metric note above).
     * Windows still open when the replay ends are NOT emitted (append
-    * mode) — writers append trailing flush batches to finalize. */
-  /** `statePartitions > 0` overrides shuffle partitions for the duration
-    * of the replay query (restored after): replay-gate state is one count
-    * per live (window, key) — bounded by the watermark horizon — and each
-    * state partition pays a commit per TRIGGER, so a multi-batch replay
-    * at session-wide partitioning spends most of its wall on empty state
-    * commits (measured r9: 8 triggers × 32 partitions ≈ 8 s → ≈ 3 s at 4;
-    * OPTIMIZATION_r09.md). Sized to the state bound, not the host; the
-    * emitted counts and the drop metric are partition-layout-invariant
-    * (one merged partial per group, see the object doc). */
+    * mode) — writers append trailing flush batches to finalize.
+    *
+    * `statePartitions` is the [[AvailableNow.drain]] setting: replay-gate
+    * state is one count per live (window, key) — bounded by the watermark
+    * horizon — and each state partition pays a commit per TRIGGER, so a
+    * multi-batch replay at session-wide partitioning spends most of its
+    * wall on empty state commits. The emitted counts and the drop metric
+    * are partition-layout-invariant (one merged partial per group, see the
+    * object doc). */
   def windowCounts(spark: SparkSession, dir: String, windowDuration: String,
-      delay: String, maxRows: Long = 1000000L,
+      delay: String, maxRows: Long = AvailableNow.MaxSinkRows,
       statePartitions: Int = 0): DataFrame = {
-    val agg = spark.readStream
-      .schema("k STRING, ts TIMESTAMP")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$dir/b*")
-      .withWatermark("ts", delay)
-      .groupBy(window(col("ts"), windowDuration), col("k"))
-      .agg(count(lit(1)).as("n_rows"))
-      .select(col("k"),
-        date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
-          .as("window_start"),
-        col("n_rows"))
-
-    // same run hygiene as SparkEntry.runAvailableNow (tmpfs checkpoint,
-    // RocksDB default, sink detach + cleanup), plus the progress read the
-    // dropped-row accounting needs
-    val sink = s"latereplay_${System.nanoTime()}"
-    val ckptBase =
-      if (new java.io.File("/dev/shm").isDirectory) {
-        val d = new java.io.File("/dev/shm/graft-ckpt"); d.mkdirs(); d.toPath
-      } else java.nio.file.Files.createTempDirectory("graft-ckpt")
-    val ckpt = java.nio.file.Files.createTempDirectory(ckptBase, "latereplay")
-      .toString
-    val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(ProviderKey)
-    if (!sys.env.get("SPARK_GRAFT_STATESTORE").contains("hdfs"))
-      spark.conf.set(ProviderKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val PartsKey = "spark.sql.shuffle.partitions"
-    val prevParts = spark.conf.getOption(PartsKey)
-    if (statePartitions > 0) spark.conf.set(PartsKey, statePartitions.toString)
-    try {
-      val q = agg.writeStream.outputMode("append")
-        .format("memory").queryName(sink)
-        .option("checkpointLocation", s"$ckpt/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val dropped = q.recentProgress.iterator
-        .flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
-      try {
-        val sinkDf = spark.table(sink)
-        val sinkRows = sinkDf.count()
-        require(sinkRows <= maxRows,
-          s"LateReplay sink holds $sinkRows rows > $maxRows — " +
-            "window×key output must stay summary-sized")
-        val rows = sinkDf.collect().map(r =>
-          Row("window", r.getString(0), r.getString(1), r.getLong(2))) :+
-          Row("late_dropped_groups", null, null, dropped)
-        spark.createDataFrame(
-          java.util.Arrays.asList(rows: _*),
-          StructType(Seq(
-            StructField("kind", StringType, nullable = false),
-            StructField("k", StringType, nullable = true),
-            StructField("window_start", StringType, nullable = true),
-            StructField("n_rows", LongType, nullable = false))))
-      } finally {
-        spark.catalog.dropTempView(sink)
-        try org.apache.commons.io.FileUtils
-          .deleteDirectory(new java.io.File(ckpt))
-        catch { case _: Exception => () }
-      }
-    } finally {
-      prevProvider match {
-        case Some(v) => spark.conf.set(ProviderKey, v)
-        case None => spark.conf.unset(ProviderKey)
-      }
-      prevParts match {
-        case Some(v) => spark.conf.set(PartsKey, v)
-        case None => spark.conf.unset(PartsKey)
-      }
+    val d = AvailableNow.drain(spark, "latereplay", "append", maxRows,
+        statePartitions) { s =>
+      s.readStream
+        .schema("k STRING, ts TIMESTAMP")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(s"$dir/b*")
+        .withWatermark("ts", delay)
+        .groupBy(window(col("ts"), windowDuration), col("k"))
+        .agg(count(lit(1)).as("n_rows"))
+        .select(col("k"),
+          date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
+            .as("window_start"),
+          col("n_rows"))
     }
+    val dropped = d.progress.flatMap(_.stateOperators)
+      .map(_.numRowsDroppedByWatermark).sum
+    val rows = d.rows.collect().map(r =>
+      Row("window", r.getString(0), r.getString(1), r.getLong(2))) :+
+      Row("late_dropped_groups", null, null, dropped)
+    spark.createDataFrame(
+      java.util.Arrays.asList(rows: _*),
+      StructType(Seq(
+        StructField("kind", StringType, nullable = false),
+        StructField("k", StringType, nullable = true),
+        StructField("window_start", StringType, nullable = true),
+        StructField("n_rows", LongType, nullable = false))))
   }
 }

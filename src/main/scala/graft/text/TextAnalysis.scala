@@ -18,10 +18,6 @@ object TextAnalysis {
 
   def charCount(c: Column): Column = length(c)
 
-  /** Mean token length — a cheap fluency proxy. */
-  def avgTokenLen(c: Column): Column =
-    (length(c) - tokenCount(c) + 1).cast("double") / tokenCount(c)
-
   /** Ratio of alphabetic chars (strip spaces first). */
   def alphaRatio(c: Column): Column = {
     val noSpace = regexp_replace(c, " ", "")

@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
@@ -14,4 +14,14 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+}
+
+/** Bridge into the classic session's clone, which the streaming drain runs
+  * on. */
+object SessionBridge {
+  /** A session sharing `s`'s SparkContext, cache and catalog, with a COPY
+    * of its runtime conf, temp views and registered functions — unlike
+    * `newSession()`, which starts from the static conf only. */
+  def cloneSession(s: SparkSession): SparkSession =
+    s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
 }

@@ -5,14 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** One shared local SparkSession for all suites (sbt forks one test JVM). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = Bench.builder(4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.timeType.enabled", "true") // Spark 4.1 TIME preview
-      .config("spark.ui.enabled", "false")
       // saveAsTable target for bucketed-table tests (inside the repo tree)
       .config("spark.sql.warehouse.dir", "/root/repo/target/test-warehouse")
       .getOrCreate()

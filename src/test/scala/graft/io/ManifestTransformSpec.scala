@@ -71,6 +71,21 @@ class ManifestTransformSpec extends AnyFunSuite {
     assert(written.count() === 20L)
   }
 
+  test("numeric-looking partition values round-trip as strings") {
+    import spark.implicits._
+    val (manifestDir, outDir) = mkBase()
+    val df = (0L until 6L).map(i => (i, if (i < 4) "007" else "1.50"))
+      .toDF("id", "part")
+    ManifestCheckpoint.runResumableTransform(spark, df, "part",
+      manifestDir, outDir)(identity)
+    val entries = ManifestCheckpoint.latestEntries(
+      spark.read.parquet(manifestDir))
+      .select("partition_value", "total_rows", "error_rows", "valid_rows")
+      .collect().map(r => r.getString(0) ->
+        (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
+    assert(entries === Map("007" -> ((4L, 0L, 4L)), "1.50" -> ((2L, 0L, 2L))))
+  }
+
   test("a transform that drops _part fails loudly") {
     val (manifestDir, outDir) = mkBase()
     val e = intercept[IllegalArgumentException] {

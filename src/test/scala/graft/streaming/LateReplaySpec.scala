@@ -15,13 +15,13 @@ import java.nio.file.Files
 class LateReplaySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  test("lagged late filter, drop accounting, and finalization") {
+  /** The handcrafted 5-batch layout. */
+  private def layout = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("late-replay-spec").toString
     val base = 1767268800L // 2026-01-01 12:00:00 UTC
     def ts(min: Int, sec: Int = 30) =
       new java.sql.Timestamp((base + min * 60 + sec) * 1000L)
-    val rows = Seq(
+    Seq(
       // batch 0: on-time minutes 0-9 (max 09:59)
       (0L, "a", ts(0)), (0L, "a", ts(5)), (0L, "a", ts(9, 59)),
       // batch 1: on-time 10-19; min 2 is ONE batch stale (no watermark
@@ -38,8 +38,15 @@ class LateReplaySpec extends AnyFunSuite {
       // batch 4: second flush finalizes everything real
       (4L, "flush", ts(125))
     ).toDF("batch", "k", "ts")
-    assert(LateReplay.writeBatches(rows, "batch", "k", "ts", dir) === 5)
-    val out = LateReplay.windowCounts(spark, dir, "1 minute", "5 minutes")
+  }
+
+  private def replay(dir: String) =
+    LateReplay.windowCounts(spark, dir, "1 minute", "5 minutes")
+
+  test("lagged late filter, drop accounting, and finalization") {
+    val dir = Files.createTempDirectory("late-replay-spec").toString
+    assert(LateReplay.writeBatches(layout, "batch", "k", "ts", dir) === 5)
+    val out = replay(dir)
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2),
         r.getLong(3)))
     val dropped = out.filter(_._1 == "late_dropped_groups")
@@ -60,5 +67,19 @@ class LateReplaySpec extends AnyFunSuite {
         s"$m: ${wins.mkString("; ")}")
     // flush windows themselves never finalize (append mode, stream ends)
     assert(!wins.exists(_._1 == "flush"))
+  }
+
+  test("rewriting into a used dir replays like a fresh dir") {
+    import spark.implicits._
+    val fresh = Files.createTempDirectory("late-replay-fresh").toString
+    LateReplay.writeBatches(layout, "batch", "k", "ts", fresh)
+    val reused = Files.createTempDirectory("late-replay-reused").toString
+    // an earlier run with MORE batches: every stale b<i> must go
+    val earlier = (0L until 7L).map(b =>
+      (b, "old", new java.sql.Timestamp(1767268800000L + b * 60000L)))
+      .toDF("batch", "k", "ts")
+    assert(LateReplay.writeBatches(earlier, "batch", "k", "ts", reused) === 7)
+    assert(LateReplay.writeBatches(layout, "batch", "k", "ts", reused) === 5)
+    assert(replay(reused).collect().toSet === replay(fresh).collect().toSet)
   }
 }

@@ -110,15 +110,16 @@ class StreamingValidatorSpec extends AnyFunSuite {
     // the memory-sink detach is sized for summary outputs; a future query
     // routing row-scale results through it must hit the guard, not a
     // silent driver-OOM path
-    def stream = spark.readStream.schema(eventsSchema).parquet(eventsDir)
-      .select(col("event_id"))
+    def stream(s: org.apache.spark.sql.SparkSession) =
+      s.readStream.schema(eventsSchema).parquet(eventsDir)
+        .select(col("event_id"))
     val e = intercept[IllegalArgumentException] {
-      graft.SparkEntry.runAvailableNow(stream, "guardtest", "append", maxRows = 5)
+      AvailableNow.drain(spark, "guardtest", "append", maxRows = 5)(stream)
     }
     assert(e.getMessage.contains("summary-sized"))
     // under the ceiling the detach returns the full result
     val n = spark.read.schema(eventsSchema).parquet(eventsDir).count()
-    val ok = graft.SparkEntry.runAvailableNow(stream, "guardok", "append")
+    val ok = AvailableNow.drain(spark, "guardok", "append")(stream).rows
     assert(ok.count() === n)
   }
 }

@@ -66,29 +66,6 @@ class BpeTokenizerSpec extends AnyFunSuite {
     assert(got(5L) === expected("newestwidest") && got(5L) >= 2L)
   }
 
-  test("subwordCountsViaDistinct ≡ subwordCounts (r8 verdict #7 variant)") {
-    val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-      .select("doc_id", "text")
-    val train = docs.where(col("doc_id") % 4 < 3)
-    val freqs = BpeTokenizer.wordFreqs(train, "text")
-    val voc = BpeTokenizer.vocab(freqs,
-      BpeTokenizer.trainMerges(freqs, numMerges = 60))
-    val a = BpeTokenizer.subwordCounts(docs, "doc_id", "text", voc)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val b = BpeTokenizer.subwordCountsViaDistinct(docs, "doc_id", "text", voc)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(a === b)
-    // null/empty rows route identically through both paths
-    import spark.implicits._
-    val edge = Seq((1L, null.asInstanceOf[String]), (2L, ""), (3L, "a b"))
-      .toDF("doc_id", "text")
-    val ae = BpeTokenizer.subwordCounts(edge, "doc_id", "text", voc)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val be = BpeTokenizer.subwordCountsViaDistinct(edge, "doc_id", "text", voc)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(ae === be)
-  }
-
   test("committed q80 vocabularies equal live re-training at every scale") {
     for (sf <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
       "/root/testdata/sf0.1"))
