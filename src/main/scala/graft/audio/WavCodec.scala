@@ -151,22 +151,4 @@ object AudioCodec {
     frameSample(samples, frameLen, hop).map { f =>
       math.sqrt(f.map(s => s.toDouble * s).sum / f.length)
     }
-
-  /** Naive linear resample to `tgtHz` — real plumbing for a resize/resample
-    * stage (quality is not the point; determinism is). */
-  def resampleLinear(samples: Array[Short], srcHz: Int, tgtHz: Int): Array[Short] = {
-    if (srcHz == tgtHz || samples.isEmpty) return samples
-    val outLen = math.max(1, (samples.length.toLong * tgtHz / srcHz).toInt)
-    val out = new Array[Short](outLen)
-    var i = 0
-    while (i < outLen) {
-      val pos = i.toDouble * srcHz / tgtHz
-      val i0 = math.min(samples.length - 1, pos.toInt)
-      val i1 = math.min(samples.length - 1, i0 + 1)
-      val frac = pos - i0
-      out(i) = math.round(samples(i0) * (1 - frac) + samples(i1) * frac).toShort
-      i += 1
-    }
-    out
-  }
 }

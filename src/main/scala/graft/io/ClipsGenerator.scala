@@ -88,12 +88,25 @@ object ClipsGenerator {
 
   def freqHz(i: Long): Double = 220.0 + (i % 880)
 
-  /** Reference PCM for clip i — what the decode invariant compares against.
-    * `maxSynthMs` caps the synthesized signal length so bulk generation
-    * stays ~O(KB)/row (the dur_ms COLUMN keeps its nominal value; both synth
-    * and reference use the same cap, so the invariant is exact). */
+  /** Every input of clip i's reference synthesis: `(freqHz, cappedMs,
+    * srHz)`. `maxSynthMs` caps the synthesized signal length so bulk
+    * generation stays ~O(KB)/row (the dur_ms COLUMN keeps its nominal
+    * value; payload and reference use the same cap, so the invariant is
+    * exact). Two ids with equal keys have identical references — the
+    * decode invariant memoizes on this key. */
+  def referenceKey(i: Long, maxSynthMs: Int): (Double, Int, Int) =
+    (freqHz(i), math.min(durMs(i), maxSynthMs), srHz(i))
+
+  /** Reference PCM for clip i — what the decode invariant compares against,
+    * and the signal every payload encodes. */
+  def referenceSamples(i: Long, maxSynthMs: Int): Array[Short] = {
+    val (freq, ms, sr) = referenceKey(i, maxSynthMs)
+    WavCodec.synthSineSamples(freq, ms, sr)
+  }
+
+  /** [[referenceSamples]] in the pcm_s16le (RIFF) container. */
   def referenceBytes(i: Long, maxSynthMs: Int): Array[Byte] =
-    WavCodec.synthSine(freqHz(i), math.min(durMs(i), maxSynthMs), srHz(i))
+    WavCodec.wrapPcm16(srHz(i), referenceSamples(i, maxSynthMs))
 
   /** Payload bytes for clip i, in the row's declared codec — every label
     * encodes for real: flac rows carry FLAC streams (from-scratch
@@ -102,14 +115,14 @@ object ClipsGenerator {
     * finite ≈34-39 dB SNR vs the same reference), pcm_s16le rows the WAV
     * container. */
   def payloadBytes(i: Long, maxSynthMs: Int): Array[Byte] = {
-    def samples = WavCodec.synthSineSamples(
-      freqHz(i), math.min(durMs(i), maxSynthMs), srHz(i))
+    val sr = srHz(i)
+    val samples = referenceSamples(i, maxSynthMs)
     codec(i) match {
-      case "flac" => FlacCodec.encode(srHz(i), samples)
-      case "pcm_mulaw" => G711Codec.encodeMuLaw(srHz(i), samples)
-      case "pcm_alaw" => G711Codec.encodeALaw(srHz(i), samples)
-      case "adpcm_ima" => AdpcmCodec.encode(srHz(i), samples)
-      case _ => referenceBytes(i, maxSynthMs)
+      case "flac" => FlacCodec.encode(sr, samples)
+      case "pcm_mulaw" => G711Codec.encodeMuLaw(sr, samples)
+      case "pcm_alaw" => G711Codec.encodeALaw(sr, samples)
+      case "adpcm_ima" => AdpcmCodec.encode(sr, samples)
+      case _ => WavCodec.wrapPcm16(sr, samples)
     }
   }
 

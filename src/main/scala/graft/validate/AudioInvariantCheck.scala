@@ -18,8 +18,12 @@ import org.apache.spark.sql.functions._
   *
   * Decode runs in a Scala UDF: it is the one non-codegen expression in the
   * engine, confined to the sampled subset by design (SURVEY.md §4.2).
-  * The reference PCM is re-synthesized from the clip's own id (pure function
-  * of the row index — ClipsGenerator), so no golden files ship to executors.
+  * The reference PCM is derived from the clip's own id (pure function of
+  * the row index — ClipsGenerator), so no golden files ship to executors.
+  * It depends only on the synthesis key `(freqHz, cappedMs, srHz)`, which
+  * ids share heavily (880 distinct keys per cap in the generator), so each
+  * task synthesizes a key once and reuses it from a bounded per-task memo
+  * ([[ReferenceMemo]]) — no per-row sine synthesis, no WAV round-trip.
   */
 object AudioInvariantCheck {
 
@@ -46,20 +50,62 @@ object AudioInvariantCheck {
       case (acc, (c, t)) => when(codec === c, lit(t)).otherwise(acc)
     }
 
-  /** THE decode-and-measure UDF: decode the payload, re-synthesize the
-    * reference PCM from the clip's own id, return the SNR in dB (−∞ on any
-    * decode failure). Single definition shared by [[check]] and the fused
-    * [[ValidationSuite]] so the standalone check the oracle validates can
-    * never diverge from the suite's inlined copy. */
-  def snrUdf(maxSynthMs: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
+  /** Per-task memo of reference PCM keyed on every synthesis input,
+    * [[ClipsGenerator.referenceKey]] `(freqHz, cappedMs, srHz)` — never on
+    * the row index, so a cap change or a rate change is always a new key.
+    * The map is `@transient lazy` (the `BpeTokenizer.TokenMemo` pattern):
+    * each deserialized task closure builds its own, so no locks. It holds
+    * at most [[ReferenceMemo.BudgetSamples]] samples (4 MB); a key that
+    * would overflow the budget is synthesized uncached.
+    *
+    * Returned arrays are SHARED across rows and must be treated as
+    * read-only — `WavCodec.snrDb`, the one consumer, only reads them. */
+  private[validate] final class ReferenceMemo extends Serializable {
+    @transient private lazy val cache =
+      new java.util.HashMap[(Double, Int, Int), Array[Short]](1 << 10)
+    @transient private var cached = 0
+
+    /** Samples currently held (never above the budget). */
+    def cachedSamples: Int = cached
+
+    def samples(key: (Double, Int, Int)): Array[Short] = {
+      val hit = cache.get(key)
+      if (hit != null) hit
+      else {
+        val (freq, ms, sr) = key
+        val s = WavCodec.synthSineSamples(freq, ms, sr)
+        if (s.length <= ReferenceMemo.BudgetSamples - cached) {
+          cache.put(key, s)
+          cached += s.length
+        }
+        s
+      }
+    }
+  }
+
+  private[validate] object ReferenceMemo {
+    /** 2^21 s16 samples = 4 MB per task: the generator's 880 keys at the
+      * 50 ms cap total ≈ 0.96 M samples, under half the budget. */
+    val BudgetSamples: Int = 1 << 21
+  }
+
+  /** THE decode-and-measure UDF: decode the payload, look up the reference
+    * PCM for the clip's own id in a per-task [[ReferenceMemo]], return the
+    * SNR in dB (−∞ on any decode failure or malformed id). Single
+    * definition shared by [[check]] and the fused [[ValidationSuite]] so
+    * the standalone check the oracle validates can never diverge from the
+    * suite's inlined copy. */
+  def snrUdf(maxSynthMs: Int): org.apache.spark.sql.expressions.UserDefinedFunction = {
+    val memo = new ReferenceMemo
     udf { (clipId: String, bytes: Array[Byte], codec: String) =>
       try {
         val i = clipId.stripPrefix("clip-").toLong
         val (_, decoded) = AudioCodec.decode(bytes, codec)
-        val (_, ref) = WavCodec.decodePcm16(ClipsGenerator.referenceBytes(i, maxSynthMs))
-        WavCodec.snrDb(ref, decoded)
+        WavCodec.snrDb(
+          memo.samples(ClipsGenerator.referenceKey(i, maxSynthMs)), decoded)
       } catch { case _: Exception => Double.NegativeInfinity }
     }
+  }
 
   /** (clip_id, codec, snr_db, snr_ok, transcript_ok) for the sampled subset.
     * `catalog` provides reference transcripts (joined broadcast/SMJ by

@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   *      also yields the reference transcript for the invariant check)
   *   3. distribution-drift t-digests of a numeric column per partition
   *      (+ KS/PSI vs an optional reference digest)
-  *   4. the sampled audio-decode invariant (SNR vs re-synthesized reference,
-  *      transcript equality)
+  *   4. the sampled audio-decode invariant (SNR vs the id's reference PCM,
+  *      memoized per task on its synthesis key; transcript equality)
   *
   * all grouped by the spec's partition columns. Uniqueness needs a shuffle
   * keyed by clip_id rather than by partition, so it stays a second,
