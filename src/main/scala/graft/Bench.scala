@@ -188,8 +188,8 @@ object Bench {
   /** Query keys in the headline are the `qNN` prefix — the query's identity
     * in every artifact (BASELINE.md ranges, verdict prose) — because ~47
     * FULL names alone would eat ~1.6 KB of the ~2 KB capture; the full
-    * names live in the file-only record. Prefixes are unique by
-    * construction (one query per qNN). */
+    * names live in the file-only record. Prefixes are unique because the
+    * registry checks them ([[graft.queries.QueryCase.requireUnique]]). */
   def compactName(name: String): String = name.takeWhile(_ != '_')
 
   /** The compact machine-readable headline — totals, per-query MIN map,
@@ -241,21 +241,8 @@ object Bench {
       else {
         val spark = session(cpus)
         OracleTables.ensure(spark, SparkEntry.clipCount(sfDir))
-        // Warmup hoist (round-3 verdict #7): the first timed query used to
-        // absorb 3-5 s of JIT + codegen + first-scan session warmup,
-        // making q01's number incomparable across rounds. Run two untimed
-        // queries first — a scan+project (q09) and a shuffle+agg (q03) —
-        // so every timed number is steady-state.
-        try {
-          SparkEntry.queries("q09_token_stats")(spark, sfDir).count()
-          SparkEntry.queries("q03_unique_violations")(spark, sfDir).count()
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] warmup failed (continuing): ${e.getMessage}")
-        }
-        // SPARK_GRAFT_ONLY=q17,q14 → time just those queries (iteration
-        // aid; same filter as Verify)
-        val named = SparkEntry.queries.toSeq.sortBy(_._1)
-          .filter(q => SparkEntry.onlyFilter(q._1))
+        SparkEntry.warmup(spark, sfDir)
+        val named = SparkEntry.selected.map(c => c.name -> c.run)
         val samples = scala.collection.mutable.LinkedHashMap[String, Vector[Double]](
           named.map { case (n, _) => n -> Vector.empty[Double] }: _*)
         val failedSet = scala.collection.mutable.Set.empty[String]

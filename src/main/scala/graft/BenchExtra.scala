@@ -24,15 +24,8 @@ object BenchExtra {
     val spark = Bench.session(cpus)
     try {
       OracleTables.ensure(spark, SparkEntry.clipCount(sfDir))
-      // same warmup hoist as Bench
-      try {
-        SparkEntry.queries("q09_token_stats")(spark, sfDir).count()
-        SparkEntry.queries("q03_unique_violations")(spark, sfDir).count()
-      } catch { case e: Throwable =>
-        System.err.println(s"[benchextra] warmup failed: ${e.getMessage}")
-      }
-      val named = SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter(q => SparkEntry.onlyFilter(q._1))
+      SparkEntry.warmup(spark, sfDir)
+      val named = SparkEntry.selected.map(c => c.name -> c.run)
       val samples = scala.collection.mutable.LinkedHashMap[String, Vector[Double]](
         named.map { case (n, _) => n -> Vector.empty[Double] }: _*)
       (1 to reps).foreach { _ =>

@@ -3,72 +3,38 @@ package graft
 import graft.io.OracleTables
 
 /** Plan-dump helper for the optimization rounds: writes
-  * `df.explain("formatted")` output for selected queries to files —
+  * `df.explain("formatted")` output for the selected queries to files —
   * the before/after evidence under `plans/rNN/` the optimization
   * deliverables require. Separate main so the frozen Bench/Verify
   * harnesses stay untouched.
   *
-  * Usage: runMain graft.PlanDump <sfDir> <outDir> <suffix> [qNN,qNN,...]
-  * Writes `<outDir>/<query>_<suffix>.txt` per selected query. Queries
-  * whose operator executes eagerly during construction (q41, q81, q84,
-  * q86 run multi-act/driver-coordinated work) still dump the plan of the
+  * Usage: runMain graft.PlanDump <sfDir> <outDir> <suffix>
+  * Writes `<outDir>/<query>_<suffix>.txt` per query of
+  * [[SparkEntry.selected]] (SPARK_GRAFT_ONLY=q84,q86 picks a subset).
+  * Queries whose operator executes eagerly during construction (q41, q81,
+  * q84, q86 run multi-act/driver-coordinated work) dump the plan of the
   * frame they RETURN; their interior job structure is documented in
-  * OPTIMIZATION notes instead.
+  * OPTIMIZATION notes instead, and q84's interior tercile selection is
+  * plan-pinned by NgramLmSpec.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 3, "usage: PlanDump <sfDir> <outDir> <suffix> [only]")
-    val Array(sfDir, outDir, suffix) = args.take(3)
-    val only: Set[String] =
-      if (args.length > 3) args(3).split(",").toSet else Set.empty
+    require(args.length == 3, "usage: PlanDump <sfDir> <outDir> <suffix>")
+    val Array(sfDir, outDir, suffix) = args
     val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     try {
       OracleTables.ensure(spark, SparkEntry.clipCount(sfDir))
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-        if (only.isEmpty || only.exists(name.startsWith)) {
-          try {
-            val df = fn(spark, sfDir)
-            val plan = df.queryExecution.explainString(
-              org.apache.spark.sql.execution.FormattedMode)
-            java.nio.file.Files.writeString(
-              java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"), plan)
-            System.err.println(s"[plandump] wrote $name")
-          } catch { case e: Throwable =>
-            System.err.println(s"[plandump] $name failed: ${e.getMessage}")
-          }
+      SparkEntry.selected.foreach { c =>
+        try {
+          val plan = c.run(spark, sfDir).queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode)
+          java.nio.file.Files.writeString(
+            java.nio.file.Paths.get(s"$outDir/${c.name}_$suffix.txt"), plan)
+          System.err.println(s"[plandump] wrote ${c.name}")
+        } catch { case e: Throwable =>
+          System.err.println(s"[plandump] ${c.name} failed: ${e.getMessage}")
         }
-      }
-      // q84's returned frame is detached local rows (the operator executes
-      // eagerly); the plan claim lives in the INTERIOR tercile selection —
-      // dump it separately from the same recipe the query runs
-      if (only.isEmpty || only.contains("q84")) {
-        import org.apache.spark.sql.functions._
-        val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-          .select("doc_id", "text")
-        val split = graft.sample.Sampling.assignSplits(docs, "doc_id",
-          Seq("train" -> 0.75, "val" -> 0.125, "test" -> 0.125))
-        val model = graft.text.NgramLm.train(
-          split.where(col("split") === "train").select("doc_id", "text"),
-          "text", minCount = 2L)
-        val scored = graft.text.NgramLm.score(docs, "doc_id", "text", model,
-          loBits = 3L, hiBits = 7L).localCheckpoint()
-        val ref = scored.join(
-          split.where(col("split") === "val").select("doc_id"), Seq("doc_id"))
-        val scorable = ref.where(col("ngrams") > 0L)
-          .withColumn("_r", col("bits").cast("double") / col("ngrams"))
-          .select(col("doc_id"), col("bits"), col("ngrams"), col("_r"))
-          .repartitionByRange(
-            spark.sparkContext.defaultParallelism, col("_r"), col("doc_id"))
-          .withColumn("_pid", spark_partition_id())
-          .localCheckpoint()
-        val sel = graft.text.NgramLm.selectByRank(scorable, "doc_id",
-          Map(0 -> Seq(1L), 2 -> Seq(3L)))
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$outDir/q84_tercile_selection_$suffix.txt"),
-          sel.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode))
-        System.err.println("[plandump] wrote q84_tercile_selection")
       }
     } finally spark.stop()
   }

@@ -1,80 +1,25 @@
 package graft
 
-import graft.cast.CastPlanner
-import graft.io.{ClipsGenerator, OracleTables}
-import graft.spec._
-import graft.streaming.AvailableNow
-import graft.text.TextAnalysis
-import graft.validate._
+import graft.io.OracleTables
+import graft.queries._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
-  * Each `queries` entry exercises a library operator (SURVEY.md §2) against
-  * the driver-generated parquet tables; `oracleSql` holds the DuckDB
-  * equivalent for the correctness gate. Column names/aliases match between
-  * both sides (the driver sorts columns by name before hashing).
+  * The query registry: [[cases]] joins the per-family lists under
+  * `graft.queries`. Each [[graft.queries.QueryCase]] runs one library
+  * operator (SURVEY.md §2) against the generated parquet tables and
+  * carries the DuckDB SQL the correctness gate compares it with; column
+  * names match between both sides (the gate sorts columns by name before
+  * hashing). [[graft.queries.QueryCase.requireUnique]] checks the names and
+  * their `qNN` prefixes where the registry is built. [[queries]] and
+  * [[oracleSqlFor]] are views of it; the rest of this object holds the
+  * helpers more than one family uses.
   */
 object SparkEntry {
 
-  private def tbl(s: SparkSession, dir: String, name: String): DataFrame =
+  private[graft] def tbl(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
-
-  /** Content-keyed cache discipline for frozen corpus-derived store
-    * tables (q51/q58): the table is keyed by
-    * `<corpusbasename>_<md5 of the corpus files' name/length/mtime>` —
-    * never the dir basename alone, so a regenerated or foreign corpus can
-    * never be served a stale store — and same-corpus keys with a DIFFERENT
-    * content hash are definitionally superseded (regenerated fixtures) and
-    * dropped, while stores for other corpora (other scale factors) coexist
-    * untouched. `build(tableName, path)` runs only when the keyed table
-    * does not exist yet; returns the table name. */
-  private def cachedCorpusStore(s: SparkSession, dir: String,
-      prefix: String)(build: (String, String) => Unit): String = {
-    val docsPath = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val docsFs = docsPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val corpusName = new java.io.File(dir).getName.replace('.', '_')
-    val contentKey = java.security.MessageDigest.getInstance("MD5")
-      .digest(docsFs.listStatus(docsPath)
-        .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-        .sorted.mkString("|").getBytes("UTF-8"))
-      .take(6).map("%02x".format(_)).mkString
-    val sfKey = s"${corpusName}_$contentKey"
-    val storeTbl = s"graft_${prefix}_$sfKey"
-    if (!s.catalog.tableExists(storeTbl)) {
-      import s.implicits._
-      s.catalog.listTables().map(_.name).collect()
-        .filter(t => t.startsWith(s"graft_${prefix}_${corpusName}_") && t != storeTbl)
-        .foreach(t => s.sql(s"DROP TABLE IF EXISTS `$t`"))
-      val storeRoot = new org.apache.hadoop.fs.Path(
-        s"${OracleTables.ScratchRoot}/graft-$prefix")
-      val storeFs = storeRoot.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (storeFs.exists(storeRoot))
-        storeFs.listStatus(storeRoot).map(_.getPath)
-          .filter(p => p.getName.startsWith(s"${corpusName}_") && p.getName != sfKey)
-          .foreach(p => storeFs.delete(p, true))
-      build(storeTbl, s"${OracleTables.ScratchRoot}/graft-$prefix/$sfKey")
-    }
-    storeTbl
-  }
-
-  /** SPARK_GRAFT_ONLY=q33,q34 → keep only queries whose name starts with
-    * one of the comma-separated prefixes. ONE definition shared by Verify
-    * and Bench so the same env var always selects the same set. */
-  def onlyFilter(name: String): Boolean =
-    sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-      .forall(_.exists(name.startsWith))
-
-  /** documents table spec: all columns required (FIXTURES.md shapes). */
-  private val documentsSpec = TableSpec("documents", Seq(
-    ColumnSpec("doc_id", LongType),
-    ColumnSpec("text", StringType),
-    ColumnSpec("lang", StringType),
-    ColumnSpec("source", StringType),
-    ColumnSpec("n_chars", LongType)),
-    keyCols = Seq("doc_id"), partitionCols = Seq("lang"))
 
   /** Clip count for the synthetic north-rule table, scaled off the sf dir
     * so Verify (sf0.01) stays snappy and Bench (sf0.1) has real volume. */
@@ -83,1820 +28,80 @@ object SparkEntry {
     else if (dir.contains("sf0.01")) 20000L
     else 5000L
 
-  /** State partitions for the BOUNDED-group streaming monitors (windowed
-    * aggregations over window × codec/band — tens of live groups at any
-    * corpus size, because windows close under the watermark and the
-    * category axes are fixed): sized to the state bound, not the host —
-    * see [[graft.streaming.AvailableNow]]'s scaladoc for the measured
-    * rationale.
-    * Key-scale monitors (q35/q87) deliberately do NOT use this. */
-  val BoundedMonitorStateParts = 4
-
-  /** The materialized clips table as a file-source STREAM (the ingest shape
-    * of the north-rule pipeline): schema from the parquet footer, all files
-    * in one micro-batch so stateful per-batch emission is deterministic. */
-  private def clipsStream(s: SparkSession, n: Long): DataFrame = {
-    OracleTables.ensure(s, n)
-    val path = OracleTables.clipsPath(n)
-    s.readStream.schema(s.read.parquet(path).schema)
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(path)
-  }
-
   /** Flagship query on sf=0.001; driver smoke-checks rows>0: the full
     * north-rule validation summary over the synthetic clips table. */
   def entry(spark: SparkSession): DataFrame =
     queries("q20_clips_validate_summary")(spark, "/root/testdata/sf0.001")
 
-  /** One per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // RowValidator summary (§2.4 #43-45): per-partition pass/fail counts
-    "q01_null_summary" -> ((s, dir) => {
-      val run = RowValidator.validate(tbl(s, dir, "documents"), documentsSpec)
-      run.summary.select(col("lang"), col("total_rows"), col("error_rows"),
-        col("valid_rows"))
-    }),
-
-    // Range constraint violations (§2.5), north-rule violation shape
-    "q02_range_violations" -> ((s, dir) => {
-      val c = Maximum(0.05)
-      tbl(s, dir, "lineitem")
-        .where(!c.holds(col("l_discount")))
-        .select(col("l_orderkey"), col("l_linenumber"),
-          lit("maximum").as("constraint_id"),
-          col("l_discount").as("observed_value"))
-    }),
-
-    // UniquenessCheck (§2.5 is_unique enforcement): duplicate keys
-    "q03_unique_violations" -> ((s, dir) =>
-      UniquenessCheck.duplicateKeys(tbl(s, dir, "orders"), Seq("o_custkey"))),
-
-    // UniquenessCheck on a true PK — expected empty (negative control)
-    "q04_unique_pk_clean" -> ((s, dir) =>
-      UniquenessCheck.duplicateKeys(tbl(s, dir, "lineitem"),
-        Seq("l_orderkey", "l_linenumber"))),
-
-    // ReferentialCheck orphans (north rule): orders with no lineitems
-    "q05_ref_orphans" -> ((s, dir) => {
-      val catalog = tbl(s, dir, "lineitem")
-        .select(col("l_orderkey").as("o_orderkey"))
-      ReferentialCheck.orphans(tbl(s, dir, "orders"), catalog, Seq("o_orderkey"))
-    }),
-
-    // ReferentialCheck per-group summary
-    "q06_ref_summary" -> ((s, dir) => {
-      val catalog = tbl(s, dir, "lineitem")
-        .select(col("l_orderkey").as("o_orderkey"))
-      ReferentialCheck.summary(tbl(s, dir, "orders"), catalog, "o_orderkey",
-        Seq("o_orderstatus"))
-    }),
-
-    // ColumnStats profile (north rule "column stats"), oracle-safe subset
-    "q07_colstats" -> ((s, dir) =>
-      ColumnStats.profile(tbl(s, dir, "lineitem"), Seq("l_quantity"),
-        Seq("l_returnflag"))
-        .select(col("l_returnflag"), col("total_rows"),
-          col("l_quantity_min").as("q_min"), col("l_quantity_max").as("q_max"),
-          round(col("l_quantity_avg"), 6).as("q_avg"))),
-
-    // CastPlanner (§2.3 #31-41): stringified columns → typed, strict
-    "q08_cast_roundtrip" -> ((s, dir) => {
-      val raw = tbl(s, dir, "events").select(
-        col("event_id"),
-        col("user_id").cast(StringType).as("uid_str"),
-        date_format(col("ts"), "yyyy-MM-dd").as("d_str"),
-        when(col("event_type") === "error", "yes").otherwise("no").as("is_err"))
-      val spec = TableSpec("events_cast", Seq(
-        ColumnSpec("event_id", LongType),
-        ColumnSpec("uid_str", LongType),
-        ColumnSpec("d_str", DateType), // default %Y-%m-%d
-        ColumnSpec("is_err", BooleanType,
-          boolTrueString = "yes", boolFalseString = "no")))
-      // date re-rendered as ISO string: parquet DATE vs DuckDB DATE hash
-      // representations differ across readers; strings are unambiguous
-      CastPlanner(raw, spec)
-        .select(col("event_id"), col("uid_str"),
-          date_format(col("d_str"), "yyyy-MM-dd").as("d_iso"), col("is_err"))
-    }),
-
-    // ---- training-data pipeline ops over documents/embeddings ----
-
-    // Text analysis: token/char counting (codegen'd, scan-only)
-    "q09_token_stats" -> ((s, dir) => {
-      import graft.text.TextAnalysis._
-      tbl(s, dir, "documents").select(col("doc_id"),
-        charCount(col("text")).as("n_chars_calc"),
-        tokenCount(col("text")).as("n_tokens"))
-    }),
-
-    // Text quality scoring (integer-valued, oracle-checkable)
-    "q10_quality_score" -> ((s, dir) =>
-      tbl(s, dir, "documents").select(col("doc_id"),
-        graft.text.TextAnalysis.qualityScore(col("text")).as("quality_score"))),
-
-    // Document fingerprinting (normalized md5)
-    "q11_fingerprint" -> ((s, dir) =>
-      tbl(s, dir, "documents").select(col("doc_id"),
-        graft.text.TextAnalysis.fingerprint(col("text")).as("fp"))),
-
-    // Exact dedup: keeper rows after fingerprint-group dedup
-    "q12_dedup_exact" -> ((s, dir) =>
-      graft.dedup.Dedup.exactKeep(tbl(s, dir, "documents"), "doc_id", "text")
-        .select("doc_id")),
-
-    // Language-ID heuristic (greatest-of-marker-scores; rows-only)
-    "q13_lang_id" -> ((s, dir) =>
-      tbl(s, dir, "documents").select(col("doc_id"),
-        graft.text.TextAnalysis.langId(col("text")).as("lang_pred"))),
-
-    // MinHash+LSH near-dup pairs w/ exact Jaccard verify (rows-only).
-    // Trigram shingles: these synthetic docs all draw on a ~30-word
-    // vocabulary, so unigram/bigram sets overlap heavily for EVERY pair
-    // (candidate explosion — measured 204s at sf0.1 with bigrams);
-    // trigrams restore discrimination (the reference corpus granularity
-    // most dedup pipelines use).
-    // cap disabled here: this query's oracle is an UNCAPPED all-pairs scan,
-    // so the skew guard (production default) must not drop any bucket —
-    // exactness is the claim under test. Production callers keep the cap
-    // and monitor Dedup.oversizedBuckets.
-    // Runs with the DEFAULT LSH skew cap — the configuration a 100 TB run
-    // uses (round-6 verdict #1: these queries previously passed
-    // Int.MaxValue "for exact recall", the one setup that goes quadratic
-    // on a degenerate bucket). The exact-recall oracle still holds because
-    // capped ≡ uncapped at the test scales: no (band, hash) bucket comes
-    // near DefaultMaxBucketSize=1000 — pinned by DedupSpec's
-    // "skew cap is a no-op on the documents corpus" equality test at
-    // sf0.1, and bounded a priori at sf0.01 (500 docs < cap).
-    "q14_minhash_neardups" -> ((s, dir) =>
-      graft.dedup.Dedup.minhashNearDups(tbl(s, dir, "documents"),
-        "doc_id", "text", threshold = 0.8, shingleLen = 3)),
-
-    // SimHash near-dup pairs via pigeonhole chunks. Uses the 60-bit
-    // md5-derived token hash (TextAnalysis.md5Hash60) so the DuckDB oracle
-    // can recompute the identical signatures; the pigeonhole bucketing has
-    // EXACT recall for hamming ≤ maxHamming, so the result equals the
-    // oracle's brute-force all-pairs scan deterministically.
-    "q15_simhash_neardups" -> ((s, dir) =>
-      graft.dedup.Dedup.simhashNearDups(tbl(s, dir, "documents"),
-        "doc_id", "text", maxHamming = 3, bits = 60,
-        family = graft.dedup.Dedup.TokenHashFamily.Custom(TextAnalysis.md5Hash60))),
-        // default skew cap ON (see q14's note): capped ≡ uncapped at test
-        // scales (DedupSpec equality pin), so exact recall is preserved
-
-    // Brute-force cosine top-k (ANN correctness baseline; rows-only)
-    "q16_ann_bruteforce" -> ((s, dir) => {
-      val emb = tbl(s, dir, "embeddings")
-      graft.vector.Similarity.bruteForceTopK(emb,
-        emb.where(col("vec_id") < 5), "vec_id", "embedding", 5)
-    }),
-
-    // Multi-table LSH ANN — the scale path (no corpus shuffle). Recall
-    // params are tuned for this corpus (near-random embeddings are LSH's
-    // theoretical worst case: top-5 cosine ≈ 0.3-0.45 ⇒ weak hyperplane
-    // agreement) so the result EQUALS exact brute-force top-k and shares
-    // its oracle; clustered real-world embeddings need far fewer probes.
-    "q17_ann_lsh" -> ((s, dir) => {
-      val emb = tbl(s, dir, "embeddings")
-      graft.vector.Similarity.lshTopK(emb,
-        emb.where(col("vec_id") < 5), "vec_id", "embedding", 5, dim = 64,
-        planes = 4, tables = 16, multiProbeBits = 2)
-    }),
-
-    // IVF (inverted-file) ANN: deterministic k-means coarse cells + probed
-    // exact search. On THIS corpus (near-random embeddings — coarse
-    // quantization's worst case: true neighbors at cos≈0.3 land in
-    // arbitrary cells) only nprobe=nCells is exact, so the driver query
-    // runs the degenerate full-probe setting to oracle the whole machinery
-    // (training → binning → probe ranking → scored top-k) against ground
-    // truth; the recall-vs-nprobe trade on partial probes is pinned by
-    // IvfSpec. Clustered real-world embeddings probe a small fraction.
-    "q32_ann_ivf" -> ((s, dir) => {
-      val emb = tbl(s, dir, "embeddings")
-      val cents = graft.vector.Similarity.trainCentroids(
-        emb, "vec_id", "embedding", nCells = 16, iters = 2)
-      graft.vector.Similarity.ivfTopK(emb, emb.where(col("vec_id") < 5),
-        "vec_id", "embedding", 5, cents, nprobe = 16)
-    }),
-
-    // Embedding-cosine near-duplicate pairs (rows-only)
-    "q18_embedding_neardups" -> ((s, dir) =>
-      graft.dedup.Dedup.embeddingNearDups(tbl(s, dir, "embeddings"),
-        "vec_id", "embedding", dim = 64, cosThreshold = 0.9)),
-
-    // Embedding near-dup CAPTURE side (round-2 verdict #1): q18's corpus has
-    // no true near-dups (max cos≈0.51), so it pins only the no-false-
-    // positives side. Here the corpus is UNIONed with deterministically
-    // perturbed copies of its first 20 vectors (+0.03 per component, in
-    // double — reproducible in DuckDB SQL; the embeddings are unit-norm, so
-    // planted cosines land at 0.971-0.975, far above threshold 0.9 and far
-    // below the 0.513 max of the organic pairs). embeddingNearDups must FIND
-    // exactly the planted pairs: the oracle is the exact all-pairs scan.
-    // planes=8/tables=16: every planted pair collides in ≥4 tables on this
-    // data (verified against the deterministic hyperplanes), so capture is
-    // exact with margin, not probabilistic luck.
-    "q33_embedding_neardups_planted" -> ((s, dir) => {
-      val emb = tbl(s, dir, "embeddings").select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("embedding"))
-      // collision-proof plant offset (the q44 rationale): +1e5 would
-      // duplicate real vec_ids once embeddings exceeds 100k rows
-      val planted = emb.where(col("vec_id") < 20)
-        .select((col("vec_id") + 200000000L).as("vec_id"),
-          transform(col("embedding"), x => x + lit(0.03d)).as("embedding"))
-      graft.dedup.Dedup.embeddingNearDups(emb.unionByName(planted),
-        "vec_id", "embedding", dim = 64, cosThreshold = 0.9,
-        planes = 8, tables = 16)
-    }),
-
-    // Exact n-gram Jaccard scoring: broadcast query docs vs the full corpus
-    // (the brute-force ground truth of the dedup family, as q16 is for ANN)
-    "q31_ngram_jaccard" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      graft.dedup.Dedup.jaccardScores(docs,
-        docs.where(col("doc_id") < 50), "doc_id", "text", threshold = 0.2)
-    }),
-
-    // Order-sensitive chained-md5 fingerprint (the oracle-checkable form of
-    // the rolling hash; the xxhash64 rollingHash variant stays the hot-path
-    // op, covered by TextAnalysisSpec)
-    "q19_rolling_fingerprint" -> ((s, dir) =>
-      tbl(s, dir, "documents").select(col("doc_id"),
-        TextAnalysis.chainedFingerprint(col("text")).as("rolling_fp"))),
-
-    // Windowed top-k (deterministic tiebreak): heaviest users per event type
-    "q27_topk_users" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val counts = tbl(s, dir, "events")
-        .groupBy(col("event_type"), col("user_id"))
-        .agg(count(lit(1)).as("n"))
-      val w = Window.partitionBy(col("event_type"))
-        .orderBy(col("n").desc, col("user_id"))
-      counts.withColumn("rn", row_number().over(w)).where(col("rn") <= 3)
-    }),
-
-    // Event-time bucketing (hourly) — the batch shape of the streaming
-    // violation-rate monitor; timestamps rendered as ISO strings for
-    // reader-independent hashing
-    "q28_events_hourly" -> ((s, dir) =>
-      tbl(s, dir, "events")
-        .groupBy(date_format(date_trunc("hour", col("ts")),
-          "yyyy-MM-dd HH:mm:ss").as("hr"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("value")), 4).as("total_value"))),
-
-    // Fixed-width histogram — the binned-density piece of drift detection
-    "q29_histogram" -> ((s, dir) =>
-      tbl(s, dir, "lineitem")
-        .groupBy(floor(col("l_quantity") / 5.0).cast(LongType).as("bin"))
-        .agg(count(lit(1)).as("n"))),
-
-    // Multi-column per-group profile (ColumnStats over orders)
-    "q30_orders_profile" -> ((s, dir) =>
-      ColumnStats.profile(tbl(s, dir, "orders"), Seq("o_totalprice"),
-        Seq("o_orderstatus"))
-        .select(col("o_orderstatus"), col("total_rows"),
-          col("o_totalprice_nulls").as("price_nulls"),
-          round(col("o_totalprice_min"), 2).as("price_min"),
-          round(col("o_totalprice_max"), 2).as("price_max"),
-          round(col("o_totalprice_avg"), 4).as("price_avg"))),
-
-    // ---- north-rule clips pipeline. The deterministic synthetic tables
-    // are materialized ONCE to parquet (OracleTables) so the driver's
-    // DuckDB oracle reads the same bytes the queries read — this is what
-    // makes the clips checks oracle-able (round-1 verdict #1). Reading
-    // storage-backed parquet is also the honest 100 TB benchmark shape. ----
-
-    // Full row-constraint suite → per-codec pass/fail summary
-    "q20_clips_validate_summary" -> ((s, dir) => {
-      val clips = OracleTables.clips(s, clipCount(dir))
-      RowValidator.validate(clips, ClipsGenerator.spec)
-        .summary.drop("violations_by_constraint")
-    }),
-
-    // North-rule violation rows (clip_id, constraint_id, observed_value)
-    "q21_clips_violations" -> ((s, dir) =>
-      RowValidator.validate(OracleTables.clips(s, clipCount(dir)),
-        ClipsGenerator.spec).violations),
-
-    // is_unique enforcement on clip_id (injected duplicates found)
-    "q22_clips_unique" -> ((s, dir) =>
-      UniquenessCheck.duplicateKeys(OracleTables.clips(s, clipCount(dir)),
-        Seq("clip_id"))),
-
-    // Salted two-phase uniqueness (round-4 verdict #6: the skew weapon was
-    // unit-pinned but never driver-gated): partial counts on (key, salt)
-    // then a final sum per key — bounded per-reducer load even when one
-    // key dominates a quadrillion rows. Must equal q22's plain groupBy
-    // exactly; shares its oracle.
-    "q38_clips_unique_salted" -> ((s, dir) =>
-      UniquenessCheck.duplicateKeysSalted(OracleTables.clips(s, clipCount(dir)),
-        Seq("clip_id"))),
-
-    // Uniqueness over the BUCKETED emulated-Iceberg table (round-4 verdict
-    // #6): the bucket(n, clip_id) transform realized via native
-    // bucketBy+sortBy means the groupBy-count reads pre-hash-partitioned
-    // files and needs ZERO exchanges (PlanShapeSpec pins the plan; this
-    // query driver-gates the VALUES). Written once per session + scale —
-    // bench reps and repeated calls reuse the catalog table.
-    "q39_clips_unique_bucketed" -> ((s, dir) => {
-      val n = clipCount(dir)
-      // keyed like the oracle tables — generator version + synth cap + n —
-      // so a persistent metastore / leftover warehouse can never silently
-      // serve a table built from a previous generator (round-5 advice)
-      val key = s"v${OracleTables.GeneratorVersion}_ms${OracleTables.MaxSynthMs}_n$n"
-      val tbl = s"graft_clips_bucketed_$key"
-      if (!s.catalog.tableExists(tbl))
-        graft.io.IcebergEmulation.writeBucketed(
-          OracleTables.clips(s, n), ClipsGenerator.spec, tbl, buckets = 16,
-          path = Some(s"${OracleTables.ScratchRoot}/graft-bucketed/$key"))
-      UniquenessCheck.duplicateKeys(s.table(tbl), Seq("clip_id"))
-    }),
-
-    // Referential integrity vs the transcript catalog (broadcast semi-join)
-    "q23_clips_ref_orphans" -> ((s, dir) => {
-      val n = clipCount(dir)
-      ReferentialCheck.orphans(OracleTables.clips(s, n),
-        OracleTables.catalog(s, n), Seq("clip_id"), broadcastCatalog = true)
-    }),
-
-    // Distribution drift per codec vs the reference dur_ms digest.
-    // (The one remaining rows-only clips check: the t-digest sketch is not
-    // SQL-expressible; its math is pinned by TDigestSpec property tests.)
-    "q24_clips_drift" -> ((s, dir) => {
-      val n = clipCount(dir)
-      val clips = OracleTables.clips(s, n)
-      val ref = DriftCheck.digest(clips, "dur_ms")
-      DriftCheck.compareGroups(clips, "dur_ms", Seq("codec"), ref)
-        .select(col("codec"), round(col("ks"), 4).as("ks"),
-          round(col("psi"), 4).as("psi"), col("drifted"))
-    }),
-
-    // Drift EXACT twin (round-2 verdict #2): q24's t-digest verdict gets an
-    // oracle by planting real drift (one codec's durations shifted +5000 ms)
-    // and emitting (a) the EXACT binned KS per codec — integer-count math
-    // DuckDB reproduces bit-for-bit — and (b) the t-digest KS verdict. The
-    // oracle computes the same exact KS and the exact KS verdict; a hash
-    // match therefore pins the sketch KS verdict against exact CDFs (drift
-    // is planted far from the 0.1 threshold on both sides: pcm_mulaw ks≈0.5+,
-    // other codecs ks≈0.01, so sketch error cannot flip the verdict). The
-    // verdict column is deliberately KS-ONLY on BOTH sides — the combined
-    // ks||psi verdict would make the hash depend on the sketch PSI, which
-    // the oracle cannot compute (ln is engine-specific); the PSI branch is
-    // pinned separately by ExactKsSpec's digest-agreement test.
-    "q34_clips_drift_exact" -> ((s, dir) => {
-      val n = clipCount(dir)
-      val clips = OracleTables.clips(s, n)
-      val cur = clips.withColumn("dur_ms",
-        when(col("codec") === "pcm_mulaw", col("dur_ms") + 5000)
-          .otherwise(col("dur_ms")))
-      val ref = DriftCheck.digest(clips, "dur_ms")
-      val sketch = DriftCheck.compareGroups(cur, "dur_ms", Seq("codec"), ref)
-        .select(col("codec"), (col("ks") > 0.1).as("drifted"))
-      DriftCheck.exactKsPerGroup(clips, cur, "dur_ms", Seq("codec"), 100.0)
-        .join(sketch, Seq("codec"))
-        .select(col("codec"), round(col("ks_exact"), 6).as("ks_exact"),
-          col("drifted"))
-    }),
-
-    // Audio-decode invariant (SNR≥30dB + transcript equality) on EVERY row
-    // (sampleEvery=1): the oracle predicts which rows must fail from the
-    // deterministic error-injection rules; the Spark side has to discover
-    // them by actually decoding the WAV payloads. min_snr_db is dropped
-    // from the query output (a decode measurement SQL cannot reproduce).
-    "q25_clips_audio_invariant" -> ((s, dir) => {
-      val n = clipCount(dir)
-      AudioInvariantCheck.summary(OracleTables.clips(s, n),
-        OracleTables.catalog(s, n), sampleEvery = 1, maxSynthMs = 25)
-        .drop("min_snr_db")
-    }),
-
-    // SNR-band census (round 5; per-codec floors round 6): decodes EVERY
-    // row and buckets its SNR into capped-lossless (== 120 dB: exact
-    // decode), finite-lossy-pass ([floor, 120): real quantization error
-    // above the codec's own invariant floor), and fail (< floor, where
-    // floor = 30 dB default / 8 dB for adpcm_ima). The oracle predicts all
-    // three counts exactly from the codec label + the injection rules — so
-    // a hash match proves end-to-end that (a) pcm/flac decode losslessly,
-    // (b) EVERY clean G.711 row lands in [30, 120) and every clean or
-    // duplicate-id adpcm_ima row in [8, 120) (the codecs are genuinely
-    // lossy and genuinely good enough for their floors), and (c) exactly
-    // the per-codec snrFailPred rows fail. The Spark side must discover
-    // the bands by actually decoding five different compressed formats.
-    "q40_clips_snr_bands" -> ((s, dir) => {
-      val n = clipCount(dir)
-      AudioInvariantCheck.check(OracleTables.clips(s, n),
-        OracleTables.catalog(s, n), sampleEvery = 1, maxSynthMs = 25)
-        .groupBy(col("codec"))
-        .agg(
-          sum(when(col("snr_db") === graft.audio.WavCodec.MaxSnrDb, 1L)
-            .otherwise(0L)).as("capped_rows"),
-          sum(when(col("snr_db") >= col("snr_threshold_db") &&
-            col("snr_db") < graft.audio.WavCodec.MaxSnrDb, 1L)
-            .otherwise(0L)).as("lossy_pass_rows"),
-          sum(when(col("snr_db") < col("snr_threshold_db"), 1L).otherwise(0L))
-            .as("fail_rows"))
-    }),
-
-    // The fused one-scan suite (row constraints + referential + drift +
-    // audio invariant in ONE pass) — the engine's 100 TB entry point
-    "q26_clips_suite_onepass" -> ((s, dir) => {
-      val n = clipCount(dir)
-      ValidationSuite.run(OracleTables.clips(s, n),
-        OracleTables.catalog(s, n), ClipsGenerator.spec,
-        ValidationSuite.Config(sampleEvery = 1, maxSynthMs = 25))
-        .drop("drift_digest", "violations_by_constraint")
-    }),
-
-    // Streaming family through the oracle gate (round-3 verdict #3): the
-    // flatMapGroupsWithState duplicate monitor (StreamingDedup
-    // .duplicateCounts — custom event-time state, bounded by watermark +
-    // idle horizon) runs over the clips table read as a FILE STREAM with
-    // Trigger.AvailableNow and lands in a memory sink. All files are
-    // processed in ONE micro-batch (maxFilesPerTrigger above the file
-    // count), so each duplicated clip_id emits exactly one (key, count)
-    // row = its total count — deterministically equal to the batch
-    // groupBy-count the oracle runs. Event time is a constant literal (the
-    // clips table carries no timestamp; a constant is a valid event time
-    // and exercises the same watermark + state machinery).
-    "q35_streaming_dup_counts" -> ((s, dir) => {
-      AvailableNow.drain(s, "q35", "append") { c =>
-        val stream = clipsStream(c, clipCount(dir))
-          .select(col("clip_id"),
-            lit("2024-01-01 00:00:00").cast("timestamp").as("ts"))
-        graft.streaming.StreamingDedup.duplicateCounts(
-          stream, "clip_id", "ts").toDF()
-      }.rows.select(col("key").as("clip_id"), col("dup_count"))
-    }),
-
-    // Streaming referential monitor (StreamingValidator.orphanStream):
-    // stream-static left-anti against the transcript catalog — STATELESS,
-    // so the result is deterministic under any micro-batching and equals
-    // q23's batch anti-join exactly.
-    "q36_streaming_orphans" -> ((s, dir) => {
-      val n = clipCount(dir)
-      AvailableNow.drain(s, "q36", "append") { c =>
-        graft.streaming.StreamingValidator.orphanStream(
-          clipsStream(c, n).select(col("clip_id")),
-          OracleTables.catalog(c, n), Seq("clip_id"),
-          broadcastCatalog = true)
-      }.rows
-    }),
-
-    // Streaming windowed violation-rate monitor
-    // (StreamingValidator.violationRateByWindow): the full clips constraint
-    // suite as a watermarked per-(hour-window × codec) error-rate stream.
-    // Event time is derived deterministically from dur_ms (the clips table
-    // carries no timestamp; base epoch 1704067200 is hour-aligned, so
-    // Spark's epoch-aligned tumbling windows equal DuckDB date_trunc).
-    // Complete output mode + single batch ⇒ every window's final counts,
-    // independent of watermark progression (append mode would hold back
-    // unfinalized windows).
-    "q37_streaming_window_rates" -> ((s, dir) => {
-      AvailableNow.drain(s, "q37", "complete",
-          statePartitions = BoundedMonitorStateParts) { c =>
-        val stream = clipsStream(c, clipCount(dir))
-          .withColumn("ts",
-            timestamp_seconds(lit(1704067200L) +
-              coalesce(col("dur_ms").cast("long"), lit(-1L))))
-        graft.streaming.StreamingValidator.violationRateByWindow(
-          stream, ClipsGenerator.spec, "ts", "1 hour", "10 minutes")
-      }.rows.select(
-          date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hr"),
-          col("codec"), col("total_rows"), col("error_rows"),
-          col("error_rate"))
-    }),
-
-    // Checkpoint/resume through the oracle gate (round 5; round 6 adds the
-    // APPEND act — the commonest production lineage event; north rule:
-    // "resumable from checkpoint with exact per-partition lineage +
-    // metrics"). A five-act interrupted run over the codec-partitioned
-    // clips table:
-    //   run 1: an "interrupted" job validates only the pcm_s16le + flac
-    //          partitions (manifest records their content fingerprints);
-    //   run 2: resume over the FULL table — the manifest must skip the two
-    //          completed partitions and validate exactly the rest;
-    //   run 3: re-resume with nothing changed — must be a pure no-op;
-    //   run 4: an in-place edit of the flac partition's transcripts (null
-    //          rows untouched, so metrics are invariant) must flip its
-    //          whole-row fingerprint and re-queue exactly that partition;
-    //   run 5: GROWTH — the pcm_alaw partition receives id-shifted copies
-    //          of its own rows (id += n: fresh unique ids, the shape of a
-    //          new ingest batch; every other column verbatim, so the
-    //          appended rows carry the same constraint outcomes and the
-    //          partition's metrics exactly double). Exactly pcm_alaw must
-    //          re-queue — this is the event the metadata-only `.files`
-    //          fingerprint basis (ManifestCheckpoint.icebergFingerprints)
-    //          catches for free on a real catalog.
-    // The emitted row per partition carries the manifest's final metrics
-    // plus which run validated it / which acts re-queued it — all exactly
-    // predictable by the oracle from the injection rules, so a hash match
-    // pins both the validation numbers AND the resume/lineage control flow.
-    "q41_checkpoint_resume" -> ((s, dir) => {
-      import graft.checkpoint.ManifestCheckpoint
-      val n = clipCount(dir)
-      val clips = OracleTables.clips(s, n)
-      val base = s"${OracleTables.ScratchRoot}/graft-ckpt/n$n"
-      // fresh state per invocation: verify and each bench rep replay the
-      // whole interrupted-run scenario deterministically
-      try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
-      catch { case _: java.io.IOException => }
-      val manifestDir = s"$base/manifest"
-      val outDir = s"$base/out"
-      val firstRun = clips.where(col("codec").isin("pcm_s16le", "flac"))
-      val run1 = ManifestCheckpoint.runResumable(s, firstRun,
-        ClipsGenerator.spec, manifestDir, outDir)
-      require(run1.toSet == Set("pcm_s16le", "flac"),
-        s"interrupted run validated $run1")
-      val run2 = ManifestCheckpoint.runResumable(s, clips,
-        ClipsGenerator.spec, manifestDir, outDir)
-      require(run2.toSet == Set("pcm_mulaw", "pcm_alaw", "adpcm_ima"),
-        s"resume must validate exactly the remaining partitions, got $run2")
-      val run3 = ManifestCheckpoint.runResumable(s, clips,
-        ClipsGenerator.spec, manifestDir, outDir)
-      require(run3.isEmpty, s"completed manifest must no-op on resume: $run3")
-      val edited = clips.withColumn("transcript",
-        when(col("codec") === "flac",
-          concat(col("transcript"), lit(" v2")))
-          .otherwise(col("transcript")))
-      val run4 = ManifestCheckpoint.runResumable(s, edited,
-        ClipsGenerator.spec, manifestDir, outDir)
-      require(run4 == Seq("flac"),
-        s"edit must re-queue exactly the edited partition, got $run4")
-      val appended = edited.where(col("codec") === "pcm_alaw")
-        .withColumn("clip_id", format_string("clip-%012d",
-          expr("CAST(substr(clip_id, 6) AS BIGINT)") + lit(n)))
-      val grown = edited.unionByName(appended)
-      val run5 = ManifestCheckpoint.runResumable(s, grown,
-        ClipsGenerator.spec, manifestDir, outDir)
-      require(run5 == Seq("pcm_alaw"),
-        s"append must re-queue exactly the grown partition, got $run5")
-      ManifestCheckpoint.latestEntries(s.read.parquet(manifestDir))
-        .select(col("partition_value"), col("total_rows"),
-          col("error_rows"), col("valid_rows"),
-          when(col("partition_value").isin(run1: _*), 1).otherwise(2)
-            .as("validated_in_run"),
-          col("partition_value").isin(run4: _*).as("requeued_after_edit"),
-          col("partition_value").isin(run5: _*).as("requeued_after_append"),
-          lit(run3.isEmpty).as("resume_noop"))
-    }),
-
-    // Frequency-domain content census (round 5): decode EVERY row and
-    // measure how much of its energy a tone at the frequency the clip's
-    // own id claims (220 + id % 880 Hz) explains — the audio analog of a
-    // content checksum, catching swapped / mislabeled / garbage payloads
-    // WITHOUT the reference PCM the SNR invariant needs. The oracle
-    // predicts all three bands per codec exactly from the injection rules
-    // (corrupt non-flac rows decode to half-garbage → anomaly; corrupt
-    // flac rows fail their CRC → decode_fail; everything else, including
-    // 1 Hz-off duplicate-id rows, is the claimed tone → match); the Spark
-    // side must earn them by decoding four codecs and projecting every
-    // signal onto its claimed tone (margins swept in ToneProjectionSpec:
-    // legit >= 0.9995 vs corrupt <= 0.537 at threshold 0.75).
-    "q42_clips_tone_census" -> ((s, dir) => {
-      val n = clipCount(dir)
-      FrequencyCheck.census(OracleTables.clips(s, n), sampleEvery = 1)
-    }),
-
-    // Streaming drift monitor through the oracle gate (round 5 — the one
-    // streaming monitor q35-q37 left unpinned at the driver level). Same
-    // verdict-pinning design as q34: the reference t-digest is trained in
-    // batch on the unshifted table, the STREAM replays the table with
-    // pcm_mulaw durations shifted +5000 ms (ks ≈ 0.5+ for that codec,
-    // ≈ 0.01 for the rest — far from the 0.1 threshold on both sides, so
-    // sketch error cannot flip any verdict), and the windowed streaming
-    // t-digest aggregation (bounded ObjectHashAggregate state, one sketch
-    // per window x codec) must reproduce exactly the oracle's rule-derived
-    // verdict. Constant event time + Complete mode + single AvailableNow
-    // batch = one deterministic emission per codec (Append would hold the
-    // unclosed window back, as in q37). ks/psi numbers are sketch-specific
-    // and deliberately dropped; the VERDICT is the oracle-comparable fact.
-    "q43_streaming_drift" -> ((s, dir) => {
-      val n = clipCount(dir)
-      val clips = OracleTables.clips(s, n)
-      val ref = DriftCheck.digest(clips, "dur_ms")
-      AvailableNow.drain(s, "q43", "complete",
-          statePartitions = BoundedMonitorStateParts) { c =>
-        val stream = clipsStream(c, n)
-          .withColumn("dur_ms",
-            when(col("codec") === "pcm_mulaw", col("dur_ms") + 5000)
-              .otherwise(col("dur_ms")))
-          .withColumn("ts", lit("2024-01-01 00:00:00").cast("timestamp"))
-        graft.streaming.StreamingDrift.monitor(
-          stream, "ts", "dur_ms", Seq("codec"), ref,
-          windowDuration = "1 hour", watermarkDelay = "10 minutes")
-      }.rows.select(
-          date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hr"),
-          col("codec"), col("drifted"))
-    }),
-
-    // Dedup CASCADE (round-5 verdict #4): the stages pass individually
-    // (q12 exact, q14 minhash, q18/q33 embedding) — a real curation
-    // pipeline CHAINS them, each stage seeing only the survivors of the
-    // last, and reports per-stage removal counts. The corpus is documents
-    // plus two deterministic plants so every stage has real work at this
-    // scale: verbatim-text copies of docs 0-9 under fresh ids (caught by
-    // stage 1 exactly), and 20 docs with fresh single-token texts whose
-    // vectors (doc_id = vec_id join) are the q33 perturbed copies
-    // (cos ≈ 0.97 vs their source — caught by stage 3 exactly; their
-    // unique texts sail through stages 1-2). Stage 2 removes the larger id
-    // of each exact-Jaccard-verified near-dup pair among stage-1
-    // survivors. The oracle replays the IDENTICAL cascade rules in SQL, so
-    // a hash match pins the stage composition — survivor threading, stage
-    // ordering, count bookkeeping — not just each stage alone. Note the
-    // embedding stage scores only survivors that HAVE a vector (inner
-    // join): the verbatim-copy ids carry none, but stage 1 has already
-    // removed them.
-    "q44_dedup_cascade" -> ((s, dir) => {
-      import graft.dedup.Dedup
-      val docs = tbl(s, dir, "documents")
-      val emb = tbl(s, dir, "embeddings").select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("embedding"))
-      // plant id offsets sit far above any real doc_id at every test scale
-      // (documents grows ~50k rows per sf unit; 1e8/2e8 keeps the ids
-      // collision-free to ~sf2000 — a colliding offset would silently turn
-      // the id-based anti-joins into double-removals)
-      val exactCopies = docs.where(col("doc_id") < 10)
-        .select((col("doc_id") + 100000000L).as("doc_id"), col("text"))
-      val plantedDocs = s.range(20)
-        .select((col("id") + 200000000L).as("doc_id"),
-          concat(lit("planteddoc"), col("id").cast(StringType)).as("text"))
-      val corpus = docs.select("doc_id", "text")
-        .unionByName(exactCopies).unionByName(plantedDocs)
-      val plantedVecs = emb.where(col("vec_id") < 20)
-        .select((col("vec_id") + 200000000L).as("vec_id"),
-          transform(col("embedding"), x => x + lit(0.03d)).as("embedding"))
-      val vectors = emb.unionByName(plantedVecs)
-      Dedup.cascade(corpus, "doc_id", Seq(
-        "exact" -> (sv => sv.join(
-          Dedup.exactKeep(sv, "doc_id", "text").select("doc_id"),
-          Seq("doc_id"), "left_anti")),
-        // default skew cap ON (round-6 verdict #1) — the 100 TB config;
-        // capped ≡ uncapped here (see q14's note + DedupSpec pin)
-        "minhash" -> (sv => Dedup.minhashNearDups(sv, "doc_id", "text",
-          threshold = 0.8, shingleLen = 3)
-          .select(col("id_b").as("doc_id"))),
-        "embedding" -> (sv => Dedup.embeddingNearDups(
-          sv.join(vectors, sv("doc_id") === vectors("vec_id"))
-            .select(sv("doc_id"), col("embedding")),
-          "doc_id", "embedding", dim = 64, cosThreshold = 0.9,
-          planes = 8, tables = 16)
-          .select(col("id_b").as("doc_id")))))
-    }),
-
-    // Categorical-distribution drift (round-5 verdict #5): DriftCheck's
-    // numeric KS/PSI can't see a MIX shifting (codec share, language
-    // share). The planted shift relabels one fifth of the 16000 Hz
-    // group's pcm_s16le rows to flac (id % 5 = 2) — a ~13-point share
-    // swing in exactly one group; every other sr_hz group must read
-    // NOT-drifted. The statistic (max per-category |share delta|) is
-    // single-division integer math under an order-independent max, so the
-    // oracle reproduces the doubles bit-for-bit (the q34 discipline).
-    "q45_categorical_drift" -> ((s, dir) => {
-      val n = clipCount(dir)
-      val clips = OracleTables.clips(s, n)
-      val cur = clips.withColumn("codec",
-        when(expr("CAST(substr(clip_id, 6) AS BIGINT)") % 5 === 2 &&
-          col("codec") === "pcm_s16le" && col("sr_hz") === 16000, "flac")
-          .otherwise(col("codec")))
-      DriftCheck.categoricalCompare(clips, cur, "codec", Seq("sr_hz"),
-        maxShiftThreshold = 0.05)
-    }),
-
-    // Cross-modal transcript plausibility (round-5 verdict #8): transcript
-    // token count vs dur_ms as a words-per-second band — the text↔audio
-    // consistency check that needs NO decode (scan-only over two narrow
-    // columns; the payload never loads). Null transcripts (the i%1000==7
-    // injection) land in unscorable; the band edges catch rows whose two
-    // modalities are individually valid but jointly impossible.
-    "q46_transcript_plausibility" -> ((s, dir) => {
-      val n = clipCount(dir)
-      CrossModalCheck.summary(OracleTables.clips(s, n), Seq("codec"))
-    }),
-
-    // Benchmark DECONTAMINATION (training-data hygiene): flag corpus docs
-    // sharing any word 5-gram with a benchmark suite. The suite is a FIXED
-    // 10 docs (id residue 7 mod 50, capped below 500 so its size does not
-    // grow with the corpus — a benchmark suite is constant-size, which is
-    // what makes the broadcast bound unconditional) — each flags itself
-    // (verbatim containment) and drags in its near-duplicates (the
-    // generator's planted near-dup family shares long n-grams), so the
-    // output exercises both the "exact leak" and the "mutated leak" case.
-    // Corpus side is one scan, no shuffle (broadcast suite); see
-    // Dedup.decontaminate.
-    "q47_decontamination" -> ((s, dir) => {
-      import graft.dedup.Dedup
-      val docs = tbl(s, dir, "documents").select("doc_id", "text")
-      val bench = docs.where(col("doc_id") < 500 && col("doc_id") % 50 === 7)
-        .select(col("doc_id").as("bench_id"), col("text"))
-      Dedup.decontaminate(docs, "doc_id", "text",
-        bench, "bench_id", "text", n = 5)
-    }),
-
-    // Deterministic split + stratified sample (training-data pipelines
-    // need REPRODUCIBLE train/val/test membership and per-stratum sampling
-    // that survives appends and cluster-size changes — seed-based
-    // Dataset.sample gives neither). Membership is a pure function of
-    // clip_id through an md5-derived 60-bit uniform, one salt per decision
-    // so sample membership can't predict split. All fractions dyadic
-    // (cumulative edges exact in binary), so the oracle reproduces every
-    // row's membership bit-for-bit from the same arithmetic. Scan-only:
-    // the counts are the only thing that ever enters an exchange.
-    "q48_split_sample" -> ((s, dir) => {
-      import graft.sample.Sampling
-      val n = clipCount(dir)
-      val clips = OracleTables.clips(s, n)
-      val withSplit = Sampling.assignSplits(clips, "clip_id",
-        Seq("train" -> 0.75, "val" -> 0.125, "test" -> 0.125))
-      val flag = Sampling.sampleFlag(clips, "clip_id", "codec",
-        Map("flac" -> 0.5, "pcm_mulaw" -> 0.25), defaultRate = 0.0625)
-      withSplit.groupBy(col("codec"), col("split"))
-        .agg(count(lit(1)).as("total_rows"),
-          coalesce(sum(when(flag, 1L).otherwise(0L)), lit(0L))
-            .as("sampled_rows"))
-    }),
-
-    // Quality-filter pipeline report (C4/Gopher-style curation): four
-    // ordered rules, each row attributed to the FIRST rule it fails —
-    // sequential semantics in ONE scan because the rules are row-local
-    // (contrast q44's dedup cascade, whose stages need joins and pay one
-    // materialization each). Thresholds sit mid-distribution (docs run
-    // 10-99 tokens / 48-553 chars) so every rule removes real rows. The
-    // oracle replays the identical when-chain in SQL.
-    "q49_quality_filter_report" -> ((s, dir) => {
-      import graft.text.{FilterReport, TextAnalysis}
-      val docs = tbl(s, dir, "documents")
-      val t = col("text")
-      FilterReport.report(docs, Seq(
-        "too_short" -> (TextAnalysis.tokenCount(t) >= 20),
-        "too_long" -> (length(t) <= 500),
-        "low_stopword" -> (TextAnalysis.stopwordRatio(t) >= 0.05),
-        "low_quality" -> (TextAnalysis.qualityScore(t) >= 2)))
-    }),
-
-    // Near-dup CLUSTERS: pairwise detection (q14's LSH pairs, exact-
-    // verified) composed with transitive closure — keeper selection is
-    // per-CLUSTER, not per-pair (a chain a~b, b~c is ONE group with one
-    // keeper, which pair-local removal gets wrong). Components via
-    // min-label propagation + path compression, each round's ids-only
-    // labels localCheckpoint'ed (the cascade lineage discipline). The
-    // oracle recomputes the exact pairs (the q14 recipe) and closes them
-    // with a recursive CTE — component id (min doc_id) and size must
-    // match exactly.
-    "q50_neardup_components" -> ((s, dir) => {
-      import graft.dedup.Dedup
-      import org.apache.spark.sql.expressions.Window
-      val docs = tbl(s, dir, "documents").select("doc_id", "text")
-      // default skew cap ON (round-6 verdict #1) — the 100 TB config;
-      // capped ≡ uncapped here (see q14's note + DedupSpec pin)
-      val pairs = Dedup.minhashNearDups(docs, "doc_id", "text",
-        threshold = 0.8, shingleLen = 3)
-        .select("id_a", "id_b")
-      Dedup.connectedComponents(pairs, "id_a", "id_b")
-        .select(col("node").as("doc_id"), col("component").as("component_id"))
-        .withColumn("component_size",
-          count(lit(1)).over(Window.partitionBy(col("component_id"))))
-    }),
-
-    // Incremental (append-batch) dedup against a FROZEN corpus (round-6
-    // verdict next-round #2): the production ingest shape none of
-    // q12/q14/q44 exercises — dedup a NEW batch against an established
-    // corpus WITHOUT re-reading corpus text. The corpus is represented
-    // only by its fingerprint STORE, built once and persisted as a
-    // fingerprint-bucketed table (the q39 discipline: the classification
-    // join reads store buckets in place; only the small batch shuffles —
-    // PlanShapeSpec pins that corpus text never enters this plan). The
-    // batch plants all three outcomes: verbatim copies of docs 100-149
-    // under fresh ids (dup_of_corpus, keeper = the source doc) and 10
-    // fresh docs repeating each of 5 new texts twice (first occurrence
-    // new, second dup_in_batch). The oracle replays the identical
-    // classification over (corpus ∪ batch) in SQL.
-    "q51_incremental_dedup" -> ((s, dir) => {
-      import graft.dedup.Dedup
-      val docs = tbl(s, dir, "documents")
-      val storeTbl = cachedCorpusStore(s, dir, "fpstore") { (tblName, path) =>
-        graft.io.IcebergEmulation.writeBucketed(
-          Dedup.fingerprintStore(docs, "doc_id", "text"),
-          TableSpec("fp_store", Seq(
-            ColumnSpec("fingerprint", StringType),
-            ColumnSpec("keeper_id", LongType)), keyCols = Seq("fingerprint")),
-          tblName, buckets = 16, path = Some(path))
-      }
-      val store = s.table(storeTbl)
-      val batch = docs
-        .where(col("doc_id") >= 100 && col("doc_id") < 150)
-        .select((col("doc_id") + 300000000L).as("doc_id"), col("text"))
-        .unionByName(s.range(10).select(
-          (col("id") + 400000000L).as("doc_id"),
-          concat(lit("freshdoc"), (col("id") % 5).cast(StringType)).as("text")))
-      Dedup.incrementalExact(batch, "doc_id", "text", store)
-    }),
-
-    // Gopher/C4 REPETITION rules in the quality-filter chain (round-6
-    // verdict next-round #3): duplicate-line fraction and top-trigram
-    // mass — the published repetition filters that actually bite on web
-    // corpora. Both are row-local, so they slot into the q49 one-scan
-    // when-chain; the trigram array is materialized ONCE per row via the
-    // native Dedup.shingles expression (TextAnalysis.topCount doc:
-    // Catalyst does not CSE across HOF lambdas). Thresholds are INTEGER
-    // inequalities (dup fraction >= 1/2 as (lines-distinct)*2 >= lines;
-    // trigram mass > 1/10 as 10*topCount > trigrams) so no verdict hinges
-    // on double rounding. The mass rule is GATED on >= 10 trigrams —
-    // below that, 10*topCount > size holds for ANY doc (topCount >= 1),
-    // so an ungated ratio rule silently removes every <= 11-token doc;
-    // Gopher gates its ratio rules behind min-length for this reason.
-    // Plants make each rule remove real rows at every scale: doc_id%7==3
-    // re-appends the whole text as a second newline-joined line (dup
-    // fraction exactly 1/2); doc_id%13==6 appends ' buy gold now' x20
-    // (trigram mass 20/(ntok+58) > 0.1 for every 10-99-token doc). The
-    // oracle replays plants + rules identically in SQL.
-    "q52_repetition_filter" -> ((s, dir) => {
-      import graft.text.{FilterReport, TextAnalysis}
-      val docs = tbl(s, dir, "documents")
-      val planted = docs
-        .withColumn("text", when(col("doc_id") % 7 === 3,
-          concat(col("text"), lit("\n"), col("text"))).otherwise(col("text")))
-        .withColumn("text", when(col("doc_id") % 13 === 6,
-          concat(col("text"), repeat(lit(" buy gold now"), 20)))
-          .otherwise(col("text")))
-        .withColumn("_ng", graft.dedup.Dedup.shingles(col("text"), 3))
-      val t = col("text")
-      FilterReport.report(planted.select(col("doc_id"), t, col("_ng")), Seq(
-        "dup_lines" ->
-          ((TextAnalysis.lineCount(t) - TextAnalysis.distinctLineCount(t)) * 2
-            < TextAnalysis.lineCount(t)),
-        "repeated_ngram" ->
-          (size(col("_ng")) < 10 ||
-            TextAnalysis.topCount(col("_ng")) * 10 <= size(col("_ng"))),
-        "low_stopword" -> (TextAnalysis.stopwordRatio(t) >= 0.05)))
-    }),
-
-    // Cluster-KEEPER dedup (round-6 verdict next-round #4): compose the
-    // q50 components into the actual removal decision — one keeper (min
-    // id) per cluster, everything else removed — closing the
-    // detect → cluster → remove arc. keeper_id == component_id by the
-    // min-label construction, but the column is produced by a real
-    // min-aggregate so the oracle CROSS-CHECKS the invariant instead of
-    // assuming it. Oracle: the q50 recursive-CTE closure + per-component
-    // count/min.
-    "q53_cluster_keepers" -> ((s, dir) => {
-      import graft.dedup.Dedup
-      val docs = tbl(s, dir, "documents").select("doc_id", "text")
-      val pairs = Dedup.minhashNearDups(docs, "doc_id", "text",
-        threshold = 0.8, shingleLen = 3).select("id_a", "id_b")
-      Dedup.clusterKeepers(pairs, "id_a", "id_b")
-    }),
-
-    // PII / sensitive-pattern census (round-6 verdict next-round #5): the
-    // remaining standard training-data hygiene scan — per-class regex
-    // counts (email / phone / IPv4) over documents, scan-only, with
-    // (class, count) pairs as the only exchange (the q49 shape). Plants
-    // give every class predictable hits — doc_id%41==5 appends an email,
-    // %43==6 two phone numbers, %47==8 two IPv4s (first-matching-plant
-    // wins, mirrored in the oracle's CASE order); the two-match plants
-    // exercise total_matches > docs_hit. Patterns stick to the
-    // RE2-portable subset so DuckDB's regexp_extract_all replays the
-    // census exactly.
-    "q54_pii_census" -> ((s, dir) => {
-      import graft.text.PiiCensus
-      val docs = tbl(s, dir, "documents")
-      val planted = docs.withColumn("text",
-        when(col("doc_id") % 41 === 5,
-          concat(col("text"), lit(" contact user"),
-            col("doc_id").cast(StringType), lit("@example.com now")))
-          .when(col("doc_id") % 43 === 6,
-            concat(col("text"), lit(" call 555-867-5309 or 555-123-4567 today")))
-          .when(col("doc_id") % 47 === 8,
-            concat(col("text"), lit(" host 10.0.0.77 and 192.168.1.77 up")))
-          .otherwise(col("text")))
-      PiiCensus.census(planted, "text")
-    }),
-
-    // Language-mix drift over DERIVED labels (round-6 verdict next-round
-    // #8): q13's lang-id heuristic feeds q45's categoricalCompare — zero
-    // new operator code; proves the drift operator composes with computed
-    // (not stored) categories. The plant overrides text with French
-    // marker words for doc_id % 3 == 1 in source 'src3' only: exactly
-    // src3's language mix shifts (every other source is byte-identical on
-    // both sides, so its max shift is exactly 0.0 and top category falls
-    // to the deterministic alphabetical tie-break).
-    "q55_langmix_drift" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      val cur = docs.withColumn("text",
-        when(col("source") === "src3" && col("doc_id") % 3 === 1,
-          lit("le la les et des une est dans qui pas"))
-          .otherwise(col("text")))
-      def labeled(df: DataFrame): DataFrame =
-        df.withColumn("lang_pred", TextAnalysis.langId(col("text")))
-      DriftCheck.categoricalCompare(labeled(docs), labeled(cur),
-        "lang_pred", Seq("source"), maxShiftThreshold = 0.05)
-    }),
-
-    // Reference-FREE audio quality census (round 7): absolute signal
-    // statistics over decoded PCM — RMS dBFS, hard-clip fraction, silence
-    // fraction, DC ratio — banded into curation verdicts with NO golden
-    // signal (the realistic 100 TB posture: AudioInvariantCheck needs a
-    // reference PCM; most real ingest rows have none). The injected
-    // corruption classes surface as distinct reference-free signatures,
-    // each measured over the full feasible (freq, sr) space
-    // (QualityBandSweep): zeroed pcm_s16le → half silence; zeroed flac →
-    // decode failure; zeroed pcm_mulaw → a −32124 rail (clipping); zeroed
-    // pcm_alaw → a loud DC constant; zeroed adpcm_ima → half silence
-    // (zeroed block headers reset the predictor to 0). Plants add true
-    // hard-clipping (amplitude 1.5, clamped — ≥49.5% of samples at the
-    // rail) and a quiet clip (amplitude 0.02 → −37 dBFS). The oracle
-    // predicts every band by id arithmetic; the Spark side EARNS it by
-    // decoding all five formats and measuring.
-    "q56_quality_census" -> ((s, dir) => {
-      val n = clipCount(dir)
-      val clips = OracleTables.clips(s, n)
-      val id = expr("CAST(substring(clip_id, 6, 12) AS BIGINT)")
-      val quietU = udf((i: Long) => graft.io.ClipsGenerator.quietBytes(i, 25))
-      val clipU = udf((i: Long) => graft.io.ClipsGenerator.clippedBytes(i, 25))
-      val planted = clips
-        .withColumn("bytes",
-          when(id % 5000 === 21, quietU(id))
-            .when(id % 5000 === 27, clipU(id))
-            .otherwise(col("bytes")))
-        .withColumn("codec",
-          when(id % 5000 === 21 || id % 5000 === 27, lit("pcm_s16le"))
-            .otherwise(col("codec")))
-      graft.validate.QualityCensus.census(planted)
-    }),
-
-    // Cross-corpus LINE dedup (round 7) — the C4 rule (discard every
-    // repeated span corpus-wide, first occurrence wins): per-doc removal
-    // report for docs losing at least one line. Plants append two
-    // boilerplate footer lines (%3==0 and %5==2; %15∈{0,12,...}∩... —
-    // doc_id%15==12 gets BOTH), and sf0.1's planted exact-duplicate docs
-    // contribute their shared line 0. The first-occurrence rule is a
-    // min(struct(doc,pos)) AGGREGATE (map-side combinable — a hot
-    // boilerplate line collapses per-partition instead of sorting inside
-    // one window task); DuckDB replays it with a row_number window, which
-    // is equivalent because (doc_id, pos) is unique.
-    "q57_line_dedup" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      val planted = docs.withColumn("text", concat(col("text"),
-        when(col("doc_id") % 3 === 0, lit("\nfollow us on example social"))
-          .otherwise(lit("")),
-        when(col("doc_id") % 5 === 2, lit("\nall rights reserved example"))
-          .otherwise(lit(""))))
-      graft.dedup.Dedup.lineDedupReport(
-        planted.select("doc_id", "text"), "doc_id", "text")
-    }),
-
-    // Incremental NEAR-dup (round 7) — q51's append-batch ingest shape
-    // lifted to the MinHash+LSH family: a frozen corpus is represented
-    // only by its banded-signature store (bucketed by bandhash) and
-    // shingle-set store (bucketed by id); the batch band-joins for
-    // candidates and exact-Jaccard-verifies against the shingle store —
-    // corpus TEXT is never re-read (PlanShapeSpec pins one documents
-    // scan). Batch plants all three statuses: verbatim copies of docs
-    // 100-119 (+5e8, J=1 with their source), one-token-appended
-    // near-copies of docs 120-139 (+5.1e8, J = m/(m+1) ≥ 0.8 for any doc
-    // with ≥ 4 distinct trigrams), and six fresh docs — a verbatim pair,
-    // a near-copy pair, two singletons (new → near_dup_in_batch → new).
-    // The oracle replays exact Jaccard over (corpus ∪ batch); LSH capture
-    // at these similarities is the q14 margin argument (per-pair miss
-    // probability ≤ ~1e-7, deterministic once green).
-    "q58_incremental_neardup" -> ((s, dir) => {
-      import graft.dedup.Dedup
-      import s.implicits._
-      val docs = tbl(s, dir, "documents")
-      val mhTbl = cachedCorpusStore(s, dir, "mhstore") { (tblName, path) =>
-        graft.io.IcebergEmulation.writeBucketed(
-          Dedup.minhashStore(docs, "doc_id", "text"),
-          TableSpec("mh_store", Seq(
-            ColumnSpec("doc_id", LongType),
-            ColumnSpec("band", IntegerType),
-            ColumnSpec("bandhash", LongType)), keyCols = Seq("bandhash")),
-          tblName, buckets = 16, path = Some(path))
-      }
-      val shTbl = cachedCorpusStore(s, dir, "shstore") { (tblName, path) =>
-        graft.io.IcebergEmulation.writeBucketed(
-          Dedup.shingleStore(docs, "doc_id", "text"),
-          TableSpec("sh_store", Seq(
-            ColumnSpec("doc_id", LongType),
-            ColumnSpec("shingles", ArrayType(StringType))),
-            keyCols = Seq("doc_id")),
-          tblName, buckets = 16, path = Some(path))
-      }
-      val freshA = "quantal vortex pelican drift mauve cordial zephyr lattice bronze orchid velvet marble sundial cricket harbor glade"
-      val freshB = "tundra ember quartz falcon meridian cobalt saffron juniper mosaic tidal prism heron lilac granite meadow cinder plume ravine sonnet birch"
-      val batch = docs
-        .where(col("doc_id") >= 100 && col("doc_id") < 120)
-        .select((col("doc_id") + 500000000L).as("doc_id"), col("text"))
-        .unionByName(docs
-          .where(col("doc_id") >= 120 && col("doc_id") < 140)
-          .select((col("doc_id") + 510000000L).as("doc_id"),
-            concat(col("text"), lit(" graftnoveltoken")).as("text")))
-        .unionByName(Seq(
-          (600000000L, freshA), (600000001L, freshA),
-          (600000002L, freshB), (600000003L, freshB + " extratok"),
-          (600000004L, "solitary gossamer twilight anvil nectar sphinx"),
-          (600000005L, "cascade obsidian whisper fathom lyric dune"))
-          .toDF("doc_id", "text"))
-      Dedup.incrementalMinhash(batch, "doc_id", "text",
-        s.table(mhTbl), s.table(shTbl))
-    }),
-
-    // Silence-endpoint trim census (round 7) — the VAD-lite repair scan:
-    // how much leading/trailing digital silence each clip carries, banded
-    // into the trim decision (keep / trim_lead / trim_trail / trim_both /
-    // all_silence / undecodable). Verdicts are margin-backed bands, not
-    // bistable ms estimates (AudioTrimSweep, 880 feasible shapes/class):
-    // organic endpoint runs are ≤ 1 sample (40× under the 5 ms line);
-    // zeroed-back-half pcm decodes a contiguous 2.5× trailing run, zeroed
-    // ADPCM 1.75-2.34× (reset predictors hold the zeroed half at 0),
-    // zeroed G.711 decodes LOUD (rail / DC constant → keep), zeroed flac
-    // fails decode. Plants: id%5000==37 pads the tone with 15 ms lead +
-    // 20 ms trail silence (trim_both, 3.0×/4.0×); id%5000==41 is a dead
-    // channel (all_silence). The oracle predicts every (codec, verdict)
-    // count by id arithmetic; Spark EARNS it by decoding five formats and
-    // measuring the runs against the DECODED sample rate (a lying sr_hz
-    // column cannot move the 5 ms threshold — pinned by AudioTrimSpec).
-    "q59_trim_census" -> ((s, dir) => {
-      val n = clipCount(dir)
-      val clips = OracleTables.clips(s, n)
-      val id = expr("CAST(substring(clip_id, 6, 12) AS BIGINT)")
-      val padU = udf((i: Long) => graft.io.ClipsGenerator.paddedBytes(i, 25, 15, 20))
-      val silU = udf((i: Long) => graft.io.ClipsGenerator.silentBytes(i, 25))
-      val planted = clips
-        .withColumn("bytes",
-          when(id % 5000 === 37, padU(id))
-            .when(id % 5000 === 41, silU(id))
-            .otherwise(col("bytes")))
-        .withColumn("codec",
-          when(id % 5000 === 37 || id % 5000 === 41, lit("pcm_s16le"))
-            .otherwise(col("codec")))
-      graft.audio.AudioTrim.census(planted)
-    }),
-
-    // Leakage-safe train/val/test splits (round 7) — the composition
-    // closing q48 × q50: row-level splitting leaks eval data through
-    // near-copies (a doc in train, its 0.9-Jaccard twin in test), so the
-    // split key must be the near-dup CLUSTER, not the row. Pipeline:
-    // minhash pairs (default skew cap) → connected components → each doc
-    // keyed by its component label (own id for singletons) → the q48 md5
-    // band arithmetic on the GROUP key. Cohesion is structural — one key,
-    // one label — and singletons keep the exact label plain assignSplits
-    // gives them (adding the guard never reshuffles unclustered history;
-    // pinned by SamplingSpec). The oracle replays the q50 recursive-CTE
-    // closure + the q48 hex arithmetic on the coalesced key.
-    "q60_leakage_safe_splits" -> ((s, dir) => {
-      import graft.dedup.Dedup
-      import graft.sample.Sampling
-      val docs = tbl(s, dir, "documents").select("doc_id", "text")
-      val pairs = Dedup.minhashNearDups(docs, "doc_id", "text",
-        threshold = 0.8, shingleLen = 3).select("id_a", "id_b")
-      val comps = Dedup.connectedComponents(pairs, "id_a", "id_b")
-        .select(col("node").as("doc_id"), col("component"))
-      Sampling.assignGroupedSplits(docs.select("doc_id"), "doc_id",
-        comps, "component",
-        Seq("train" -> 0.75, "val" -> 0.125, "test" -> 0.125))
-    }),
-
-    // Streaming quality census (round 7) — q56's reference-free band
-    // census at INGEST time: per event-time window × codec, counts per
-    // quality band, decoded and banded by the EXACT batch operators
-    // (shared statsUdf/bandCol definitions — the two paths cannot drift).
-    // No plants needed: the stream carries the generator's injections,
-    // whose reference-free signatures are the measured q56 classes
-    // (zeroed pcm → half_silent, flac → undecodable, µ-law → clipped,
-    // A-law → dc_bias, ADPCM → half_silent; everything else nominal).
-    // Single AvailableNow batch + Complete mode = deterministic emission
-    // = the batch SQL the oracle runs (the q35-q37/q43 discipline).
-    "q61_streaming_quality" -> ((s, dir) => {
-      val n = clipCount(dir)
-      AvailableNow.drain(s, "q61", "complete",
-          statePartitions = BoundedMonitorStateParts) { c =>
-        val stream = clipsStream(c, n)
-          .withColumn("ts", lit("2024-01-01 00:00:00").cast("timestamp"))
-        graft.streaming.StreamingCensus.quality(
-          stream, "ts", windowDuration = "1 hour",
-          watermarkDelay = "10 minutes")
-      }.rows.select(
-          date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hr"),
-          col("codec"), col("band"), col("clips"))
-    }),
-
-    // Sequence packing (round 7) — the concat-and-chunk layout step
-    // between a curated corpus and a token-budgeted training run: every
-    // doc's exact GLOBAL prefix-sum offset, computed by the two-pass
-    // distributed scan (range-partition the narrow (id, size) projection,
-    // O(partitions) driver prefix of per-partition totals, within-
-    // partition window) instead of the single-task unpartitioned window a
-    // naive sum().over(orderBy) plans. Offsets are partitioning-invariant
-    // (SequencePackingSpec pins 1/7/32-partition equality), so the same
-    // corpus packs identically at any cluster size. The oracle IS the
-    // naive global window — fine in DuckDB at sf0.01, the scale killer
-    // the operator exists to avoid on Spark.
-    "q62_sequence_packing" -> ((s, dir) => {
-      import graft.sample.SequencePacking
-      val docs = tbl(s, dir, "documents")
-      val rep = SequencePacking.packReport(docs, "doc_id", "n_chars",
-        chunkTokens = 4096L)
-      rep.withColumn("crosses_chunk", col("crosses_chunk").cast("long"))
-    }),
-
-    // Deterministic mixture resampling (round 7) — per-source target
-    // rates where r<1 downsamples and r>1 UPSAMPLES (epoch repetition):
-    // copy k of a row survives iff md5-uniform(id:mix:k) < r − k, so the
-    // expected multiplicity is exactly r and membership is a pure
-    // function of (id, k) — same result at any parallelism, bit-replayed
-    // by the oracle. Dyadic rates keep the survival compare exact in
-    // double on both engines. One scan: bounded explode + codegen'd
-    // filter; only (source, count) pairs enter an exchange.
-    "q63_mixture_resample" -> ((s, dir) => {
-      import graft.sample.Mixing
-      val docs = tbl(s, dir, "documents")
-      Mixing.resampleSummary(docs, "doc_id", "source",
-        Map("src0" -> 2.5, "src1" -> 1.25, "src2" -> 0.5, "src3" -> 0.0),
-        defaultRate = 1.0)
-    }),
-
-    // Exact heavy hitters via mergeable Misra–Gries (round 7) — the
-    // vocabulary-census shape where a naive groupBy(token).count()
-    // shuffles EVERY distinct token (web corpora: billions of
-    // singletons). One sketch pass (O(k) state per task, merged
-    // associatively, deducted-mass bound carried through the merge tree)
-    // yields a candidate superset with NO false negatives; one exact pass
-    // counts only candidates, so the singleton tail never enters a
-    // shuffle. Output is EXACT — the oracle is the naive count.
-    "q64_heavy_hitters" -> ((s, dir) => {
-      import graft.sketch.HeavyHitters
-      val docs = tbl(s, dir, "documents")
-      val toks = docs.select(explode(split(col("text"), " ")).as("token"))
-      HeavyHitters.overThreshold(toks, "token", threshold = 500L, k = 128)
-    }),
-
-    // Container-metadata consistency census (round 7) — does the PAYLOAD
-    // agree with the catalog? The generator's i%5000==13 injection makes
-    // the sr_hz COLUMN lie (96000) while the bytes keep their true rate:
-    // the range check (q02) flags the row, but only a decode proves which
-    // side is lying. Spark earns each (codec, band) count by decoding the
-    // container header of every row (five formats); zeroed-flac corrupt
-    // rows (m=17) surface as undecodable, every other injection leaves
-    // the container consistent. bytes never enter an exchange — only
-    // (codec, band, count) triples do.
-    "q65_container_census" -> ((s, dir) => {
-      val n = clipCount(dir)
-      val clips = OracleTables.clips(s, n)
-      graft.validate.ContainerCheck.census(clips)
-    }),
-
-    // Resample-then-verify census (round 7) — the rate-unification REPAIR
-    // step with its own verification: every clip is converted to the
-    // 16 kHz model rate (deterministic exact-rational linear resampler)
-    // and the claimed-tone projection re-runs on the CONVERTED signal, so
-    // the census answers "which rows survive rate unification with their
-    // content intact". Bands are measured over the full structural space
-    // (ResampleSweep: clean ≥ 0.9928, corrupt ≤ 0.6928 or decode-fail,
-    // threshold 0.85 at the midpoint); the oracle predicts every
-    // (codec, band) count by id arithmetic, Spark EARNS it by decoding
-    // five formats, resampling, and projecting. Conversion reads the rate
-    // from the container, so the m=13 lying sr_hz column cannot skew it.
-    "q66_resample_census" -> ((s, dir) => {
-      val n = clipCount(dir)
-      val clips = OracleTables.clips(s, n)
-      graft.validate.ResampleCheck.census(clips)
-    }),
-
-    // Embedding-column validation census (round 7) — the vector hygiene
-    // scan before any ANN/near-dup stage trusts Array[Float] payloads: a
-    // single NaN poisons every dot product, wrong dims crash the kernel,
-    // zero vectors make cosine undefined, un-normalized vectors silently
-    // re-weight similarity — and a NULL ELEMENT slides past every
-    // three-valued-logic test to 'ok' unless banded explicitly. Plants by
-    // vec_id residue (disjoint, so the oracle predicts every band by
-    // pure id arithmetic): %97=23 NULL, %97=17 sliced to 32 dims,
-    // %97=5 NaN at position 3, %97=31 NULL element at position 5,
-    // %97=11 all-zero, %97=29 scaled 2× (norm 2 vs the 1e-3 unit
-    // tolerance — organic vectors sit within 2e-7 of unit norm, measured
-    // at all three sf). All native codegen'd HOFs (size/exists/
-    // aggregate) — no UDF; only (band, count) pairs enter an exchange.
-    "q67_embedding_validate" -> ((s, dir) => {
-      import graft.validate.EmbeddingCheck
-      val emb = tbl(s, dir, "embeddings")
-      val m = col("vec_id") % 97
-      val planted = emb.withColumn("embedding",
-        when(m === 23, lit(null))
-          .when(m === 17, slice(col("embedding"), 1, 32))
-          .when(m === 5, transform(col("embedding"),
-            (x, i) => when(i === 3, lit(Float.NaN)).otherwise(x)))
-          .when(m === 31, transform(col("embedding"),
-            (x, i) => when(i === 5, lit(null).cast("float")).otherwise(x)))
-          .when(m === 11, transform(col("embedding"), _ => lit(0.0f)))
-          .when(m === 29, transform(col("embedding"), x => x * 2.0f))
-          .otherwise(col("embedding")))
-      EmbeddingCheck.census(planted, "embedding", dim = 64)
-    }),
-
-    // Bloom-prefiltered decontamination (round 7) — q47's hygiene check on
-    // the scale path for suites too big to broadcast-join: one suite pass
-    // builds a Bloom filter of its n-grams (broadcastable two orders past
-    // the hash-relation limit), the corpus n-gram stream dies map-side at
-    // the scan, and the exact confirm equi-join sees only true hits plus
-    // the fpp trickle — so the output is IDENTICAL to the exact variant
-    // at any fpp (DedupSpec pins agreement at fpp=0.5) and the oracle is
-    // q47's SQL verbatim. Same plants, same suite.
-    "q68_decontamination_bloom" -> ((s, dir) => {
-      import graft.dedup.Dedup
-      val docs = tbl(s, dir, "documents").select("doc_id", "text")
-      val bench = docs.where(col("doc_id") < 500 && col("doc_id") % 50 === 7)
-        .select(col("doc_id").as("bench_id"), col("text"))
-      Dedup.decontaminateBloom(docs, "doc_id", "text",
-        bench, "bench_id", "text", n = 5)
-    }),
-
-    // Mixture → packing composition (round 7) — the two layout operators
-    // chained the way a training run uses them: resample the corpus to
-    // the target source mixture (q63's rates, every surviving (doc, copy)
-    // an independent unit), then pack the RESAMPLED stream into exact
-    // global token offsets (q62's two-pass scan). The packing key
-    // doc_id·4 + copy (maxCopies = 3 < 4) keeps numeric order = (doc,
-    // copy) order, so offsets are a pure function of the mixture — the
-    // oracle replays membership bit-for-bit (dyadic rates) and runs the
-    // naive global window over the survivors. Upsampled copies pack as
-    // distinct units; dropped sources never reach the offset scan.
-    "q69_mixture_packing" -> ((s, dir) => {
-      import graft.sample.{Mixing, SequencePacking}
-      val docs = tbl(s, dir, "documents")
-      val mixed = Mixing.resample(docs, "doc_id", "source",
-        Map("src0" -> 2.5, "src1" -> 1.25, "src2" -> 0.5, "src3" -> 0.0),
-        defaultRate = 1.0)
-        .select((col("doc_id") * 4 + col("copy")).as("pack_id"),
-          col("n_chars"))
-      val rep = SequencePacking.packReport(mixed, "pack_id", "n_chars",
-        chunkTokens = 2048L)
-      rep.select(
-        col("pack_id"),
-        expr("pack_id div 4").as("doc_id"),
-        (col("pack_id") % 4).as("copy"),
-        col("n_chars"), col("token_offset"), col("chunk_first"),
-        col("chunk_last"), col("crosses_chunk").cast("long")
-          .as("crosses_chunk"))
-    }),
-
-    // Streaming ingest classification vs a frozen corpus store (round 7)
-    // — q51's incremental-dedup shape at STREAM time: every arriving doc
-    // fingerprinted and classified against the corpus (fingerprint,
-    // keeper) store via a stream-static left join (stateless — no state
-    // store involvement; with the store bucketed the static side reads in
-    // place and only the arriving batch moves). The store freezes the
-    // doc_id<250 half, the stream replays the whole table: fingerprints
-    // landing in the frozen half (incl. organic cross-half duplicate
-    // texts — the join is by CONTENT, not id) count dup_of_corpus, the
-    // rest new. Shared fingerprint definition with the batch path; q61's
-    // constant-hour + Complete + AvailableNow determinism discipline.
-    "q70_streaming_ingest" -> ((s, dir) => {
-      import graft.dedup.Dedup
-      import graft.streaming.StreamingIngest
-      AvailableNow.drain(s, "q70", "complete",
-          statePartitions = BoundedMonitorStateParts) { c =>
-        val docs = tbl(c, dir, "documents")
-        val store = Dedup.fingerprintStore(
-          docs.where(col("doc_id") < 250), "doc_id", "text")
-        // documents.parquet is a single FILE; the file-stream source needs
-        // a directory, so stream the sf dir gated to just that file
-        val path = s"$dir/documents.parquet"
-        val stream = c.readStream.schema(c.read.parquet(path).schema)
-          .option("maxFilesPerTrigger", "1000000")
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
-          .withColumn("ts", lit("2024-01-01 00:00:00").cast("timestamp"))
-        StreamingIngest.classifyCounts(stream, "text", store,
-          "ts", windowDuration = "1 hour", watermarkDelay = "10 minutes")
-      }.rows.select(
-          date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hr"),
-          col("status"), col("docs"))
-    }),
-
-    // Containment decontamination (round 7) — the asymmetric complement
-    // of q47: a long page EMBEDDING a short eval prompt has near-zero
-    // Jaccard but containment ≈ 1 on the benchmark side
-    // (|doc∩bench|/|bench|), and q47's raw overlap counts don't
-    // normalize by benchmark length. Plants: each suite doc re-embedded
-    // inside framing filler (+800000000 — full containment 1.0 despite
-    // the dilution) and a half-prefix doc (+810000000 — partial
-    // containment below the 0.8 threshold, must NOT surface). The ratio
-    // is integer/integer in double on both engines, so the threshold
-    // replays bit-for-bit; output rounds to 6dp (the q58 discipline).
-    "q71_containment_decon" -> ((s, dir) => {
-      import graft.dedup.Dedup
-      val docs = tbl(s, dir, "documents").select("doc_id", "text")
-      val bench = docs.where(col("doc_id") < 500 && col("doc_id") % 50 === 7)
-        .select(col("doc_id").as("bench_id"), col("text"))
-      val embedded = bench.select(
-        (col("bench_id") + 800000000L).as("doc_id"),
-        concat(lit("framing intro words before the leak "), col("text"),
-          lit(" and framing outro words after it")).as("text"))
-      val partial = bench.select(
-        (col("bench_id") + 810000000L).as("doc_id"),
-        array_join(slice(split(col("text"), " "), 1, 12), " ").as("text"))
-      val corpus = docs.unionByName(embedded).unionByName(partial)
-      Dedup.decontaminateContainment(corpus, "doc_id", "text",
-        bench, "bench_id", "text", n = 5, minContainment = 0.8)
-        .withColumn("containment", round(col("containment"), 6))
-    }),
-
-    // Loudness-normalization planning census (round 7) — can each clip be
-    // gained to the −20 dBFS model target? Blind gain ships re-amplified
-    // silence, re-scaled flat-tops, and newly-clipped peaks; this census
-    // routes each to its band BEFORE the gain pass. Margins measured over
-    // the full structural space (GainSweep: every under-class ≤ 0.258 of
-    // the rail boundary, the impulse plant at 2.00× over — no class
-    // within 2× on either side). Plants by id residue (pcm container):
-    // %5000=53 single-spike impulse (√400 crest at pinned 16 kHz →
-    // would_clip), %5000=59 dead channel (silent), %5000=61 quiet tone
-    // (gains +17 dB cleanly). Corrupt rows: µ-law rail → already_clipped,
-    // flac → undecodable, the rest attenuate fine. The oracle predicts
-    // every (codec, band) count by id arithmetic; Spark earns it by
-    // decoding five formats and running the gain arithmetic per row.
-    "q72_gain_census" -> ((s, dir) => {
-      val n = clipCount(dir)
-      val clips = OracleTables.clips(s, n)
-      val id = expr("CAST(substring(clip_id, 6, 12) AS BIGINT)")
-      val impU = udf((i: Long) => graft.io.ClipsGenerator.impulseBytes(i, 25))
-      val silU = udf((i: Long) => graft.io.ClipsGenerator.silentBytes(i, 25))
-      val quiU = udf((i: Long) => graft.io.ClipsGenerator.quietBytes(i, 25))
-      val planted = clips
-        .withColumn("bytes",
-          when(id % 5000 === 53, impU(id))
-            .when(id % 5000 === 59, silU(id))
-            .when(id % 5000 === 61, quiU(id))
-            .otherwise(col("bytes")))
-        .withColumn("codec",
-          when(id % 5000 === 53 || id % 5000 === 59 || id % 5000 === 61,
-            lit("pcm_s16le")).otherwise(col("codec")))
-      graft.validate.GainCheck.census(planted)
-    }),
-
-    // Per-group heavy hitters (round 7) — the boilerplate-per-source
-    // census: which tokens dominate EACH source (the per-domain
-    // boilerplate a curation pass strips), where a per-group naive
-    // groupBy(source, token) shuffles every distinct (source, token)
-    // pair. One Misra–Gries sketch per group (O(groups·k) to the driver
-    // — groupCol is low-cardinality by contract), then an exact pass
-    // semi-joined against the broadcast candidate pairs, so the
-    // per-group singleton tail never enters a shuffle. Output EXACT at
-    // any k — the oracle is the naive per-group count.
-    "q73_heavy_hitters_by_source" -> ((s, dir) => {
-      import graft.sketch.HeavyHitters
-      val docs = tbl(s, dir, "documents")
-      val toks = docs.select(col("source"),
-        explode(split(col("text"), " ")).as("token"))
-      HeavyHitters.overThresholdByGroup(toks, "source", "token",
-        threshold = 30L, k = 128)
-    }),
-
-    // Span-level exact-substring dedup (round 8) — the Lee et al. 2022
-    // ExactSubstr rule: repeated ≥6-token spans corpus-wide keep only
-    // their first occurrence. Plants: a shared 8-token boilerplate
-    // sentence appended to %7==1 docs (cross-doc repeats — every planted
-    // doc but the min(doc,pos) owner reports one flagged span) and a
-    // self-repeat of each %11==3 doc's own first 8 tokens (the
-    // within-doc control — flags the SECOND occurrence only, in the same
-    // doc). The oracle replays the identical shingle recipe,
-    // first-occurrence window, and gaps-and-islands interval merge.
-    "q74_span_dedup" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      val toks = split(col("text"), " ")
-      val planted = docs.withColumn("text", concat(col("text"),
-        when(col("doc_id") % 7 === 1,
-          lit(" graft span plant alpha beta gamma delta omega"))
-          .otherwise(lit("")),
-        when(col("doc_id") % 11 === 3 && size(toks) >= 8,
-          concat(lit(" "), array_join(slice(toks, 1, 8), " ")))
-          .otherwise(lit(""))))
-      graft.dedup.Dedup.spanDedupReport(
-        planted.select("doc_id", "text"), "doc_id", "text", k = 6)
-    }),
-
-    // Semantic decontamination (round 8) — the paraphrase evasion class:
-    // q47/q68/q71 match n-grams, so a reworded eval prompt slips all
-    // three; here the corpus embedding stream is probed against a
-    // broadcast benchmark-embedding table via hyperplane LSH + exact
-    // cosine (embeddingNearDups' kernels, asymmetric small side — the
-    // corpus never shuffles). Benchmark = +0.03-perturbed copies of the
-    // vec_id%97==13 corpus vectors (the q33 plant family: planted cosines
-    // ≈ 0.97, organic max ≈ 0.51, threshold 0.9 sits in the gap); the
-    // oracle is the exact all-pairs cosine scan.
-    "q75_semantic_decontam" -> ((s, dir) => {
-      val emb = tbl(s, dir, "embeddings").select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("embedding"))
-      val bench = emb.where(col("vec_id") % 97 === 13)
-        .select((col("vec_id") + 300000000L).as("bench_id"),
-          transform(col("embedding"), x => x + lit(0.03d)).as("embedding"))
-      graft.dedup.Dedup.decontaminateSemantic(emb, "vec_id", "embedding",
-        bench, "bench_id", "embedding", dim = 64, cosThreshold = 0.9,
-        planes = 8, tables = 16)
-    }),
-
-    // Corpus version-diff (round 8) — the release-notes step of the
-    // frozen-store lifecycle (q51/q58 freeze a snapshot; this diffs TWO
-    // snapshots): docs added / removed / content-changed between v1 and
-    // v2, computed from the per-doc fingerprint manifests alone — neither
-    // version's text feeds the diff join (DedupSpec pins the
-    // manifests-only plan). v2 plants: %13==5 docs dropped (removed),
-    // %17==3 survivors edited (changed), ten fresh docs appended (added);
-    // a %13∧%17 collision doc is removed, not changed — precedence the
-    // oracle replays by content.
-    "q76_version_diff" -> ((s, dir) => {
-      import graft.dedup.Dedup
-      val docs = tbl(s, dir, "documents").select("doc_id", "text")
-      val v2 = docs.where(col("doc_id") % 13 =!= 5)
-        .withColumn("text", when(col("doc_id") % 17 === 3,
-          concat(col("text"), lit(" graft v2 edit"))).otherwise(col("text")))
-        .unionByName(docs.where(col("doc_id") < 10).select(
-          (col("doc_id") + 700000000L).as("doc_id"),
-          concat(lit("brand new doc number "),
-            col("doc_id").cast(StringType)).as("text")))
-      Dedup.versionDiff(
-        Dedup.versionManifest(docs, "doc_id", "text"),
-        Dedup.versionManifest(v2, "doc_id", "text"), "doc_id")
-    }),
-
-    // N-gram LM perplexity scoring (round 8) — the CCNet/Gopher quality
-    // signal: a bigram+Laplace model trained on the deterministic q48
-    // train split (md5 band arithmetic), every doc scored by its Shannon
-    // code length in WHOLE BITS — floor(log2(den/num)) per bigram done in
-    // pure integer arithmetic (integer divide + binary-string length), so
-    // no engine `ln` ever runs and the per-doc (ngrams, bits) pair
-    // replays bit-for-bit in DuckDB. Plants: %23==4 docs become
-    // doc_id-salted gibberish (every bigram context unseen → exactly
-    // floor(log2 V) bits/ngram — 7 at sf0.01's V=232, 10 at sf0.1's
-    // V=1912), %29==6 docs become a fixed thrice-repeated cookie banner
-    // that saturates the train slice (≈2.3-2.5 bits/ngram). Measured
-    // normal band: [4.6, 5.8] bits/ngram at both scales, so lo=3 / hi=7
-    // sit in the gaps (NgramProbe, 2026-08-18).
-    "q79_ngram_perplexity" -> ((s, dir) => {
-      import graft.text.NgramLm
-      val docs = tbl(s, dir, "documents").select("doc_id", "text")
-      val sent = "click here to accept cookies and continue to the site"
-      val gib = array_join(transform(sequence(lit(0), lit(11)),
-        k => concat(lit("zzq"), ((col("doc_id") * 7 + k) % 9999))), " ")
-      val planted = docs.withColumn("text",
-        when(col("doc_id") % 23 === 4, gib)
-          .when(col("doc_id") % 29 === 6, lit(s"$sent $sent $sent"))
-          .otherwise(col("text")))
-      val train = graft.sample.Sampling.assignSplits(planted, "doc_id",
-        Seq("train" -> 0.75, "val" -> 0.125, "test" -> 0.125))
-        .where(col("split") === "train").select("doc_id", "text")
-      val model = NgramLm.train(train, "text", minCount = 2L)
-      NgramLm.score(planted, "doc_id", "text", model, loBits = 3L,
-        hiBits = 7L)
-    }),
-
-    // Multi-batch out-of-order streaming replay (round 8) — the watermark
-    // gate the single-batch AvailableNow monitors can't exercise: events
-    // replay as SIX micro-batches (one file per batch, mtime-pinned
-    // order), with two planted late classes — %13==11 rows arrive 25 min
-    // stale (dropped by the watermark once batches 2-3 have advanced it;
-    // kept-but-old in batches 0-1 where no watermark exists yet) and
-    // %17==3 rows 8 min stale (inside the horizon — always accepted,
-    // proving out-of-order merge into live windows). Two trailing flush
-    // batches finalize every real window under append mode. The oracle
-    // replays the MEASURED Spark semantics (LateReplaySpec pins them):
-    // lagged late-filter watermark = max event over batches ≤ b−2 minus
-    // the 5-minute delay, drop iff window end ≤ that; it predicts every
-    // finalized (window, key) count AND the dropped late-GROUP total
-    // (Spark's aggregation drop metric counts post-shuffle partial
-    // aggregates — distinct late (window, key) groups per batch).
-    "q81_streaming_late_replay" -> ((s, dir) => {
-      import graft.streaming.LateReplay
-      val i = col("event_id")
-      val minute = (i % 4) * 10 + (i % 7) +
-        when(i % 13 === 11, -25).when(i % 17 === 3, -8).otherwise(0)
-      val data = tbl(s, dir, "events").where(i.isNotNull).select(
-        (i % 4).as("batch"),
-        concat(lit("u"), (i % 5)).as("k"),
-        timestamp_seconds(minute.cast("long") * 60 + 30 + 1767268800L)
-          .as("ts"))
-      val flush = s.range(2).select((col("id") + 4).as("batch"),
-        lit("flush").as("k"),
-        timestamp_seconds((lit(120) + col("id") * 5) * 60 + 30 + 1767268800L)
-          .as("ts"))
-      // windowCounts returns local rows, so the replay input (a full copy
-      // of the events table) is deleted as soon as it returns
-      AvailableNow.withScratchDir("latereplay") { replayDir =>
-        LateReplay.writeBatches(data.unionByName(flush), "batch", "k", "ts",
-          replayDir)
-        LateReplay.windowCounts(s, replayDir, "1 minute", "5 minutes",
-          statePartitions = BoundedMonitorStateParts)
-          .where(col("kind") =!= "window" || col("k") =!= "flush")
-      }
-    }),
-
-    // BPE subword packing (round 8) — the token-budget operators re-driven
-    // on REAL subword counts: q62/q63/q69 budget whitespace tokens, but a
-    // training run budgets SUBWORDS, and the two diverge exactly on
-    // unseen/compound words (the %31==9 plant appends three compound
-    // words built from corpus vocabulary — each splits into multiple
-    // subwords, so whitespace counts +3 while subword counts grow more).
-    // The BPE model trains LIVE on the deterministic doc_id%4<3 slice
-    // (classic merge loop, deterministic tie-break, driver-side over the
-    // bounded distinct-word table); the oracle tokenizes with the
-    // COMMITTED vocabulary for this scale (BpeTrainHarness output, pinned
-    // live-equal by BpeTokenizerSpec) via a recursive longest-prefix
-    // strip over DISTINCT words, then replays q62's packing window.
-    "q80_subword_packing" -> ((s, dir) => {
-      import graft.text.BpeTokenizer
-      val docs = tbl(s, dir, "documents").select("doc_id", "text")
-      val planted = docs.withColumn("text",
-        when(col("doc_id") % 31 === 9,
-          concat(col("text"), lit(" tablescan mergejoin fastsort")))
-          .otherwise(col("text")))
-      val train = docs.where(col("doc_id") % 4 < 3)
-      val freqs = BpeTokenizer.wordFreqs(train, "text")
-      val voc = BpeTokenizer.vocab(freqs,
-        BpeTokenizer.trainMerges(freqs, numMerges = 60))
-      val counts = BpeTokenizer.subwordCounts(planted, "doc_id", "text", voc)
-      graft.sample.SequencePacking
-        .packReport(counts, "doc_id", "subword_tokens", chunkTokens = 2048L)
-        .withColumn("crosses_chunk", col("crosses_chunk").cast("long"))
-    }),
-
-    // Subword heavy hitters (round 8) — q64's boilerplate census at the
-    // granularity the tokenizer actually trains on: which SUBWORD tokens
-    // dominate the corpus (a vocabulary-coverage/boilerplate signal a
-    // word-level census cannot see — a subword shared by many words
-    // aggregates mass no single word carries). Composition: the exploded
-    // BPE token stream through the exact Misra–Gries two-pass; output
-    // EXACT at any k. The oracle re-tokenizes distinct words with the
-    // committed vocabulary, carrying each taken token through the
-    // recursive strip, and runs the naive count.
-    "q85_subword_heavy_hitters" -> ((s, dir) => {
-      import graft.sketch.HeavyHitters
-      import graft.text.BpeTokenizer
-      val docs = tbl(s, dir, "documents").select("doc_id", "text")
-      val train = docs.where(col("doc_id") % 4 < 3)
-      val freqs = BpeTokenizer.wordFreqs(train, "text")
-      val voc = BpeTokenizer.vocab(freqs,
-        BpeTokenizer.trainMerges(freqs, numMerges = 60))
-      val toks = BpeTokenizer.subwordTokens(docs, "doc_id", "text", voc)
-      HeavyHitters.overThreshold(toks, "token", threshold = 400L, k = 64)
-    }),
-
-    // Audio CONTENT dedup (round 8) — the audio twin of exact text dedup,
-    // which no byte- or id-level check can see: the same recording
-    // re-encoded through another codec/container/rate shares no bytes
-    // with its twin. Each clip maps to a codec-invariant fingerprint
-    // (dominant tone rounded to integer Hz + duration bin; estimator
-    // error exhaustively measured ≤ 0.21 Hz over the full structural
-    // space, a 2.4× margin under the 0.5 Hz rounding boundary), then
-    // duplicate clusters are a keys-only groupBy. The corpus's tones
-    // repeat every 880 ids across five codecs and four rates, so the
-    // clusters are inherently cross-codec — exactly the class a byte
-    // hash misses. Exclusions, both id-arithmetic and documented:
-    // corrupt rows (m=17 — content identity is undefined for a
-    // half-zeroed payload; q40/q65's concern) and the (adpcm_ima, 8 kHz)
-    // cell, where 200 samples of a ~12 dB codec sit at the CRLB for
-    // 1 Hz tone separation — physics, not estimator choice (sweep
-    // measured 0.56-0.70 Hz there across three estimator variants).
-    // Duplicate-id rows resolve their TRUE generating index via the
-    // dur_ms-mismatch rule (the q25/q26 discipline), so the oracle
-    // predicts every cluster by id arithmetic while Spark earns it from
-    // the bytes: five decoders + FFT per row.
-    "q83_audio_content_dedup" -> ((s, dir) => {
-      val clips = OracleTables.clips(s, clipCount(dir))
-      val id = expr("CAST(substring(clip_id, 6, 12) AS BIGINT)")
-      val trueI = when(
-        col("dur_ms") =!= (lit(200) + (id * 37) % 9800).cast("int"), id + 1)
-        .otherwise(id)
-      val srTrue = when(trueI % 10 < 6, lit(16000)).otherwise(
-        element_at(array(lit(8000), lit(22050), lit(44100), lit(48000)),
-          ((trueI / 10) % 4).cast("int") + 1))
-      val base = clips
-        .where(id % 5000 =!= 17)
-        .where(!(col("codec") === "adpcm_ima" && srTrue === 8000))
-      graft.audio.ContentFingerprint.dedupReport(base)
-    }),
-
-    // Resumable repair WRITE path (round 8) — q77's repair as a
-    // production write: an interrupted run (two codec partitions) leaves
-    // manifest entries, the resume re-processes ONLY the remaining three
-    // (content-fingerprint diff — the q41 machinery generalized to
-    // transform-writes), and a third run is a metadata no-op. The repaired
-    // table is written partitioned by INPUT codec with dynamic overwrite;
-    // output counts are read back from the written files so the decode
-    // UDF runs exactly once per row; and the final report re-censuses the
-    // WRITTEN bytes — every written row must band nominal. The oracle
-    // predicts per-partition totals/drops/writes from the q77 action
-    // arithmetic plus the act structure.
-    "q86_repair_resume" -> ((s, dir) => {
-      import graft.audio.AudioRepair
-      import graft.checkpoint.ManifestCheckpoint
-      import graft.validate.QualityCensus
-      val n = clipCount(dir)
-      val input = repairInput(s, dir)
-      val base = s"${OracleTables.ScratchRoot}/graft-repair/n$n"
-      try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
-      catch { case _: java.io.IOException => }
-      val manifestDir = s"$base/manifest"
-      val outDir = s"$base/out"
-      def repairXf(slice: DataFrame): DataFrame =
-        AudioRepair.repairFrame(slice)
-          .where(col("action") === "repaired")
-          .select(col("clip_id"), col("repaired_bytes").as("bytes"),
-            lit(AudioRepair.DefaultTargetSr).as("sr_hz"),
-            (col("repaired_samples").cast("long") * 1000L /
-              AudioRepair.DefaultTargetSr).cast("int").as("dur_ms"),
-            lit("pcm_s16le").as("codec"), col("transcript"), col("_part"))
-      val run1 = ManifestCheckpoint.runResumableTransform(s,
-        input.where(col("codec").isin("pcm_s16le", "flac")), "codec",
-        manifestDir, outDir)(repairXf)
-      require(run1.toSet == Set("pcm_s16le", "flac"),
-        s"interrupted run repaired $run1")
-      val run2 = ManifestCheckpoint.runResumableTransform(s, input, "codec",
-        manifestDir, outDir)(repairXf)
-      require(run2.toSet == Set("pcm_mulaw", "pcm_alaw", "adpcm_ima"),
-        s"resume must repair exactly the remaining partitions, got $run2")
-      val run3 = ManifestCheckpoint.runResumableTransform(s, input, "codec",
-        manifestDir, outDir)(repairXf)
-      require(run3.isEmpty, s"completed manifest must no-op: $run3")
-      val written = s.read.parquet(s"$outDir/data")
-      val nominal = written
-        .withColumn("_st", QualityCensus.statsUdf(col("bytes"), col("codec")))
-        .where(QualityCensus.bandCol(col("_st")) === "nominal")
-        .groupBy(col("partition_value"))
-        .agg(count(lit(1)).as("written_nominal"))
-      ManifestCheckpoint.latestEntries(s.read.parquet(manifestDir))
-        .select(col("partition_value"), col("total_rows"),
-          col("error_rows"), col("valid_rows"),
-          when(col("partition_value").isin(run1: _*), 1).otherwise(2)
-            .as("validated_in_run"),
-          lit(run3.isEmpty).as("resume_noop"))
-        .join(nominal, Seq("partition_value"), "left_outer")
-        .withColumn("written_nominal",
-          coalesce(col("written_nominal"), lit(0L)))
-    }),
-
-    // Streaming content dedup (round 8) — q83's acoustic fingerprint at
-    // INGEST time: the same recording arriving re-encoded (different
-    // codec, container, rate — zero shared bytes) is caught as a
-    // duplicate WHILE it streams in, by keying the stateful dup monitor
-    // on the content fingerprint instead of the id. Composition: the
-    // decode+FFT fingerprint UDF is a stateless per-row projection in
-    // front of q35's flatMapGroupsWithState fold; state stays one
-    // (count, last-seen) pair per fingerprint. Same exclusions as q83.
-    "q87_streaming_content_dedup" -> ((s, dir) => {
-      val n = clipCount(dir)
-      val id = expr("CAST(substring(clip_id, 6, 12) AS BIGINT)")
-      val trueI = when(
-        col("dur_ms") =!= (lit(200) + (id * 37) % 9800).cast("int"), id + 1)
-        .otherwise(id)
-      val srTrue = when(trueI % 10 < 6, lit(16000)).otherwise(
-        element_at(array(lit(8000), lit(22050), lit(44100), lit(48000)),
-          ((trueI / 10) % 4).cast("int") + 1))
-      val fpU = udf((b: Array[Byte], c: String) =>
-        graft.audio.ContentFingerprint.fingerprint(b, c))
-      AvailableNow.drain(s, "q87", "append") { c =>
-        val stream = clipsStream(c, n)
-          .where(id % 5000 =!= 17)
-          .where(!(col("codec") === "adpcm_ima" && srTrue === 8000))
-          .select(fpU(col("bytes"), col("codec")).as("fingerprint"),
-            lit("2024-01-01 00:00:00").cast("timestamp").as("ts"))
-        graft.streaming.StreamingDedup.duplicateCounts(
-          stream, "fingerprint", "ts").toDF()
-      }.rows.select(col("key").as("fingerprint"), col("dup_count"))
-    }),
-
-    // Subword-budget mixture (round 8) — the full planning→execution loop
-    // on REAL token counts: tokenize (q80's live-trained BPE), aggregate
-    // per-source subword totals, SOLVE the per-source rates for a token
-    // budget of half the corpus at dyadic target proportions
-    // (ratesForBudget — clamped at 16× repetition), then execute the
-    // deterministic resample and report per-source rows/tokens in and
-    // out. Dyadic proportions make every rate an exactly-reproducible
-    // double (budget·p is a dyadic scaling; one correctly-rounded divide
-    // by the token count), so the md5 survival compare replays
-    // bit-for-bit in the oracle.
-    "q82_subword_budget_mix" -> ((s, dir) => {
-      import graft.sample.Mixing
-      import graft.text.BpeTokenizer
-      val docs = tbl(s, dir, "documents").select("doc_id", "source", "text")
-      val train = docs.where(col("doc_id") % 4 < 3)
-      val freqs = BpeTokenizer.wordFreqs(train, "text")
-      val voc = BpeTokenizer.vocab(freqs,
-        BpeTokenizer.trainMerges(freqs, numMerges = 60))
-      // tokenize ONCE; budget aggregate, per-source report, and resample
-      // all read the materialized (id, tokens, source) frame
-      val counts = BpeTokenizer.subwordCounts(docs, "doc_id", "text", voc)
-        .join(docs.select("doc_id", "source"), Seq("doc_id"))
-        .localCheckpoint()
-      val budget = counts.agg(sum("subword_tokens")).head().getLong(0) / 2
-      val props = Map("src0" -> 0.5, "src1" -> 0.25, "src2" -> 0.125,
-        "src3" -> 0.125)
-      val perSrc = counts.groupBy("source").agg(
-        count(lit(1)).as("in_rows"), sum("subword_tokens").as("in_tokens"))
-      val tokens = perSrc.collect() // O(sources) driver
-        .flatMap(r => Option(r.getString(0)).map(_ -> r.getLong(2))).toMap
-        .filter(kv => props.contains(kv._1))
-      val (rates, _) = Mixing.ratesForBudget(tokens, props, budget)
-      val out = Mixing.resample(counts, "doc_id", "source", rates,
-        defaultRate = 0.0)
-        .groupBy("source").agg(count(lit(1)).as("out_rows"),
-          sum("subword_tokens").as("out_tokens"))
-      perSrc.join(out, Seq("source"), "left_outer")
-        .select(col("source"), col("in_rows"), col("in_tokens"),
-          coalesce(col("out_rows"), lit(0L)).as("out_rows"),
-          coalesce(col("out_tokens"), lit(0L)).as("out_tokens"))
-    }),
-
-    // CCNet perplexity buckets (round 8) — the published pipeline step
-    // q79's scorer feeds: label every doc head/middle/tail by where its
-    // bits-per-ngram ratio falls against the TERCILES of the held-out
-    // val band (CCNet buckets a corpus against a clean reference
-    // distribution; head = least surprising). Thresholds are exact order
-    // statistics under (ratio, doc_id) ordering, carried as integer
-    // (bits, ngrams) pairs so bucket edges compare by exact
-    // cross-multiplication — no float boundary anywhere.
-    "q84_perplexity_buckets" -> ((s, dir) => {
-      import graft.text.NgramLm
-      val docs = tbl(s, dir, "documents").select("doc_id", "text")
-      val split = graft.sample.Sampling.assignSplits(docs, "doc_id",
-        Seq("train" -> 0.75, "val" -> 0.125, "test" -> 0.125))
-      val train = split.where(col("split") === "train")
-        .select("doc_id", "text")
-      val model = NgramLm.train(train, "text", minCount = 2L)
-      // score once; the ref ranking and the bucketing pass both read it
-      val scored = NgramLm.score(docs, "doc_id", "text", model,
-        loBits = 3L, hiBits = 7L).localCheckpoint()
-      val ref = scored.join(
-        split.where(col("split") === "val").select("doc_id"), Seq("doc_id"))
-      NgramLm.perplexityBuckets(scored, "doc_id", ref)
-    }),
-
-    // Audio repair pipeline (round 8) — the EXECUTION step the planning
-    // censuses (q59 trim / q66 resample / q72 gain) only report on: per
-    // clip, decode at the container rate, trim endpoint silence, gate on
-    // post-trim quality (clipping / mid-clip silence / DC bias have no
-    // repair stage here), resample to 16 kHz, gain to −20 dBFS unless the
-    // peak would cross the rail — or drop the row with a named reason.
-    // ONE decode UDF per row, scan-local; the only exchange is the
-    // (codec, action, count) census. Plants by id residue (forced pcm
-    // container): %5000=37 padded → trimmed+repaired, =41 all-silence →
-    // dropped, =53 impulse → would_clip, =61 quiet → gained cleanly,
-    // =27 flat-top → clipped. Corrupt rows (m=17): flac fails decode,
-    // µ-law rails clip, A-law zeros decode to a DC-heavy comb → dc_bias,
-    // pcm repairs. The one content-bistable class — corrupt adpcm_ima,
-    // whose post-trim DC ratio straddles the census threshold depending
-    // on the id-derived tone (RepairSweep measured BOTH actions across
-    // 400 ids) — is excluded from the input, keeping every remaining
-    // (m, codec) cell a pure arithmetic prediction for the oracle.
-    "q77_repair_census" -> ((s, dir) =>
-      graft.audio.AudioRepair.actionCensus(repairInput(s, dir))),
-
-    // Post-repair verification (round 8) — the censuses that PLANNED the
-    // repair re-run on the repair's OUTPUT: every surviving row must land
-    // quality=nominal, gain=normalize_ok, container=ok (the repaired
-    // table is materialized once and re-censused from its actual PCM
-    // bytes — the claim is earned from the output payload, not assumed
-    // from the repair's bookkeeping). The oracle predicts the survivor
-    // count by the same id arithmetic as q77 and pins all three bands.
-    "q78_repair_verify" -> ((s, dir) => {
-      import graft.validate.{ContainerCheck, GainCheck, QualityCensus}
-      val repaired = graft.audio.AudioRepair
-        .repairedTable(repairInput(s, dir)).localCheckpoint()
-      QualityCensus.census(repaired).withColumn("census", lit("quality"))
-        .unionByName(
-          GainCheck.census(repaired).withColumn("census", lit("gain")))
-        .unionByName(
-          ContainerCheck.census(repaired).withColumn("census", lit("container")))
-        .select("census", "codec", "band", "clips")
-    }),
-  )
-
-  /** The q77/q78 input: the error-injected clips table with the five
-    * repair plant classes forced onto pcm containers, minus the one
-    * content-bistable (m, codec) cell — see the q77 comment. */
-  private def repairInput(s: SparkSession, dir: String): DataFrame = {
-    val clips = OracleTables.clips(s, clipCount(dir))
-    val id = expr("CAST(substring(clip_id, 6, 12) AS BIGINT)")
-    val padU = udf((i: Long) => graft.io.ClipsGenerator.paddedBytes(i, 25, 15, 20))
-    val silU = udf((i: Long) => graft.io.ClipsGenerator.silentBytes(i, 25))
-    val impU = udf((i: Long) => graft.io.ClipsGenerator.impulseBytes(i, 25))
-    val quiU = udf((i: Long) => graft.io.ClipsGenerator.quietBytes(i, 25))
-    val clpU = udf((i: Long) => graft.io.ClipsGenerator.clippedBytes(i, 25))
-    clips
-      .where(!(id % 5000 === 17 && col("codec") === "adpcm_ima"))
-      .withColumn("bytes",
-        when(id % 5000 === 37, padU(id))
-          .when(id % 5000 === 41, silU(id))
-          .when(id % 5000 === 53, impU(id))
-          .when(id % 5000 === 61, quiU(id))
-          .when(id % 5000 === 27, clpU(id))
-          .otherwise(col("bytes")))
-      .withColumn("codec",
-        when((id % 5000).isin(37L, 41L, 53L, 61L, 27L), lit("pcm_s16le"))
-          .otherwise(col("codec")))
+  val cases: Seq[QueryCase] = QueryCase.requireUnique(
+    ValidateQueries.cases ++ DedupQueries.cases ++ AudioQueries.cases ++
+      TextQueries.cases ++ LayoutQueries.cases ++ StreamingQueries.cases)
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    cases.map(c => c.name -> c.run).toMap
+
+  /** The oracle SQL of every query that has one, bound to the clips-table
+    * paths of `sfDir`'s scale (Verify dumps it for the sf dir it ran on). */
+  def oracleSqlFor(sfDir: String): Map[String, String] =
+    cases.flatMap(c => c.oracle.map(o => c.name -> o(sfDir))).toMap
+
+  /** The queries a main runs, sorted by name. SPARK_GRAFT_ONLY=q33,q34
+    * keeps only the names starting with one of the comma-separated
+    * prefixes. Bench, BenchExtra, Verify and PlanDump all select here, so
+    * the same env var always picks the same set. */
+  def selected: Seq[QueryCase] = {
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    cases.sortBy(_.name).filter(c => only.forall(_.exists(c.name.startsWith)))
   }
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops (q24: the
-    * t-digest drift sketch). The driver verifies at sf0.01, so the default
-    * binds the clips-table paths for that scale; Verify dumps
-    * [[oracleSqlFor]] the actual sf dir it was invoked with. */
-  def oracleSql: Map[String, String] = oracleSqlFor("/root/testdata/sf0.01")
+  /** Untimed warmup before a timed query phase (round-3 verdict #7): the
+    * first timed query used to absorb 3-5 s of JIT + codegen + first-scan
+    * session warmup, making q01's number incomparable across rounds. A
+    * scan+project (q09) then a shuffle+agg (q03) run first, so every timed
+    * number is steady-state. */
+  def warmup(spark: SparkSession, dir: String): Unit =
+    try Seq("q09_token_stats", "q03_unique_violations")
+      .foreach(name => queries(name)(spark, dir).count())
+    catch { case e: Throwable =>
+      System.err.println(s"[warmup] failed (continuing): ${e.getMessage}")
+    }
+
+  /** The clips table as a DuckDB relation for `sfDir`'s scale. The
+    * synthetic clips and catalog tables are materialized ONCE to parquet
+    * (OracleTables), so DuckDB reads the SAME bytes the Spark queries read
+    * — this is what makes the clips checks oracle-able (round-1 verdict
+    * #1). Reading storage-backed parquet is also the honest 100 TB
+    * benchmark shape. */
+  def clipsSql(sfDir: String): String =
+    s"read_parquet('${OracleTables.clipsPath(clipCount(sfDir))}/*.parquet')"
+
+  /** The transcript catalog as a DuckDB relation for `sfDir`'s scale. */
+  def catalogSql(sfDir: String): String =
+    s"read_parquet('${OracleTables.catalogPath(clipCount(sfDir))}/*.parquet')"
+
+  /** The clips row-constraint suite (ClipsGenerator.spec) as one
+    * predicate; each conjunct group leads with IS NOT NULL so the AND is
+    * never NULL. */
+  val clipOk: String =
+    """(clip_id IS NOT NULL AND regexp_matches(clip_id, '^clip-[0-9]{12}$')
+      |  AND bytes IS NOT NULL
+      |  AND sr_hz IS NOT NULL AND sr_hz >= 8000 AND sr_hz <= 48000
+      |  AND sr_hz IN (8000, 16000, 22050, 44100, 48000)
+      |  AND dur_ms IS NOT NULL AND dur_ms > 0 AND dur_ms <= 30000
+      |  AND codec IS NOT NULL AND codec IN ('pcm_s16le','flac','pcm_mulaw','pcm_alaw','adpcm_ima')
+      |  AND transcript IS NOT NULL AND length(transcript) >= 1)""".stripMargin
+
+  /** Which rows MUST fail the per-codec SNR floor, by injection rule:
+    * duplicate-id rows (detectable as dur_ms not matching the id-derived
+    * value) plus byte-zeroed corrupt rows (id % 5000 = 17) — EXCEPT that
+    * under adpcm_ima's measured 8 dB floor a 1 Hz-off duplicate-id payload
+    * (15.1-19.0 dB, AdpcmBandSweep) passes; only corruption (≤ 2.5 dB)
+    * fails. The Spark side must earn this by decoding five formats. */
+  def snrFailPred(p: String): String =
+    s"""(CASE WHEN ${p}codec = 'adpcm_ima'
+       |  THEN CAST(substr(${p}clip_id, 6) AS BIGINT) % 5000 = 17
+       |  ELSE ${p}dur_ms <> 200 + (CAST(substr(${p}clip_id, 6) AS BIGINT) * 37) % 9800
+       |    OR CAST(substr(${p}clip_id, 6) AS BIGINT) % 5000 = 17 END)""".stripMargin
 
   /** q80's committed per-scale BPE vocabularies — `BpeTrainHarness`
     * output (doc_id%4<3 slice, 60 merges; the corpora differ per scale,
@@ -1941,1958 +146,7 @@ object SparkEntry {
     else if (sfDir.contains("sf0.01")) BpeVocabSf001
     else BpeVocabSf0001
 
-  def oracleSqlFor(sfDir: String): Map[String, String] = {
-    val n = clipCount(sfDir)
-    // DuckDB reads the SAME parquet bytes the Spark queries read
-    val clips = s"read_parquet('${OracleTables.clipsPath(n)}/*.parquet')"
-    val catalog = s"read_parquet('${OracleTables.catalogPath(n)}/*.parquet')"
-    // the clips row-constraint suite (ClipsGenerator.spec) as one predicate;
-    // each conjunct group leads with IS NOT NULL so the AND is never NULL
-    val clipOk =
-      """(clip_id IS NOT NULL AND regexp_matches(clip_id, '^clip-[0-9]{12}$')
-        |  AND bytes IS NOT NULL
-        |  AND sr_hz IS NOT NULL AND sr_hz >= 8000 AND sr_hz <= 48000
-        |  AND sr_hz IN (8000, 16000, 22050, 44100, 48000)
-        |  AND dur_ms IS NOT NULL AND dur_ms > 0 AND dur_ms <= 30000
-        |  AND codec IS NOT NULL AND codec IN ('pcm_s16le','flac','pcm_mulaw','pcm_alaw','adpcm_ima')
-        |  AND transcript IS NOT NULL AND length(transcript) >= 1)""".stripMargin
-    // which rows MUST fail the per-codec SNR floor, by injection rule:
-    // duplicate-id rows (detectable as dur_ms not matching the id-derived
-    // value) plus byte-zeroed corrupt rows (id % 5000 = 17) — EXCEPT that
-    // under adpcm_ima's measured 8 dB floor a 1 Hz-off duplicate-id payload
-    // (15.1-19.0 dB, AdpcmBandSweep) passes; only corruption (≤ 2.5 dB)
-    // fails. The Spark side must earn this by decoding five formats.
-    def snrFailPred(p: String): String =
-      s"""(CASE WHEN ${p}codec = 'adpcm_ima'
-         |  THEN CAST(substr(${p}clip_id, 6) AS BIGINT) % 5000 = 17
-         |  ELSE ${p}dur_ms <> 200 + (CAST(substr(${p}clip_id, 6) AS BIGINT) * 37) % 9800
-         |    OR CAST(substr(${p}clip_id, 6) AS BIGINT) % 5000 = 17 END)""".stripMargin
-    Map(
-    "q01_null_summary" ->
-      """SELECT lang, COUNT(*) AS total_rows,
-        | CAST(SUM(CASE WHEN doc_id IS NULL OR text IS NULL OR lang IS NULL
-        |   OR source IS NULL OR n_chars IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |   AS error_rows,
-        | COUNT(*) - CAST(SUM(CASE WHEN doc_id IS NULL OR text IS NULL
-        |   OR lang IS NULL OR source IS NULL OR n_chars IS NULL THEN 1 ELSE 0
-        |   END) AS BIGINT) AS valid_rows
-        |FROM documents GROUP BY lang""".stripMargin,
-    "q02_range_violations" ->
-      """SELECT l_orderkey, l_linenumber, 'maximum' AS constraint_id,
-        | l_discount AS observed_value
-        |FROM lineitem WHERE NOT (l_discount <= 0.05)""".stripMargin,
-    "q03_unique_violations" ->
-      """SELECT o_custkey, COUNT(*) AS dup_count FROM orders
-        |GROUP BY o_custkey HAVING COUNT(*) > 1""".stripMargin,
-    "q04_unique_pk_clean" ->
-      """SELECT l_orderkey, l_linenumber, COUNT(*) AS dup_count FROM lineitem
-        |GROUP BY l_orderkey, l_linenumber HAVING COUNT(*) > 1""".stripMargin,
-    "q05_ref_orphans" ->
-      """SELECT o_orderkey FROM orders o WHERE NOT EXISTS
-        | (SELECT 1 FROM lineitem l WHERE l.l_orderkey = o.o_orderkey)""".stripMargin,
-    "q06_ref_summary" ->
-      """SELECT o_orderstatus, COUNT(*) AS total_rows,
-        | CAST(SUM(CASE WHEN NOT EXISTS (SELECT 1 FROM lineitem l
-        |   WHERE l.l_orderkey = o.o_orderkey) THEN 1 ELSE 0 END) AS BIGINT)
-        |   AS orphan_rows
-        |FROM orders o GROUP BY o_orderstatus""".stripMargin,
-    "q07_colstats" ->
-      """SELECT l_returnflag, COUNT(*) AS total_rows, MIN(l_quantity) AS q_min,
-        | MAX(l_quantity) AS q_max, ROUND(AVG(l_quantity), 6) AS q_avg
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    "q08_cast_roundtrip" ->
-      """SELECT event_id, CAST(TRIM(CAST(user_id AS VARCHAR)) AS BIGINT) AS uid_str,
-        | STRFTIME(CAST(STRFTIME(ts, '%Y-%m-%d') AS DATE), '%Y-%m-%d') AS d_iso,
-        | (event_type = 'error') AS is_err
-        |FROM events""".stripMargin,
-    "q09_token_stats" ->
-      """SELECT doc_id, LENGTH(text) AS n_chars_calc,
-        | LEN(STR_SPLIT(text, ' ')) AS n_tokens FROM documents""".stripMargin,
-    "q10_quality_score" ->
-      """SELECT doc_id,
-        | (CASE WHEN LENGTH(text) >= 200 THEN 1 ELSE 0 END)
-        | + (CASE WHEN LEN(STR_SPLIT(text, ' ')) >= 40 THEN 1 ELSE 0 END)
-        | + (CASE WHEN text LIKE '%the%' THEN 1 ELSE 0 END) AS quality_score
-        |FROM documents""".stripMargin,
-    "q11_fingerprint" ->
-      """SELECT doc_id,
-        | MD5(LOWER(TRIM(REGEXP_REPLACE(text, '\s+', ' ', 'g')))) AS fp
-        |FROM documents""".stripMargin,
-    "q12_dedup_exact" ->
-      """SELECT doc_id FROM (
-        | SELECT doc_id, ROW_NUMBER() OVER (
-        |   PARTITION BY MD5(LOWER(TRIM(REGEXP_REPLACE(text, '\s+', ' ', 'g'))))
-        |   ORDER BY doc_id) AS rn
-        | FROM documents) WHERE rn = 1""".stripMargin,
-    "q27_topk_users" ->
-      """SELECT event_type, user_id, n, rn FROM (
-        | SELECT event_type, user_id, COUNT(*) AS n,
-        |  ROW_NUMBER() OVER (PARTITION BY event_type
-        |    ORDER BY COUNT(*) DESC, user_id) AS rn
-        | FROM events GROUP BY event_type, user_id) WHERE rn <= 3""".stripMargin,
-    "q28_events_hourly" ->
-      """SELECT STRFTIME(DATE_TRUNC('hour', ts), '%Y-%m-%d %H:%M:%S') AS hr,
-        | event_type, COUNT(*) AS n, ROUND(SUM(value), 4) AS total_value
-        |FROM events GROUP BY 1, 2""".stripMargin,
-    "q29_histogram" ->
-      """SELECT CAST(FLOOR(l_quantity / 5.0) AS BIGINT) AS bin, COUNT(*) AS n
-        |FROM lineitem GROUP BY bin""".stripMargin,
-    "q30_orders_profile" ->
-      """SELECT o_orderstatus, COUNT(*) AS total_rows,
-        | CAST(SUM(CASE WHEN o_totalprice IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |   AS price_nulls,
-        | ROUND(MIN(o_totalprice), 2) AS price_min,
-        | ROUND(MAX(o_totalprice), 2) AS price_max,
-        | ROUND(AVG(o_totalprice), 4) AS price_avg
-        |FROM orders GROUP BY o_orderstatus""".stripMargin,
-
-    // ---- text/dedup/ANN family (round-2: previously self-attested) ----
-
-    // langId replica: same token normalization, marker sets, and the
-    // (score, lang) lexicographic argmax of Spark's greatest-over-structs
-    "q13_lang_id" ->
-      """WITH t AS (
-        | SELECT doc_id, text,
-        |  list_transform(str_split(lower(text), ' '),
-        |    x -> regexp_replace(x, '[^\p{L}]', '', 'g')) AS toks
-        | FROM documents
-        |), s AS (
-        | SELECT doc_id, text,
-        |  len(list_filter(toks, x -> x IN ('the','and','of','to','is','in','that','it','was','for'))) AS s_en,
-        |  len(list_filter(toks, x -> x IN ('le','la','les','et','des','une','est','dans','qui','pas'))) AS s_fr,
-        |  len(list_filter(toks, x -> x IN ('el','los','las','una','que','por','con','para','es','del'))) AS s_es,
-        |  len(list_filter(toks, x -> x IN ('der','die','das','und','ist','nicht','ein','mit','von','zu'))) AS s_de
-        | FROM t
-        |)
-        |SELECT doc_id,
-        | CASE WHEN regexp_matches(text, '[\p{Han}\p{Hiragana}\p{Katakana}]') THEN 'zh'
-        |      WHEN greatest(s_en, s_fr, s_es, s_de) > 0 THEN
-        |        CASE WHEN s_fr >= s_es AND s_fr >= s_en AND s_fr >= s_de THEN 'fr'
-        |             WHEN s_es >= s_en AND s_es >= s_de THEN 'es'
-        |             WHEN s_en >= s_de THEN 'en'
-        |             ELSE 'de' END
-        |      ELSE 'und' END AS lang_pred
-        |FROM s""".stripMargin,
-
-    // exact all-pairs trigram Jaccard — the brute-force ground truth the
-    // LSH+verify pipeline must reproduce (banding params give per-pair miss
-    // probability < 1e-14 at j=0.8; the exact-Jaccard verify makes false
-    // positives impossible)
-    "q14_minhash_neardups" ->
-      """WITH t AS (
-        | SELECT doc_id, str_split(text, ' ') AS toks FROM documents
-        |), s AS (
-        | SELECT doc_id, list_distinct(CASE WHEN len(toks) < 3
-        |   THEN [array_to_string(toks, ' ')]
-        |   ELSE list_transform(generate_series(1, len(toks) - 2),
-        |          i -> array_to_string(toks[i:i+2], ' ')) END) AS sh
-        | FROM t
-        |)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |    / len(list_distinct(list_concat(a.sh, b.sh))), 6) AS jaccard
-        |FROM s a JOIN s b ON a.doc_id < b.doc_id
-        |WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |    / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.8""".stripMargin,
-
-    "q31_ngram_jaccard" ->
-      """WITH t AS (
-        | SELECT doc_id, str_split(text, ' ') AS toks FROM documents
-        |), s AS (
-        | SELECT doc_id, list_distinct(CASE WHEN len(toks) < 3
-        |   THEN [array_to_string(toks, ' ')]
-        |   ELSE list_transform(generate_series(1, len(toks) - 2),
-        |          i -> array_to_string(toks[i:i+2], ' ')) END) AS sh
-        | FROM t
-        |)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |    / len(list_distinct(list_concat(a.sh, b.sh))), 6) AS jaccard
-        |FROM s a JOIN s b ON a.doc_id <> b.doc_id
-        |WHERE a.doc_id < 50
-        |  AND CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |    / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.2""".stripMargin,
-
-    // brute-force simhash over the same 60-bit md5 token hash; pigeonhole
-    // chunking has exact recall so the Spark result equals this scan
-    "q15_simhash_neardups" ->
-      """WITH th AS (
-        | SELECT doc_id, CAST(CONCAT('0x', substr(md5(tok), 1, 15)) AS BIGINT) AS h
-        | FROM (SELECT doc_id, unnest(str_split(text, ' ')) AS tok FROM documents)
-        |), votes AS (
-        | SELECT doc_id, b.bit,
-        |   SUM(CASE WHEN (h >> b.bit) & 1 = 1 THEN 1 ELSE -1 END) AS v
-        | FROM th CROSS JOIN (SELECT unnest(generate_series(0, 59)) AS bit) b
-        | GROUP BY doc_id, b.bit
-        |), sims AS (
-        | SELECT doc_id,
-        |   CAST(SUM(CASE WHEN v > 0 THEN (1::BIGINT << bit) ELSE 0 END) AS BIGINT) AS sim
-        | FROM votes GROUP BY doc_id
-        |)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  CAST(bit_count(xor(a.sim, b.sim)) AS INTEGER) AS hamming
-        |FROM sims a JOIN sims b ON a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.sim, b.sim)) <= 3""".stripMargin,
-
-    // exact cosine top-k in double precision (identical fold order)
-    "q16_ann_bruteforce" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |q AS (SELECT * FROM e WHERE vec_id < 5),
-        |scored AS (
-        | SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |   list_dot_product(q.v, c.v)
-        |     / (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(c.v, c.v))) AS cos
-        | FROM e c, q WHERE c.vec_id <> q.vec_id)
-        |SELECT query_id, neighbor_id, round(cos, 6) AS cosine,
-        |  CAST(rn AS INTEGER) AS rank
-        |FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-        |        ORDER BY cos DESC, neighbor_id) AS rn FROM scored)
-        |WHERE rn <= 5""".stripMargin,
-
-    // the LSH path is tuned to full recall on this corpus (see the query
-    // comment), so its ground truth is the same exact top-k scan
-    "q17_ann_lsh" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |q AS (SELECT * FROM e WHERE vec_id < 5),
-        |scored AS (
-        | SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |   list_dot_product(q.v, c.v)
-        |     / (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(c.v, c.v))) AS cos
-        | FROM e c, q WHERE c.vec_id <> q.vec_id)
-        |SELECT query_id, neighbor_id, round(cos, 6) AS cosine,
-        |  CAST(rn AS INTEGER) AS rank
-        |FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-        |        ORDER BY cos DESC, neighbor_id) AS rn FROM scored)
-        |WHERE rn <= 5""".stripMargin,
-
-    // full-probe IVF equals exact top-k by construction; the oracle is the
-    // same ground-truth scan (training/binning/probing all had to be right
-    // for the result to match)
-    "q32_ann_ivf" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |q AS (SELECT * FROM e WHERE vec_id < 5),
-        |scored AS (
-        | SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |   list_dot_product(q.v, c.v)
-        |     / (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(c.v, c.v))) AS cos
-        | FROM e c, q WHERE c.vec_id <> q.vec_id)
-        |SELECT query_id, neighbor_id, round(cos, 6) AS cosine,
-        |  CAST(rn AS INTEGER) AS rank
-        |FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-        |        ORDER BY cos DESC, neighbor_id) AS rn FROM scored)
-        |WHERE rn <= 5""".stripMargin,
-
-    // all-pairs cosine ≥ threshold (none exist in this corpus — max
-    // pairwise cosine ≈ 0.51 — so this pins the no-false-positives side)
-    "q18_embedding_neardups" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)
-        |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |  round(list_dot_product(a.v, b.v)
-        |    / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 6) AS cosine
-        |FROM e a JOIN e b ON a.vec_id < b.vec_id
-        |WHERE list_dot_product(a.v, b.v)
-        |    / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) >= 0.9""".stripMargin,
-
-    // exact all-pairs cosine over the corpus PLUS the planted perturbed
-    // copies — the LSH pipeline must capture every planted pair exactly
-    "q33_embedding_neardups_planted" ->
-      """WITH e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |e AS (
-        | SELECT vec_id, v FROM e0
-        | UNION ALL
-        | SELECT vec_id + 200000000 AS vec_id, list_transform(v, x -> x + 0.03) AS v
-        | FROM e0 WHERE vec_id < 20
-        |)
-        |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |  round(list_dot_product(a.v, b.v)
-        |    / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 6) AS cosine
-        |FROM e a JOIN e b ON a.vec_id < b.vec_id
-        |WHERE list_dot_product(a.v, b.v)
-        |    / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) >= 0.9""".stripMargin,
-
-    // chained-md5 fingerprint: list_reduce with '' seed replicates
-    // aggregate(tokens, '', (acc,t) -> md5(acc||t))
-    "q19_rolling_fingerprint" ->
-      """SELECT doc_id,
-        | list_reduce(list_prepend('', str_split(text, ' ')),
-        |   (acc, t) -> md5(concat(acc, t))) AS rolling_fp
-        |FROM documents""".stripMargin,
-
-    // ---- clips pipeline over the materialized deterministic table ----
-
-    "q20_clips_validate_summary" ->
-      s"""WITH c AS (SELECT *, $clipOk AS ok FROM $clips)
-         |SELECT codec, COUNT(*) AS total_rows,
-         |  CAST(SUM(CASE WHEN NOT ok THEN 1 ELSE 0 END) AS BIGINT) AS error_rows,
-         |  COUNT(*) - CAST(SUM(CASE WHEN NOT ok THEN 1 ELSE 0 END) AS BIGINT) AS valid_rows,
-         |  CAST(SUM(CASE WHEN NOT ok THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*) AS error_rate,
-         |  1.0 - CAST(SUM(CASE WHEN NOT ok THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*) AS success_rate,
-         |  (SUM(CASE WHEN NOT ok THEN 1 ELSE 0 END) = 0) AS passed
-         |FROM c GROUP BY codec""".stripMargin,
-
-    // every (column, constraint) check enumerated — the full violation scan
-    "q21_clips_violations" ->
-      s"""WITH c AS (SELECT * FROM $clips)
-         |SELECT clip_id, codec, 'clip_id' AS column_name, 'not_null' AS constraint_id,
-         |  CAST(NULL AS VARCHAR) AS observed_value FROM c WHERE clip_id IS NULL
-         |UNION ALL
-         |SELECT clip_id, codec, 'clip_id', 'pattern', clip_id FROM c
-         | WHERE clip_id IS NOT NULL AND NOT regexp_matches(clip_id, '^clip-[0-9]{12}$$')
-         |UNION ALL
-         |SELECT clip_id, codec, 'bytes', 'not_null', CAST(NULL AS VARCHAR) FROM c
-         | WHERE bytes IS NULL
-         |UNION ALL
-         |SELECT clip_id, codec, 'sr_hz', 'not_null', CAST(NULL AS VARCHAR) FROM c
-         | WHERE sr_hz IS NULL
-         |UNION ALL
-         |SELECT clip_id, codec, 'sr_hz', 'minimum', CAST(sr_hz AS VARCHAR) FROM c
-         | WHERE sr_hz IS NOT NULL AND NOT (sr_hz >= 8000)
-         |UNION ALL
-         |SELECT clip_id, codec, 'sr_hz', 'maximum', CAST(sr_hz AS VARCHAR) FROM c
-         | WHERE sr_hz IS NOT NULL AND NOT (sr_hz <= 48000)
-         |UNION ALL
-         |SELECT clip_id, codec, 'sr_hz', 'in_set', CAST(sr_hz AS VARCHAR) FROM c
-         | WHERE sr_hz IS NOT NULL AND sr_hz NOT IN (8000, 16000, 22050, 44100, 48000)
-         |UNION ALL
-         |SELECT clip_id, codec, 'dur_ms', 'not_null', CAST(NULL AS VARCHAR) FROM c
-         | WHERE dur_ms IS NULL
-         |UNION ALL
-         |SELECT clip_id, codec, 'dur_ms', 'exclusive_minimum', CAST(dur_ms AS VARCHAR) FROM c
-         | WHERE dur_ms IS NOT NULL AND NOT (dur_ms > 0)
-         |UNION ALL
-         |SELECT clip_id, codec, 'dur_ms', 'maximum', CAST(dur_ms AS VARCHAR) FROM c
-         | WHERE dur_ms IS NOT NULL AND NOT (dur_ms <= 30000)
-         |UNION ALL
-         |SELECT clip_id, codec, 'codec', 'not_null', CAST(NULL AS VARCHAR) FROM c
-         | WHERE codec IS NULL
-         |UNION ALL
-         |SELECT clip_id, codec, 'codec', 'in_set', codec FROM c
-         | WHERE codec IS NOT NULL AND codec NOT IN ('pcm_s16le','flac','pcm_mulaw','pcm_alaw','adpcm_ima')
-         |UNION ALL
-         |SELECT clip_id, codec, 'transcript', 'not_null', CAST(NULL AS VARCHAR) FROM c
-         | WHERE transcript IS NULL
-         |UNION ALL
-         |SELECT clip_id, codec, 'transcript', 'min_length', transcript FROM c
-         | WHERE transcript IS NOT NULL AND NOT (length(transcript) >= 1)""".stripMargin,
-
-    "q22_clips_unique" ->
-      s"""SELECT clip_id, COUNT(*) AS dup_count FROM $clips
-         |GROUP BY clip_id HAVING COUNT(*) > 1""".stripMargin,
-
-    // the salted two-phase aggregate and the bucketed-table groupBy are
-    // alternate PHYSICAL plans for the same logical count — both must
-    // reproduce the plain duplicate scan exactly
-    "q38_clips_unique_salted" ->
-      s"""SELECT clip_id, COUNT(*) AS dup_count FROM $clips
-         |GROUP BY clip_id HAVING COUNT(*) > 1""".stripMargin,
-    "q39_clips_unique_bucketed" ->
-      s"""SELECT clip_id, COUNT(*) AS dup_count FROM $clips
-         |GROUP BY clip_id HAVING COUNT(*) > 1""".stripMargin,
-
-    // batch twin of the single-batch streaming duplicate monitor: with all
-    // files in one micro-batch, flatMapGroupsWithState emits one row per
-    // recurring key carrying its total count — exactly this groupBy
-    "q35_streaming_dup_counts" ->
-      s"""SELECT clip_id, COUNT(*) AS dup_count FROM $clips
-         |GROUP BY clip_id HAVING COUNT(*) > 1""".stripMargin,
-
-    // the streaming referential monitor is stateless stream-static
-    // left-anti ⇒ identical to the batch anti-join
-    "q36_streaming_orphans" ->
-      s"""SELECT clip_id FROM $clips c WHERE NOT EXISTS
-         | (SELECT 1 FROM $catalog k WHERE k.clip_id = c.clip_id)""".stripMargin,
-
-    // batch twin of the windowed violation-rate monitor: same derived event
-    // time (hour-aligned base epoch ⇒ tumbling windows = date_trunc), same
-    // constraint suite as q20's clipOk predicate
-    "q37_streaming_window_rates" ->
-      s"""WITH c AS (
-         | SELECT *, $clipOk AS ok,
-         |   make_timestamp((1704067200::BIGINT
-         |     + CAST(COALESCE(dur_ms, -1) AS BIGINT)) * 1000000::BIGINT) AS ts
-         | FROM $clips
-         |)
-         |SELECT STRFTIME(DATE_TRUNC('hour', ts), '%Y-%m-%d %H:%M:%S') AS hr,
-         |  codec, COUNT(*) AS total_rows,
-         |  CAST(SUM(CASE WHEN NOT ok THEN 1 ELSE 0 END) AS BIGINT) AS error_rows,
-         |  CAST(SUM(CASE WHEN NOT ok THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*)
-         |    AS error_rate
-         |FROM c GROUP BY 1, 2""".stripMargin,
-
-    "q23_clips_ref_orphans" ->
-      s"""SELECT clip_id FROM $clips c WHERE NOT EXISTS
-         | (SELECT 1 FROM $catalog k WHERE k.clip_id = c.clip_id)""".stripMargin,
-
-    // exact binned-KS drift + EXACT verdict: the Spark side reports the
-    // t-digest verdict in `drifted`, so a hash match proves sketch == exact
-    // at the spec threshold (planted drift sits far from 0.1 on both sides;
-    // the exact KS column itself is pure integer-count arithmetic, portable)
-    "q34_clips_drift_exact" ->
-      s"""WITH cur AS (
-         | SELECT codec,
-         |   CASE WHEN codec = 'pcm_mulaw' THEN dur_ms + 5000 ELSE dur_ms END AS dur_ms
-         | FROM $clips WHERE dur_ms IS NOT NULL
-         |), refh AS (
-         | SELECT CAST(FLOOR(CAST(dur_ms AS DOUBLE) / 100.0) AS BIGINT) AS bin,
-         |   COUNT(*) AS rn
-         | FROM $clips WHERE dur_ms IS NOT NULL GROUP BY 1
-         |), curh AS (
-         | SELECT codec, CAST(FLOOR(CAST(dur_ms AS DOUBLE) / 100.0) AS BIGINT) AS bin,
-         |   COUNT(*) AS cn
-         | FROM cur GROUP BY 1, 2
-         |), bins AS (
-         | SELECT DISTINCT bin FROM (SELECT bin FROM refh UNION ALL SELECT bin FROM curh)
-         |), grid AS (
-         | SELECT g.codec, b.bin, COALESCE(c.cn, 0) AS cn, COALESCE(r.rn, 0) AS rn
-         | FROM (SELECT DISTINCT codec FROM curh) g
-         | CROSS JOIN bins b
-         | LEFT JOIN curh c ON c.codec = g.codec AND c.bin = b.bin
-         | LEFT JOIN refh r ON r.bin = b.bin
-         |), cdfs AS (
-         | SELECT codec,
-         |   ABS(CAST(SUM(cn) OVER (PARTITION BY codec ORDER BY bin) AS DOUBLE)
-         |         / CAST(SUM(cn) OVER (PARTITION BY codec) AS DOUBLE)
-         |     - CAST(SUM(rn) OVER (PARTITION BY codec ORDER BY bin) AS DOUBLE)
-         |         / CAST(SUM(rn) OVER (PARTITION BY codec) AS DOUBLE)) AS d
-         | FROM grid
-         |)
-         |SELECT codec, ROUND(MAX(d), 6) AS ks_exact, (MAX(d) > 0.1) AS drifted
-         |FROM cdfs GROUP BY codec""".stripMargin,
-
-    // expected-outcome oracle: the injection rules say which rows MUST fail
-    // decode under each codec's floor (see snrFailPred) — the Spark side
-    // must find exactly them by decoding five real formats and measuring
-    // SNR against the per-codec threshold
-    "q25_clips_audio_invariant" ->
-      s"""SELECT c.codec, COUNT(*) AS sampled_rows,
-         |  CAST(SUM(CASE WHEN ${snrFailPred("c.")}
-         |    THEN 1 ELSE 0 END) AS BIGINT) AS snr_failures,
-         |  CAST(SUM(CASE WHEN (c.transcript = k.transcript) IS NOT TRUE
-         |    THEN 1 ELSE 0 END) AS BIGINT) AS transcript_failures
-         |FROM $clips c LEFT JOIN $catalog k ON c.clip_id = k.clip_id
-         |GROUP BY c.codec""".stripMargin,
-
-    // the SNR bands are fully predictable from codec label + injection
-    // rules under the per-codec floors: pcm/flac decode exactly (cap),
-    // G.711 decodes with real quantization error (parameter-space sweep
-    // mins 33.8/34.9 dB — always in [30, 120)), adpcm_ima decodes in
-    // [12.65, ~50] dB clean and [15.1, 19.0] dB on duplicate-id rows —
-    // both in [8, 120) — and exactly the per-codec snrFailPred rows land
-    // under their floor; the Spark side must reproduce this by decoding
-    "q40_clips_snr_bands" ->
-      s"""WITH c AS (
-         | SELECT codec, ${snrFailPred("")} AS failpred
-         | FROM $clips
-         |)
-         |SELECT codec,
-         |  CAST(SUM(CASE WHEN NOT failpred
-         |    AND codec IN ('pcm_s16le','flac') THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS capped_rows,
-         |  CAST(SUM(CASE WHEN NOT failpred
-         |    AND codec IN ('pcm_mulaw','pcm_alaw','adpcm_ima') THEN 1 ELSE 0 END)
-         |    AS BIGINT) AS lossy_pass_rows,
-         |  CAST(SUM(CASE WHEN failpred THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS fail_rows
-         |FROM c GROUP BY codec""".stripMargin,
-
-    "q26_clips_suite_onepass" ->
-      s"""WITH c AS (SELECT *, $clipOk AS ok FROM $clips),
-         |j AS (
-         | SELECT c.*, k.transcript AS ref_transcript
-         | FROM c LEFT JOIN $catalog k ON c.clip_id = k.clip_id
-         |)
-         |SELECT codec, COUNT(*) AS total_rows,
-         |  CAST(SUM(CASE WHEN NOT ok THEN 1 ELSE 0 END) AS BIGINT) AS error_rows,
-         |  CAST(SUM(CASE WHEN ref_transcript IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS orphan_rows,
-         |  COUNT(*) AS sampled_rows,
-         |  CAST(SUM(CASE WHEN ${snrFailPred("")}
-         |    THEN 1 ELSE 0 END) AS BIGINT) AS snr_failures,
-         |  CAST(SUM(CASE WHEN transcript IS DISTINCT FROM ref_transcript
-         |    THEN 1 ELSE 0 END) AS BIGINT) AS transcript_failures,
-         |  COUNT(*) - CAST(SUM(CASE WHEN NOT ok THEN 1 ELSE 0 END) AS BIGINT) AS valid_rows,
-         |  CAST(SUM(CASE WHEN NOT ok THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*) AS error_rate,
-         |  1.0 - CAST(SUM(CASE WHEN NOT ok THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*) AS success_rate,
-         |  (SUM(CASE WHEN NOT ok THEN 1 ELSE 0 END) = 0
-         |    AND SUM(CASE WHEN ref_transcript IS NULL THEN 1 ELSE 0 END) = 0
-         |    AND SUM(CASE WHEN ${snrFailPred("")} THEN 1 ELSE 0 END) = 0
-         |    AND SUM(CASE WHEN transcript IS DISTINCT FROM ref_transcript
-         |      THEN 1 ELSE 0 END) = 0) AS passed
-         |FROM j GROUP BY codec""".stripMargin,
-
-    // the checkpoint manifest's final per-partition metrics are q20's
-    // summary regrouped by the physical partition value — with pcm_alaw's
-    // counts DOUBLED by the act-5 append (id-shifted copies carry every
-    // non-key column verbatim, so each appended row reproduces its
-    // source's constraint outcome; the shifted ids still match the
-    // 12-digit pattern). The resume control-flow columns are constants of
-    // the scenario (run 1 covered pcm_s16le+flac; the edit touched flac;
-    // the append grew pcm_alaw; run 3 no-opped) — the Spark side must
-    // EARN them by actually skipping fingerprint-matched partitions and
-    // re-queuing exactly the edited and the grown one (the in-query
-    // `require`s abort on any deviation, so a returned row implies the
-    // control flow)
-    "q41_checkpoint_resume" ->
-      s"""WITH c AS (SELECT codec, $clipOk AS ok FROM $clips),
-         |g AS (
-         | SELECT codec, COUNT(*) AS tr,
-         |   CAST(SUM(CASE WHEN NOT ok THEN 1 ELSE 0 END) AS BIGINT) AS er
-         | FROM c GROUP BY codec
-         |)
-         |SELECT codec AS partition_value,
-         |  CASE WHEN codec = 'pcm_alaw' THEN 2 * tr ELSE tr END AS total_rows,
-         |  CASE WHEN codec = 'pcm_alaw' THEN 2 * er ELSE er END AS error_rows,
-         |  CASE WHEN codec = 'pcm_alaw' THEN 2 * (tr - er) ELSE tr - er END
-         |    AS valid_rows,
-         |  CASE WHEN codec IN ('pcm_s16le','flac') THEN 1 ELSE 2 END
-         |    AS validated_in_run,
-         |  (codec = 'flac') AS requeued_after_edit,
-         |  (codec = 'pcm_alaw') AS requeued_after_append,
-         |  TRUE AS resume_noop
-         |FROM g""".stripMargin,
-
-    // the tone-census bands follow the injection rules alone: rows at
-    // index % 5000 == 17 carry byte-zeroed payloads (dup rows never
-    // collide with that residue — they inherit id ≡ 10 (mod 5000) — so
-    // id identifies them for every row); zeroed flac streams fail their
-    // frame CRC (decode_fail), zeroed PCM/G.711 streams decode to
-    // half-garbage whose claimed-tone projection collapses (anomaly),
-    // and every other payload IS its claimed tone (match) — including
-    // duplicate-id rows, whose tone sits 1 Hz off, unresolvable in a
-    // 25 ms window and by design left to the SNR invariant. The Spark
-    // side must reproduce this by decode + projection per row.
-    "q42_clips_tone_census" ->
-      s"""WITH c AS (
-         | SELECT codec,
-         |   CAST(substr(clip_id, 6) AS BIGINT) % 5000 = 17 AS corrupt
-         | FROM $clips
-         |)
-         |SELECT codec,
-         |  CAST(SUM(CASE WHEN NOT corrupt THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS tone_match_rows,
-         |  CAST(SUM(CASE WHEN corrupt AND codec <> 'flac' THEN 1 ELSE 0 END)
-         |    AS BIGINT) AS tone_anomaly_rows,
-         |  CAST(SUM(CASE WHEN corrupt AND codec = 'flac' THEN 1 ELSE 0 END)
-         |    AS BIGINT) AS decode_fail_rows
-         |FROM c GROUP BY codec""".stripMargin,
-
-    // streaming drift verdict: the planted +5000 ms shift on pcm_mulaw
-    // sits at ks ≈ 0.5+ (others ≈ 0.01) vs the 0.1 threshold, so the
-    // rule-derived verdict is exact; the single constant-timestamp window
-    // is the hour it falls in (q34 pins the same sketch verdict against
-    // exact CDFs in batch; this gates the STREAMING aggregation path)
-    "q43_streaming_drift" ->
-      s"""SELECT '2024-01-01 00:00:00' AS hr, codec,
-         |  (codec = 'pcm_mulaw') AS drifted
-         |FROM $clips GROUP BY codec""".stripMargin,
-
-    // the full cascade replayed in SQL with the IDENTICAL rules: the q12
-    // fingerprint keeper (stage 1), the q14 exact trigram-Jaccard pairs
-    // (stage 2, larger id of each pair removed), and the q33 exact cosine
-    // pairs over doc_id = vec_id joined vectors (stage 3) — each stage
-    // computed over the previous stage's survivors, counts differenced
-    "q44_dedup_cascade" ->
-      """WITH base AS (
-        | SELECT doc_id, text FROM documents
-        | UNION ALL
-        | SELECT doc_id + 100000000 AS doc_id, text FROM documents WHERE doc_id < 10
-        | UNION ALL
-        | SELECT 200000000 + i AS doc_id, concat('planteddoc', i) AS text
-        | FROM (SELECT unnest(generate_series(0, 19)) AS i)
-        |), vec AS (
-        | SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-        | UNION ALL
-        | SELECT vec_id + 200000000 AS vec_id,
-        |   list_transform(embedding::DOUBLE[], x -> x + 0.03) AS v
-        | FROM embeddings WHERE vec_id < 20
-        |), s1 AS (
-        | SELECT doc_id, text FROM (
-        |  SELECT doc_id, text, ROW_NUMBER() OVER (
-        |    PARTITION BY MD5(LOWER(TRIM(REGEXP_REPLACE(text, '\s+', ' ', 'g'))))
-        |    ORDER BY doc_id) AS rn
-        |  FROM base) WHERE rn = 1
-        |), sh AS (
-        | SELECT doc_id, list_distinct(CASE WHEN len(toks) < 3
-        |   THEN [array_to_string(toks, ' ')]
-        |   ELSE list_transform(generate_series(1, len(toks) - 2),
-        |          i -> array_to_string(toks[i:i+2], ' ')) END) AS sh
-        | FROM (SELECT doc_id, str_split(text, ' ') AS toks FROM s1)
-        |), mh_removed AS (
-        | SELECT DISTINCT b.doc_id FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        | WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |     / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.8
-        |), s2 AS (
-        | SELECT doc_id FROM s1
-        | WHERE doc_id NOT IN (SELECT doc_id FROM mh_removed)
-        |), ej AS (
-        | SELECT s2.doc_id, vec.v FROM s2 JOIN vec ON s2.doc_id = vec.vec_id
-        |), em_removed AS (
-        | SELECT DISTINCT b.doc_id FROM ej a JOIN ej b ON a.doc_id < b.doc_id
-        | WHERE list_dot_product(a.v, b.v)
-        |     / (sqrt(list_dot_product(a.v, a.v))
-        |        * sqrt(list_dot_product(b.v, b.v))) >= 0.9
-        |), s3 AS (
-        | SELECT doc_id FROM s2
-        | WHERE doc_id NOT IN (SELECT doc_id FROM em_removed)
-        |)
-        |SELECT 'exact' AS stage,
-        |  (SELECT COUNT(*) FROM base) - (SELECT COUNT(*) FROM s1) AS removed,
-        |  (SELECT COUNT(*) FROM s1) AS surviving
-        |UNION ALL
-        |SELECT 'minhash' AS stage,
-        |  (SELECT COUNT(*) FROM s1) - (SELECT COUNT(*) FROM s2) AS removed,
-        |  (SELECT COUNT(*) FROM s2) AS surviving
-        |UNION ALL
-        |SELECT 'embedding' AS stage,
-        |  (SELECT COUNT(*) FROM s2) - (SELECT COUNT(*) FROM s3) AS removed,
-        |  (SELECT COUNT(*) FROM s3) AS surviving""".stripMargin,
-
-    // categorical mix drift: counts → shares → per-category |delta| →
-    // order-independent max; the same relabel rule applied to the current
-    // side, every arithmetic step mirrored so the doubles agree bitwise
-    "q45_categorical_drift" ->
-      s"""WITH refc AS (
-         | SELECT sr_hz, codec AS cat, COUNT(*) AS ref_n
-         | FROM $clips GROUP BY 1, 2
-         |), curc AS (
-         | SELECT sr_hz,
-         |   CASE WHEN CAST(substr(clip_id, 6) AS BIGINT) % 5 = 2
-         |     AND codec = 'pcm_s16le' AND sr_hz = 16000
-         |     THEN 'flac' ELSE codec END AS cat,
-         |   COUNT(*) AS cur_n
-         | FROM $clips GROUP BY 1, 2
-         |), grid AS (
-         | SELECT COALESCE(r.sr_hz, c.sr_hz) AS sr_hz,
-         |   COALESCE(r.cat, c.cat) AS cat,
-         |   COALESCE(r.ref_n, 0) AS ref_n, COALESCE(c.cur_n, 0) AS cur_n
-         | FROM refc r FULL OUTER JOIN curc c
-         |   ON r.sr_hz = c.sr_hz AND r.cat = c.cat
-         |), shifts AS (
-         | SELECT sr_hz, cat,
-         |   ABS(CAST(cur_n AS DOUBLE)
-         |       / CAST(SUM(cur_n) OVER (PARTITION BY sr_hz) AS DOUBLE)
-         |     - CAST(ref_n AS DOUBLE)
-         |       / CAST(SUM(ref_n) OVER (PARTITION BY sr_hz) AS DOUBLE)) AS shift,
-         |   COUNT(*) OVER (PARTITION BY sr_hz) AS n_cat
-         | FROM grid
-         |)
-         |SELECT sr_hz, n_cat AS n_categories, shift AS max_share_shift,
-         |  cat AS top_shift_category, shift > 0.05 AS drifted
-         |FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY sr_hz
-         |        ORDER BY shift DESC, cat ASC) AS rn FROM shifts)
-         |WHERE rn = 1""".stripMargin,
-
-    // words-per-second band from the stored columns alone — both engines
-    // compute tokens * 1000 / dur_ms in double and bucket with the same
-    // strict inequalities
-    "q46_transcript_plausibility" ->
-      s"""WITH c AS (
-         | SELECT codec,
-         |   CASE WHEN transcript IS NULL OR dur_ms IS NULL OR dur_ms <= 0
-         |     THEN NULL
-         |     ELSE CAST(LEN(STR_SPLIT(transcript, ' ')) AS DOUBLE)
-         |       * CAST(1000.0 AS DOUBLE) / CAST(dur_ms AS DOUBLE) END AS wps
-         | FROM $clips
-         |)
-         |SELECT codec, COUNT(*) AS total_rows,
-         |  CAST(SUM(CASE WHEN wps IS NOT NULL AND NOT wps < 0.5
-         |    AND NOT wps > 40.0 THEN 1 ELSE 0 END) AS BIGINT) AS ok_rows,
-         |  CAST(SUM(CASE WHEN wps < 0.5 THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS too_slow_rows,
-         |  CAST(SUM(CASE WHEN wps > 40.0 THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS too_fast_rows,
-         |  CAST(SUM(CASE WHEN wps IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS unscorable_rows
-         |FROM c GROUP BY codec""".stripMargin,
-
-    // word 5-gram overlap against the 10-doc benchmark suite — the q31
-    // shingle recipe (whole-text fallback under 5 tokens), then a plain
-    // ngram equijoin + two COUNT(DISTINCT)s
-    "q47_decontamination" ->
-      s"""WITH t AS (
-         | SELECT doc_id, str_split(text, ' ') AS toks FROM documents
-         |), s AS (
-         | SELECT doc_id, list_distinct(CASE WHEN len(toks) < 5
-         |   THEN [array_to_string(toks, ' ')]
-         |   ELSE list_transform(generate_series(1, len(toks) - 4),
-         |          i -> array_to_string(toks[i:i+4], ' ')) END) AS sh
-         | FROM t
-         |), cng AS (
-         | SELECT doc_id, unnest(sh) AS ng FROM s
-         |), bng AS (
-         | SELECT DISTINCT bench_id, ng FROM
-         |   (SELECT doc_id AS bench_id, unnest(sh) AS ng FROM s
-         |    WHERE doc_id < 500 AND doc_id % 50 = 7)
-         |)
-         |SELECT c.doc_id,
-         |  COUNT(DISTINCT b.bench_id) AS benchmarks_hit,
-         |  COUNT(DISTINCT c.ng) AS ngrams_hit
-         |FROM cng c JOIN bng b ON c.ng = b.ng
-         |GROUP BY c.doc_id""".stripMargin,
-
-    // md5-derived 60-bit uniform (the q15 hex recipe), one salt per
-    // decision; dyadic band edges and rates make every membership compare
-    // exact in double on both engines
-    "q48_split_sample" ->
-      s"""WITH u AS (
-         | SELECT codec,
-         |   CAST(CONCAT('0x', substr(md5(clip_id || ':split'), 1, 15))
-         |     AS BIGINT) / 1152921504606846976.0 AS u_split,
-         |   CAST(CONCAT('0x', substr(md5(clip_id || ':sample'), 1, 15))
-         |     AS BIGINT) / 1152921504606846976.0 AS u_sample
-         | FROM $clips
-         |), labeled AS (
-         | SELECT codec,
-         |   CASE WHEN u_split < 0.75 THEN 'train'
-         |        WHEN u_split < 0.875 THEN 'val'
-         |        WHEN u_split < 1.0 THEN 'test' END AS split,
-         |   CASE WHEN u_sample < (CASE WHEN codec = 'flac' THEN 0.5
-         |     WHEN codec = 'pcm_mulaw' THEN 0.25 ELSE 0.0625 END)
-         |     THEN 1 ELSE 0 END AS sampled
-         | FROM u
-         |)
-         |SELECT codec, split, COUNT(*) AS total_rows,
-         |  CAST(SUM(sampled) AS BIGINT) AS sampled_rows
-         |FROM labeled GROUP BY codec, split""".stripMargin,
-
-    // the identical first-failing-rule when-chain; stopword list and
-    // quality-score terms mirror TextAnalysis (the q10-proven recipe).
-    // Every predicate is wrapped COALESCE(pred, FALSE) to mirror
-    // FilterReport's NULL-predicate-fails-the-rule semantics — a bare
-    // NOT(NULL) would fall through every WHEN and land a NULL text in
-    // '_kept' where the engine attributes it to the first rule
-    "q49_quality_filter_report" ->
-      s"""WITH a AS (
-         | SELECT CASE
-         |   WHEN NOT COALESCE(len(str_split(text, ' ')) >= 20, FALSE)
-         |     THEN 'too_short'
-         |   WHEN NOT COALESCE(len(text) <= 500, FALSE) THEN 'too_long'
-         |   WHEN NOT COALESCE((CASE WHEN len(str_split(text, ' ')) = 0
-         |     THEN 0.0
-         |     ELSE CAST(len(list_filter(str_split(text, ' '), t -> t IN
-         |       ('the','a','an','and','or','of','to','in','is','it',
-         |        'that','for','on','with','as'))) AS DOUBLE)
-         |       / len(str_split(text, ' ')) END) >= 0.05, FALSE)
-         |     THEN 'low_stopword'
-         |   WHEN NOT COALESCE((CASE WHEN len(text) >= 200 THEN 1 ELSE 0 END
-         |     + CASE WHEN len(str_split(text, ' ')) >= 40 THEN 1 ELSE 0 END
-         |     + CASE WHEN contains(text, 'the') THEN 1 ELSE 0 END) >= 2,
-         |     FALSE)
-         |     THEN 'low_quality'
-         |   ELSE '_kept' END AS removed_by
-         | FROM documents
-         |), g AS (SELECT removed_by, COUNT(*) AS n FROM a GROUP BY 1),
-         |t AS (SELECT
-         |  COALESCE((SELECT n FROM g WHERE removed_by = 'too_short'), 0) AS r1,
-         |  COALESCE((SELECT n FROM g WHERE removed_by = 'too_long'), 0) AS r2,
-         |  COALESCE((SELECT n FROM g WHERE removed_by = 'low_stopword'), 0) AS r3,
-         |  COALESCE((SELECT n FROM g WHERE removed_by = 'low_quality'), 0) AS r4,
-         |  (SELECT COUNT(*) FROM documents) AS tot)
-         |SELECT 'too_short' AS rule, r1 AS removed, tot - r1 AS surviving FROM t
-         |UNION ALL
-         |SELECT 'too_long', r2, tot - r1 - r2 FROM t
-         |UNION ALL
-         |SELECT 'low_stopword', r3, tot - r1 - r2 - r3 FROM t
-         |UNION ALL
-         |SELECT 'low_quality', r4, tot - r1 - r2 - r3 - r4 FROM t""".stripMargin,
-
-    // exact pairs (the q14 recipe) transitively closed with a recursive
-    // CTE; component id = min reachable doc_id, size over the membership
-    "q50_neardup_components" ->
-      s"""WITH RECURSIVE t AS (
-         | SELECT doc_id, str_split(text, ' ') AS toks FROM documents
-         |), s AS (
-         | SELECT doc_id, list_distinct(CASE WHEN len(toks) < 3
-         |   THEN [array_to_string(toks, ' ')]
-         |   ELSE list_transform(generate_series(1, len(toks) - 2),
-         |          i -> array_to_string(toks[i:i+2], ' ')) END) AS sh
-         | FROM t
-         |), pairs AS (
-         | SELECT a.doc_id AS id_a, b.doc_id AS id_b
-         | FROM s a JOIN s b ON a.doc_id < b.doc_id
-         | WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-         |     / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.8
-         |), edges AS (
-         | SELECT id_a AS src, id_b AS dst FROM pairs
-         | UNION
-         | SELECT id_b AS src, id_a AS dst FROM pairs
-         |), nodes AS (
-         | SELECT DISTINCT src AS node FROM edges
-         |), reach(node, r) AS (
-         | SELECT node, node FROM nodes
-         | UNION
-         | SELECT reach.node, e.dst FROM reach JOIN edges e ON reach.r = e.src
-         |), comp AS (
-         | SELECT node AS doc_id, MIN(r) AS component_id FROM reach GROUP BY node
-         |)
-         |SELECT doc_id, component_id,
-         |  COUNT(*) OVER (PARTITION BY component_id) AS component_size
-         |FROM comp""".stripMargin,
-
-    // incremental dedup replayed over (corpus ∪ batch): corpus keeper per
-    // fingerprint (the q12 recipe), batch defined by the same id-shift +
-    // fresh-doc rules, status by store membership then batch-first-id
-    "q51_incremental_dedup" ->
-      """WITH corpus AS (
-        | SELECT MD5(LOWER(TRIM(REGEXP_REPLACE(text, '\s+', ' ', 'g')))) AS fp,
-        |   MIN(doc_id) AS keeper_id
-        | FROM documents GROUP BY 1
-        |), batch AS (
-        | SELECT doc_id + 300000000 AS doc_id, text FROM documents
-        | WHERE doc_id >= 100 AND doc_id < 150
-        | UNION ALL
-        | SELECT 400000000 + i AS doc_id,
-        |   'freshdoc' || CAST(i % 5 AS VARCHAR) AS text
-        | FROM (SELECT unnest(generate_series(0, 9)) AS i)
-        |), bfp0 AS (
-        | SELECT doc_id,
-        |   MD5(LOWER(TRIM(REGEXP_REPLACE(text, '\s+', ' ', 'g')))) AS fp
-        | FROM batch
-        |), bfp AS (
-        | SELECT doc_id, fp, MIN(doc_id) OVER (PARTITION BY fp) AS first_id
-        | FROM bfp0
-        |)
-        |SELECT b.doc_id,
-        | CASE WHEN c.keeper_id IS NOT NULL THEN 'dup_of_corpus'
-        |      WHEN b.doc_id <> b.first_id THEN 'dup_in_batch'
-        |      ELSE 'new' END AS status,
-        | CASE WHEN c.keeper_id IS NOT NULL THEN c.keeper_id
-        |      WHEN b.doc_id <> b.first_id THEN b.first_id END AS dup_of
-        |FROM bfp b LEFT JOIN corpus c ON b.fp = c.fp""".stripMargin,
-
-    // repetition rules replayed with the identical plants + INTEGER
-    // thresholds; ngram list is the MULTISET form (no list_distinct —
-    // duplicates are the signal); q49's COALESCE(pred, FALSE) discipline
-    "q52_repetition_filter" ->
-      """WITH p AS (
-        | SELECT doc_id,
-        |   CASE WHEN doc_id % 13 = 6 THEN t1 || repeat(' buy gold now', 20)
-        |     ELSE t1 END AS text
-        | FROM (SELECT doc_id,
-        |   CASE WHEN doc_id % 7 = 3 THEN text || chr(10) || text
-        |     ELSE text END AS t1
-        |   FROM documents)
-        |), m AS (
-        | SELECT doc_id,
-        |   str_split(text, chr(10)) AS lns,
-        |   str_split(text, ' ') AS toks,
-        |   CASE WHEN len(str_split(text, ' ')) < 3
-        |     THEN [array_to_string(str_split(text, ' '), ' ')]
-        |     ELSE list_transform(generate_series(1, len(str_split(text, ' ')) - 2),
-        |       i -> array_to_string(str_split(text, ' ')[i:i+2], ' ')) END AS ng
-        | FROM p
-        |), a AS (
-        | SELECT CASE
-        |   WHEN NOT COALESCE(
-        |     (len(lns) - len(list_distinct(lns))) * 2 < len(lns), FALSE)
-        |     THEN 'dup_lines'
-        |   WHEN NOT COALESCE(len(ng) < 10 OR
-        |     list_max(list_transform(ng, x -> len(list_filter(ng, y -> y = x))))
-        |       * 10 <= len(ng), FALSE)
-        |     THEN 'repeated_ngram'
-        |   WHEN NOT COALESCE((CASE WHEN len(toks) = 0 THEN 0.0
-        |     ELSE CAST(len(list_filter(toks, t -> t IN
-        |       ('the','a','an','and','or','of','to','in','is','it',
-        |        'that','for','on','with','as'))) AS DOUBLE)
-        |       / len(toks) END) >= 0.05, FALSE)
-        |     THEN 'low_stopword'
-        |   ELSE '_kept' END AS removed_by
-        | FROM m
-        |), g AS (SELECT removed_by, COUNT(*) AS n FROM a GROUP BY 1),
-        |t AS (SELECT
-        |  COALESCE((SELECT n FROM g WHERE removed_by = 'dup_lines'), 0) AS r1,
-        |  COALESCE((SELECT n FROM g WHERE removed_by = 'repeated_ngram'), 0) AS r2,
-        |  COALESCE((SELECT n FROM g WHERE removed_by = 'low_stopword'), 0) AS r3,
-        |  (SELECT COUNT(*) FROM documents) AS tot)
-        |SELECT 'dup_lines' AS rule, r1 AS removed, tot - r1 AS surviving FROM t
-        |UNION ALL
-        |SELECT 'repeated_ngram', r2, tot - r1 - r2 FROM t
-        |UNION ALL
-        |SELECT 'low_stopword', r3, tot - r1 - r2 - r3 FROM t""".stripMargin,
-
-    // the q50 recursive-CTE closure grouped per component: size, min id
-    // (must equal the component id — the invariant the Spark side earns
-    // via a real aggregate), removals = size - 1
-    "q53_cluster_keepers" ->
-      s"""WITH RECURSIVE t AS (
-         | SELECT doc_id, str_split(text, ' ') AS toks FROM documents
-         |), s AS (
-         | SELECT doc_id, list_distinct(CASE WHEN len(toks) < 3
-         |   THEN [array_to_string(toks, ' ')]
-         |   ELSE list_transform(generate_series(1, len(toks) - 2),
-         |          i -> array_to_string(toks[i:i+2], ' ')) END) AS sh
-         | FROM t
-         |), pairs AS (
-         | SELECT a.doc_id AS id_a, b.doc_id AS id_b
-         | FROM s a JOIN s b ON a.doc_id < b.doc_id
-         | WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-         |     / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.8
-         |), edges AS (
-         | SELECT id_a AS src, id_b AS dst FROM pairs
-         | UNION
-         | SELECT id_b AS src, id_a AS dst FROM pairs
-         |), nodes AS (
-         | SELECT DISTINCT src AS node FROM edges
-         |), reach(node, r) AS (
-         | SELECT node, node FROM nodes
-         | UNION
-         | SELECT reach.node, e.dst FROM reach JOIN edges e ON reach.r = e.src
-         |), comp AS (
-         | SELECT node AS doc_id, MIN(r) AS component_id FROM reach GROUP BY node
-         |)
-         |SELECT component_id, COUNT(*) AS component_size,
-         |  MIN(doc_id) AS keeper_id, COUNT(*) - 1 AS removed
-         |FROM comp GROUP BY component_id""".stripMargin,
-
-    // PII census replayed: identical plants (CASE order = the Spark when
-    // chain), identical RE2-portable patterns via regexp_extract_all
-    "q54_pii_census" ->
-      """WITH p AS (
-        | SELECT CASE
-        |   WHEN doc_id % 41 = 5 THEN text || ' contact user'
-        |     || CAST(doc_id AS VARCHAR) || '@example.com now'
-        |   WHEN doc_id % 43 = 6 THEN text || ' call 555-867-5309 or 555-123-4567 today'
-        |   WHEN doc_id % 47 = 8 THEN text || ' host 10.0.0.77 and 192.168.1.77 up'
-        |   ELSE text END AS text
-        | FROM documents
-        |), e AS (
-        | SELECT 'email' AS pii_class, len(regexp_extract_all(text,
-        |   '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+[.][A-Za-z]{2,}')) AS m FROM p
-        | UNION ALL
-        | SELECT 'phone', len(regexp_extract_all(text,
-        |   '[0-9]{3}-[0-9]{3}-[0-9]{4}')) FROM p
-        | UNION ALL
-        | SELECT 'ipv4', len(regexp_extract_all(text,
-        |   '([0-9]{1,3}[.]){3}[0-9]{1,3}')) FROM p
-        |)
-        |SELECT pii_class,
-        |  CAST(SUM(CASE WHEN m > 0 THEN 1 ELSE 0 END) AS BIGINT) AS docs_hit,
-        |  CAST(SUM(m) AS BIGINT) AS total_matches
-        |FROM e GROUP BY pii_class""".stripMargin,
-
-    // language-mix drift: the q13 lang-id recipe applied to both sides
-    // (current = planted French override in src3), then the q45 grid
-    // arithmetic grouped by source
-    "q55_langmix_drift" -> {
-      def langTable(rel: String): String =
-        s"""(SELECT source,
-           |  CASE WHEN regexp_matches(text, '[\\p{Han}\\p{Hiragana}\\p{Katakana}]') THEN 'zh'
-           |       WHEN greatest(s_en, s_fr, s_es, s_de) > 0 THEN
-           |         CASE WHEN s_fr >= s_es AND s_fr >= s_en AND s_fr >= s_de THEN 'fr'
-           |              WHEN s_es >= s_en AND s_es >= s_de THEN 'es'
-           |              WHEN s_en >= s_de THEN 'en'
-           |              ELSE 'de' END
-           |       ELSE 'und' END AS cat
-           | FROM (
-           |  SELECT source, text,
-           |   len(list_filter(toks, x -> x IN ('the','and','of','to','is','in','that','it','was','for'))) AS s_en,
-           |   len(list_filter(toks, x -> x IN ('le','la','les','et','des','une','est','dans','qui','pas'))) AS s_fr,
-           |   len(list_filter(toks, x -> x IN ('el','los','las','una','que','por','con','para','es','del'))) AS s_es,
-           |   len(list_filter(toks, x -> x IN ('der','die','das','und','ist','nicht','ein','mit','von','zu'))) AS s_de
-           |  FROM (SELECT source, text,
-           |    list_transform(str_split(lower(text), ' '),
-           |      x -> regexp_replace(x, '[^\\p{L}]', '', 'g')) AS toks FROM $rel)
-           | ))""".stripMargin
-      s"""WITH curd AS (
-         | SELECT source,
-         |   CASE WHEN source = 'src3' AND doc_id % 3 = 1
-         |     THEN 'le la les et des une est dans qui pas'
-         |     ELSE text END AS text
-         | FROM documents
-         |), refl AS (SELECT * FROM ${langTable("documents")}),
-         |curl AS (SELECT * FROM ${langTable("curd")}),
-         |refc AS (SELECT source, cat, COUNT(*) AS ref_n FROM refl GROUP BY 1, 2),
-         |curc AS (SELECT source, cat, COUNT(*) AS cur_n FROM curl GROUP BY 1, 2),
-         |grid AS (
-         | SELECT COALESCE(r.source, c.source) AS source,
-         |   COALESCE(r.cat, c.cat) AS cat,
-         |   COALESCE(r.ref_n, 0) AS ref_n, COALESCE(c.cur_n, 0) AS cur_n
-         | FROM refc r FULL OUTER JOIN curc c
-         |   ON r.source = c.source AND r.cat = c.cat
-         |), shifts AS (
-         | SELECT source, cat,
-         |   ABS(CAST(cur_n AS DOUBLE)
-         |       / CAST(SUM(cur_n) OVER (PARTITION BY source) AS DOUBLE)
-         |     - CAST(ref_n AS DOUBLE)
-         |       / CAST(SUM(ref_n) OVER (PARTITION BY source) AS DOUBLE)) AS shift,
-         |   COUNT(*) OVER (PARTITION BY source) AS n_cat
-         | FROM grid
-         |)
-         |SELECT source, n_cat AS n_categories, shift AS max_share_shift,
-         |  cat AS top_shift_category, shift > 0.05 AS drifted
-         |FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY source
-         |        ORDER BY shift DESC, cat ASC) AS rn FROM shifts)
-         |WHERE rn = 1""".stripMargin
-    },
-
-    // every band is a pure function of (id arithmetic, codec) — measured
-    // over the full feasible parameter space by QualityBandSweep; the
-    // Spark side earns these rows by decoding five formats and measuring
-    // RMS/clip/silence/DC per clip
-    "q56_quality_census" ->
-      s"""WITH c AS (
-         | SELECT CASE WHEN CAST(substr(clip_id, 6) AS BIGINT) % 5000
-         |     IN (21, 27) THEN 'pcm_s16le' ELSE codec END AS codec,
-         |   CAST(substr(clip_id, 6) AS BIGINT) % 5000 AS m,
-         |   codec AS codec0
-         | FROM $clips
-         |)
-         |SELECT codec,
-         |  CASE WHEN m = 21 THEN 'quiet'
-         |       WHEN m = 27 THEN 'clipped'
-         |       WHEN m = 17 THEN
-         |         CASE codec0 WHEN 'flac' THEN 'undecodable'
-         |              WHEN 'pcm_mulaw' THEN 'clipped'
-         |              WHEN 'pcm_alaw' THEN 'dc_bias'
-         |              ELSE 'half_silent' END
-         |       ELSE 'nominal' END AS band,
-         |  COUNT(*) AS clips
-         |FROM c GROUP BY codec, band""".stripMargin,
-
-    // identical plants, then the same first-(doc,pos)-wins rule via a
-    // window — equivalent to the engine's min(struct) aggregate because
-    // (doc_id, pos) is unique
-    "q57_line_dedup" ->
-      s"""WITH p AS (
-         | SELECT doc_id, text
-         |   || CASE WHEN doc_id % 3 = 0
-         |        THEN chr(10) || 'follow us on example social' ELSE '' END
-         |   || CASE WHEN doc_id % 5 = 2
-         |        THEN chr(10) || 'all rights reserved example' ELSE '' END
-         |   AS text
-         | FROM documents
-         |), t AS (SELECT doc_id, str_split(text, chr(10)) AS ls FROM p),
-         |l AS (SELECT doc_id,
-         |        unnest(generate_series(1, len(ls))) AS pos,
-         |        unnest(ls) AS line FROM t),
-         |r AS (SELECT doc_id,
-         |        ROW_NUMBER() OVER (PARTITION BY line
-         |          ORDER BY doc_id, pos) AS rn FROM l),
-         |d AS (SELECT doc_id, COUNT(*) AS line_count,
-         |        CAST(SUM(CASE WHEN rn > 1 THEN 1 ELSE 0 END) AS BIGINT)
-         |          AS lines_removed
-         |      FROM r GROUP BY doc_id)
-         |SELECT doc_id, line_count, lines_removed,
-         |  lines_removed = line_count AS emptied
-         |FROM d WHERE lines_removed > 0""".stripMargin,
-
-    // identical batch plants, exact shingle Jaccard over (corpus ∪ batch),
-    // same classification precedence (corpus match outranks batch match,
-    // keeper = smallest matching id via the rn=1 window — Spark's
-    // min(struct) equivalent because each (batch, candidate) pair is
-    // unique); the Spark side must find the same pairs through the
-    // banded-store join (q14's LSH-capture margin argument)
-    "q58_incremental_neardup" ->
-      """WITH batch AS (
-        | SELECT CAST(doc_id + 500000000 AS BIGINT) AS doc_id, text
-        | FROM documents WHERE doc_id >= 100 AND doc_id < 120
-        | UNION ALL
-        | SELECT CAST(doc_id + 510000000 AS BIGINT), text || ' graftnoveltoken'
-        | FROM documents WHERE doc_id >= 120 AND doc_id < 140
-        | UNION ALL
-        | SELECT CAST(id AS BIGINT), t FROM (VALUES
-        |  (600000000, 'quantal vortex pelican drift mauve cordial zephyr lattice bronze orchid velvet marble sundial cricket harbor glade'),
-        |  (600000001, 'quantal vortex pelican drift mauve cordial zephyr lattice bronze orchid velvet marble sundial cricket harbor glade'),
-        |  (600000002, 'tundra ember quartz falcon meridian cobalt saffron juniper mosaic tidal prism heron lilac granite meadow cinder plume ravine sonnet birch'),
-        |  (600000003, 'tundra ember quartz falcon meridian cobalt saffron juniper mosaic tidal prism heron lilac granite meadow cinder plume ravine sonnet birch extratok'),
-        |  (600000004, 'solitary gossamer twilight anvil nectar sphinx'),
-        |  (600000005, 'cascade obsidian whisper fathom lyric dune')) AS v(id, t)
-        |), bs AS (
-        | SELECT doc_id, list_distinct(CASE WHEN len(toks) < 3
-        |   THEN [array_to_string(toks, ' ')]
-        |   ELSE list_transform(generate_series(1, len(toks) - 2),
-        |          i -> array_to_string(toks[i:i+2], ' ')) END) AS sh
-        | FROM (SELECT doc_id, str_split(text, ' ') AS toks FROM batch)
-        |), cs AS (
-        | SELECT doc_id, list_distinct(CASE WHEN len(toks) < 3
-        |   THEN [array_to_string(toks, ' ')]
-        |   ELSE list_transform(generate_series(1, len(toks) - 2),
-        |          i -> array_to_string(toks[i:i+2], ' ')) END) AS sh
-        | FROM (SELECT doc_id, str_split(text, ' ') AS toks FROM documents)
-        |), cj AS (
-        | SELECT b.doc_id, c.doc_id AS keeper,
-        |   CAST(len(list_intersect(b.sh, c.sh)) AS DOUBLE)
-        |     / len(list_distinct(list_concat(b.sh, c.sh))) AS j
-        | FROM bs b JOIN cs c
-        |   ON CAST(len(list_intersect(b.sh, c.sh)) AS DOUBLE)
-        |     / len(list_distinct(list_concat(b.sh, c.sh))) >= 0.8
-        |), cbest AS (
-        | SELECT doc_id, keeper, j FROM (
-        |   SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY keeper) AS rn
-        |   FROM cj) WHERE rn = 1
-        |), bj AS (
-        | SELECT hi.doc_id, lo.doc_id AS keeper,
-        |   CAST(len(list_intersect(lo.sh, hi.sh)) AS DOUBLE)
-        |     / len(list_distinct(list_concat(lo.sh, hi.sh))) AS j
-        | FROM bs lo JOIN bs hi ON lo.doc_id < hi.doc_id
-        |  AND CAST(len(list_intersect(lo.sh, hi.sh)) AS DOUBLE)
-        |     / len(list_distinct(list_concat(lo.sh, hi.sh))) >= 0.8
-        |), bbest AS (
-        | SELECT doc_id, keeper, j FROM (
-        |   SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY keeper) AS rn
-        |   FROM bj) WHERE rn = 1
-        |)
-        |SELECT b.doc_id,
-        | CASE WHEN cb.keeper IS NOT NULL THEN 'near_dup_of_corpus'
-        |      WHEN bb.keeper IS NOT NULL THEN 'near_dup_in_batch'
-        |      ELSE 'new' END AS status,
-        | COALESCE(cb.keeper, bb.keeper) AS dup_of,
-        | ROUND(CASE WHEN cb.keeper IS NOT NULL THEN cb.j ELSE bb.j END, 6) AS jaccard
-        |FROM batch b
-        |LEFT JOIN cbest cb ON b.doc_id = cb.doc_id
-        |LEFT JOIN bbest bb ON b.doc_id = bb.doc_id""".stripMargin,
-
-    // every verdict is a pure function of (id arithmetic, codec) —
-    // measured over the full feasible parameter space by AudioTrimSweep
-    // (trimming classes ≥ 1.75× the 5 ms line, keep classes ≥ 40× under);
-    // the Spark side earns these rows by decoding five formats and
-    // measuring the endpoint runs
-    "q59_trim_census" ->
-      s"""WITH c AS (
-         | SELECT CASE WHEN CAST(substr(clip_id, 6) AS BIGINT) % 5000
-         |     IN (37, 41) THEN 'pcm_s16le' ELSE codec END AS codec,
-         |   CAST(substr(clip_id, 6) AS BIGINT) % 5000 AS m,
-         |   codec AS codec0
-         | FROM $clips
-         |)
-         |SELECT codec,
-         |  CASE WHEN m = 37 THEN 'trim_both'
-         |       WHEN m = 41 THEN 'all_silence'
-         |       WHEN m = 17 THEN
-         |         CASE codec0 WHEN 'flac' THEN 'undecodable'
-         |              WHEN 'pcm_s16le' THEN 'trim_trail'
-         |              WHEN 'adpcm_ima' THEN 'trim_trail'
-         |              ELSE 'keep' END
-         |       ELSE 'keep' END AS verdict,
-         |  COUNT(*) AS clips
-         |FROM c GROUP BY codec, verdict""".stripMargin,
-
-    // q50's recursive-CTE closure feeds q48's md5 band arithmetic, keyed
-    // by COALESCE(component, own id) — the leakage-safe group key
-    "q60_leakage_safe_splits" ->
-      s"""WITH RECURSIVE t AS (
-         | SELECT doc_id, str_split(text, ' ') AS toks FROM documents
-         |), s AS (
-         | SELECT doc_id, list_distinct(CASE WHEN len(toks) < 3
-         |   THEN [array_to_string(toks, ' ')]
-         |   ELSE list_transform(generate_series(1, len(toks) - 2),
-         |          i -> array_to_string(toks[i:i+2], ' ')) END) AS sh
-         | FROM t
-         |), pairs AS (
-         | SELECT a.doc_id AS id_a, b.doc_id AS id_b
-         | FROM s a JOIN s b ON a.doc_id < b.doc_id
-         | WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-         |     / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.8
-         |), edges AS (
-         | SELECT id_a AS src, id_b AS dst FROM pairs
-         | UNION
-         | SELECT id_b AS src, id_a AS dst FROM pairs
-         |), nodes AS (
-         | SELECT DISTINCT src AS node FROM edges
-         |), reach(node, r) AS (
-         | SELECT node, node FROM nodes
-         | UNION
-         | SELECT reach.node, e.dst FROM reach JOIN edges e ON reach.r = e.src
-         |), comp AS (
-         | SELECT node AS doc_id, MIN(r) AS component_id FROM reach GROUP BY node
-         |), k AS (
-         | SELECT d.doc_id, COALESCE(c.component_id, d.doc_id) AS key
-         | FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id
-         |)
-         |SELECT doc_id,
-         |  CASE WHEN u < 0.75 THEN 'train'
-         |       WHEN u < 0.875 THEN 'val'
-         |       WHEN u < 1.0 THEN 'test' END AS split
-         |FROM (SELECT doc_id,
-         |   CAST(CONCAT('0x', substr(md5(CAST(key AS VARCHAR) || ':split'),
-         |     1, 15)) AS BIGINT) / 1152921504606846976.0 AS u
-         | FROM k)""".stripMargin,
-
-    // the q56 corrupt-class signatures (measured, QualityBandSweep) under
-    // the constant event hour — no plants, the stream's own injections
-    "q61_streaming_quality" ->
-      s"""SELECT '2024-01-01 00:00:00' AS hr, codec,
-         |  CASE WHEN m = 17 THEN
-         |    CASE codec WHEN 'flac' THEN 'undecodable'
-         |         WHEN 'pcm_mulaw' THEN 'clipped'
-         |         WHEN 'pcm_alaw' THEN 'dc_bias'
-         |         ELSE 'half_silent' END
-         |  ELSE 'nominal' END AS band,
-         |  COUNT(*) AS clips
-         |FROM (SELECT codec, CAST(substr(clip_id, 6) AS BIGINT) % 5000 AS m
-         |      FROM $clips)
-         |GROUP BY codec, band""".stripMargin,
-
-    // the naive single-window prefix sum the distributed operator
-    // replaces — exact, so the two must agree row-for-row
-    "q62_sequence_packing" ->
-      """WITH o AS (
-        | SELECT doc_id, CAST(COALESCE(n_chars, 0) AS BIGINT) AS n_chars,
-        |   CAST(COALESCE(SUM(CAST(COALESCE(n_chars, 0) AS BIGINT))
-        |     OVER (ORDER BY doc_id
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-        |     0) AS BIGINT) AS token_offset
-        | FROM documents
-        |)
-        |SELECT doc_id, n_chars, token_offset,
-        |  token_offset // 4096 AS chunk_first,
-        |  (token_offset + GREATEST(n_chars, 1) - 1) // 4096 AS chunk_last,
-        |  CAST((token_offset + GREATEST(n_chars, 1) - 1) // 4096
-        |    > token_offset // 4096 AS BIGINT) AS crosses_chunk
-        |FROM o""".stripMargin,
-
-    // identical md5-uniform survival arithmetic per (doc, copy) pair;
-    // dyadic rates make u < r − k exact in double on both engines
-    "q63_mixture_resample" ->
-      """WITH e AS (
-        | SELECT source, k.k,
-        |   CASE source WHEN 'src0' THEN 2.5 WHEN 'src1' THEN 1.25
-        |     WHEN 'src2' THEN 0.5 WHEN 'src3' THEN 0.0 ELSE 1.0 END AS r,
-        |   CAST(CONCAT('0x', substr(md5(CAST(doc_id AS VARCHAR)
-        |     || ':mix:' || CAST(k.k AS VARCHAR)), 1, 15)) AS BIGINT)
-        |     / 1152921504606846976.0 AS u
-        | FROM documents CROSS JOIN (SELECT unnest([0, 1, 2]) AS k) k
-        |)
-        |SELECT source,
-        |  CAST(SUM(CASE WHEN k = 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS in_rows,
-        |  CAST(SUM(CASE WHEN u < r - k THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS out_rows
-        |FROM e GROUP BY source""".stripMargin,
-
-    // the naive full-vocabulary count — the sketch-then-exact operator
-    // must reproduce it exactly (no false negatives, exact second pass)
-    "q64_heavy_hitters" ->
-      """SELECT t AS token, COUNT(*) AS occurrences
-        |FROM (SELECT unnest(str_split(text, ' ')) AS t FROM documents)
-        |GROUP BY t HAVING COUNT(*) >= 500""".stripMargin,
-
-    // every band is a pure function of (id arithmetic, codec): the m=13
-    // sr-column lie decodes fine but mismatches, zeroed-flac corrupt rows
-    // fail decode, everything else (incl. zeroed pcm/G.711/ADPCM and
-    // duplicate-id rows) keeps a consistent container
-    "q65_container_census" ->
-      s"""SELECT codec,
-         |  CASE WHEN m = 17 AND codec = 'flac' THEN 'undecodable'
-         |       WHEN m = 13 THEN 'sr_mismatch'
-         |       ELSE 'ok' END AS band,
-         |  COUNT(*) AS clips
-         |FROM (SELECT codec, CAST(substr(clip_id, 6) AS BIGINT) % 5000 AS m
-         |      FROM $clips)
-         |GROUP BY codec, band""".stripMargin,
-
-    // every band a pure function of id arithmetic + codec under the
-    // ResampleSweep-measured margins: corrupt flac fails decode, corrupt
-    // pcm/G.711/ADPCM land ≤ 0.6928 < 0.85 (degraded), everything else —
-    // incl. duplicate-id rows (1 Hz off, unresolvable) and m=13 rows
-    // (conversion uses the container rate, not the lying column) —
-    // clears 0.9928 ≥ 0.85
-    "q66_resample_census" ->
-      s"""SELECT codec,
-         |  CASE WHEN m = 17 AND codec = 'flac' THEN 'undecodable'
-         |       WHEN m = 17 THEN 'degraded'
-         |       ELSE 'resample_ok' END AS band,
-         |  COUNT(*) AS clips
-         |FROM (SELECT codec, CAST(substr(clip_id, 6) AS BIGINT) % 5000 AS m
-         |      FROM $clips)
-         |GROUP BY codec, band""".stripMargin,
-
-    // disjoint residue plants → every band a pure function of vec_id;
-    // organic rows are measured unit-norm (±2e-7) so they land ok
-    "q67_embedding_validate" ->
-      """SELECT band, COUNT(*) AS vecs FROM (
-        | SELECT CASE WHEN vec_id % 97 = 23 THEN 'null_vector'
-        |   WHEN vec_id % 97 = 17 THEN 'wrong_dim'
-        |   WHEN vec_id % 97 = 5 THEN 'non_finite'
-        |   WHEN vec_id % 97 = 31 THEN 'null_element'
-        |   WHEN vec_id % 97 = 11 THEN 'zero_vector'
-        |   WHEN vec_id % 97 = 29 THEN 'not_unit_norm'
-        |   ELSE 'ok' END AS band
-        | FROM embeddings)
-        |GROUP BY band""".stripMargin,
-
-    // q47's oracle verbatim: the bloom is only a pre-filter — the exact
-    // confirm join makes the two variants agree row-for-row at any fpp
-    "q68_decontamination_bloom" ->
-      s"""WITH t AS (
-         | SELECT doc_id, str_split(text, ' ') AS toks FROM documents
-         |), s AS (
-         | SELECT doc_id, list_distinct(CASE WHEN len(toks) < 5
-         |   THEN [array_to_string(toks, ' ')]
-         |   ELSE list_transform(generate_series(1, len(toks) - 4),
-         |          i -> array_to_string(toks[i:i+4], ' ')) END) AS sh
-         | FROM t
-         |), cng AS (
-         | SELECT doc_id, unnest(sh) AS ng FROM s
-         |), bng AS (
-         | SELECT DISTINCT bench_id, ng FROM
-         |   (SELECT doc_id AS bench_id, unnest(sh) AS ng FROM s
-         |    WHERE doc_id < 500 AND doc_id % 50 = 7)
-         |)
-         |SELECT c.doc_id,
-         |  COUNT(DISTINCT b.bench_id) AS benchmarks_hit,
-         |  COUNT(DISTINCT c.ng) AS ngrams_hit
-         |FROM cng c JOIN bng b ON c.ng = b.ng
-         |GROUP BY c.doc_id""".stripMargin,
-
-    // q63's membership arithmetic feeding q62's naive global window over
-    // the survivors — the composed oracle for the composed operators
-    "q69_mixture_packing" ->
-      """WITH e AS (
-        | SELECT doc_id, n_chars, k.k AS copy,
-        |   CASE source WHEN 'src0' THEN 2.5 WHEN 'src1' THEN 1.25
-        |     WHEN 'src2' THEN 0.5 WHEN 'src3' THEN 0.0 ELSE 1.0 END AS r,
-        |   CAST(CONCAT('0x', substr(md5(CAST(doc_id AS VARCHAR)
-        |     || ':mix:' || CAST(k.k AS VARCHAR)), 1, 15)) AS BIGINT)
-        |     / 1152921504606846976.0 AS u
-        | FROM documents CROSS JOIN (SELECT unnest([0, 1, 2]) AS k) k
-        |), kept AS (
-        | SELECT doc_id * 4 + copy AS pack_id, doc_id, copy,
-        |   CAST(COALESCE(n_chars, 0) AS BIGINT) AS n_chars
-        | FROM e WHERE u < r - copy
-        |), o AS (
-        | SELECT pack_id, doc_id, copy, n_chars,
-        |   CAST(COALESCE(SUM(n_chars) OVER (ORDER BY pack_id
-        |     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |     AS BIGINT) AS token_offset
-        | FROM kept
-        |)
-        |SELECT pack_id, doc_id, copy, n_chars, token_offset,
-        |  token_offset // 2048 AS chunk_first,
-        |  (token_offset + GREATEST(n_chars, 1) - 1) // 2048 AS chunk_last,
-        |  CAST((token_offset + GREATEST(n_chars, 1) - 1) // 2048
-        |    > token_offset // 2048 AS BIGINT) AS crosses_chunk
-        |FROM o""".stripMargin,
-
-    // the q51 fingerprint recipe by CONTENT against the frozen doc_id<250
-    // half, under the constant event hour; NULL text → NULL fp → new
-    "q70_streaming_ingest" ->
-      """WITH corpus AS (
-        | SELECT DISTINCT
-        |   MD5(LOWER(TRIM(REGEXP_REPLACE(text, '\s+', ' ', 'g')))) AS fp
-        | FROM documents WHERE doc_id < 250
-        |), d AS (
-        | SELECT MD5(LOWER(TRIM(REGEXP_REPLACE(text, '\s+', ' ', 'g')))) AS fp
-        | FROM documents
-        |)
-        |SELECT '2024-01-01 00:00:00' AS hr,
-        |  CASE WHEN c.fp IS NOT NULL THEN 'dup_of_corpus'
-        |       ELSE 'new' END AS status,
-        |  COUNT(*) AS docs
-        |FROM d LEFT JOIN corpus c ON d.fp = c.fp
-        |GROUP BY status""".stripMargin,
-
-    // the same plants + the q47 5-gram recipe, normalized by benchmark
-    // n-gram count; the ≥ 0.8 filter runs on the raw int/int double
-    "q71_containment_decon" ->
-      s"""WITH corpus0 AS (
-         | SELECT doc_id, text FROM documents
-         | UNION ALL
-         | SELECT doc_id + 800000000,
-         |   'framing intro words before the leak ' || text ||
-         |   ' and framing outro words after it'
-         | FROM documents WHERE doc_id < 500 AND doc_id % 50 = 7
-         | UNION ALL
-         | SELECT doc_id + 810000000,
-         |   array_to_string(str_split(text, ' ')[1:12], ' ')
-         | FROM documents WHERE doc_id < 500 AND doc_id % 50 = 7
-         |), sh AS (
-         | SELECT doc_id, list_distinct(CASE WHEN len(toks) < 5
-         |   THEN [array_to_string(toks, ' ')]
-         |   ELSE list_transform(generate_series(1, len(toks) - 4),
-         |          i -> array_to_string(toks[i:i+4], ' ')) END) AS sh
-         | FROM (SELECT doc_id, str_split(text, ' ') AS toks FROM corpus0)
-         |), cng AS (
-         | SELECT doc_id, unnest(sh) AS ng FROM sh
-         |), bsh AS (
-         | SELECT doc_id AS bench_id, sh FROM sh
-         | WHERE doc_id < 500 AND doc_id % 50 = 7
-         |), bng AS (
-         | SELECT DISTINCT bench_id, unnest(sh) AS ng FROM bsh
-         |), sizes AS (
-         | SELECT bench_id, COUNT(*) AS bench_ngrams FROM bng GROUP BY 1
-         |), hits AS (
-         | SELECT c.doc_id, b.bench_id, COUNT(DISTINCT c.ng) AS ngrams_hit
-         | FROM cng c JOIN bng b ON c.ng = b.ng
-         | GROUP BY c.doc_id, b.bench_id
-         |)
-         |SELECT h.doc_id, h.bench_id, h.ngrams_hit, s.bench_ngrams,
-         |  ROUND(CAST(h.ngrams_hit AS DOUBLE) / s.bench_ngrams, 6)
-         |    AS containment
-         |FROM hits h JOIN sizes s ON h.bench_id = s.bench_id
-         |WHERE CAST(h.ngrams_hit AS DOUBLE) / s.bench_ngrams >= 0.8""".stripMargin,
-
-    // every band a pure function of (id arithmetic, codec) under the
-    // GainSweep-measured margins: plants 53/59/61 land would_clip /
-    // silent / normalize_ok on the forced pcm label; corrupt µ-law rails
-    // are already_clipped, corrupt flac undecodable, every other row
-    // (incl. corrupt pcm/A-law/ADPCM and duplicate ids) attenuates or
-    // gains cleanly
-    "q72_gain_census" ->
-      s"""SELECT codec,
-         |  CASE WHEN m = 53 THEN 'would_clip'
-         |       WHEN m = 59 THEN 'silent'
-         |       WHEN m = 61 THEN 'normalize_ok'
-         |       WHEN m = 17 AND codec0 = 'flac' THEN 'undecodable'
-         |       WHEN m = 17 AND codec0 = 'pcm_mulaw' THEN 'already_clipped'
-         |       ELSE 'normalize_ok' END AS band,
-         |  COUNT(*) AS clips
-         |FROM (SELECT
-         |    CASE WHEN CAST(substr(clip_id, 6) AS BIGINT) % 5000
-         |      IN (53, 59, 61) THEN 'pcm_s16le' ELSE codec END AS codec,
-         |    codec AS codec0,
-         |    CAST(substr(clip_id, 6) AS BIGINT) % 5000 AS m
-         |  FROM $clips)
-         |GROUP BY codec, band""".stripMargin,
-
-    // the naive per-group count — the sketch-then-exact operator must
-    // reproduce it exactly within every group
-    "q73_heavy_hitters_by_source" ->
-      """SELECT source, t AS token, COUNT(*) AS occurrences
-        |FROM (SELECT source, unnest(str_split(text, ' ')) AS t
-        |      FROM documents)
-        |GROUP BY source, t HAVING COUNT(*) >= 30""".stripMargin,
-
-    // identical plants, then the same ExactSubstr rule: 6-token shingles
-    // with positions, first (doc, pos) occurrence wins (row_number window
-    // — equivalent to the engine's min(struct) aggregate because
-    // (doc_id, pos) is unique), flagged positions merged per doc by the
-    // gaps-and-islands rule (new island when the position gap exceeds k)
-    "q74_span_dedup" ->
-      """WITH p AS (
-        | SELECT doc_id, text
-        |   || CASE WHEN doc_id % 7 = 1
-        |        THEN ' graft span plant alpha beta gamma delta omega'
-        |        ELSE '' END
-        |   || CASE WHEN doc_id % 11 = 3 AND len(str_split(text, ' ')) >= 8
-        |        THEN ' ' || array_to_string(str_split(text, ' ')[1:8], ' ')
-        |        ELSE '' END
-        |   AS text
-        | FROM documents
-        |), t AS (SELECT doc_id, str_split(text, ' ') AS toks FROM p),
-        |l AS (SELECT doc_id, i, array_to_string(toks[i:i+5], ' ') AS s
-        |      FROM (SELECT doc_id, toks,
-        |              unnest(generate_series(1, len(toks) - 5)) AS i
-        |            FROM t WHERE len(toks) >= 6)),
-        |r AS (SELECT doc_id, i,
-        |        ROW_NUMBER() OVER (PARTITION BY s ORDER BY doc_id, i) AS rn,
-        |        COUNT(*) OVER (PARTITION BY s) AS cnt
-        |      FROM l),
-        |f AS (SELECT doc_id, i FROM r WHERE cnt > 1 AND rn > 1),
-        |isl AS (SELECT doc_id, i,
-        |          CASE WHEN i - lag(i) OVER (PARTITION BY doc_id ORDER BY i)
-        |                 <= 6 THEN 0 ELSE 1 END AS brk
-        |        FROM f),
-        |g AS (SELECT doc_id, i,
-        |        SUM(brk) OVER (PARTITION BY doc_id ORDER BY i
-        |          ROWS UNBOUNDED PRECEDING) AS island
-        |      FROM isl),
-        |sp AS (SELECT doc_id, island, MIN(i) AS s0, MAX(i) + 6 AS e0
-        |       FROM g GROUP BY doc_id, island),
-        |d AS (SELECT doc_id, COUNT(*) AS spans_flagged,
-        |        CAST(SUM(e0 - s0) AS BIGINT) AS tokens_flagged
-        |      FROM sp GROUP BY doc_id),
-        |tc AS (SELECT doc_id,
-        |         CAST(len(str_split(text, ' ')) AS BIGINT) AS token_count
-        |       FROM p)
-        |SELECT d.doc_id, tc.token_count, d.spans_flagged, d.tokens_flagged,
-        |  d.tokens_flagged = tc.token_count AS emptied
-        |FROM d JOIN tc ON d.doc_id = tc.doc_id""".stripMargin,
-
-    // identical benchmark plants, exact all-pairs cosine — the LSH +
-    // broadcast probe must surface exactly the over-threshold pairs
-    "q75_semantic_decontam" ->
-      """WITH e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |b AS (
-        | SELECT vec_id + 300000000 AS bench_id,
-        |        list_transform(v, x -> x + 0.03) AS v
-        | FROM e0 WHERE vec_id % 97 = 13
-        |)
-        |SELECT a.vec_id, b.bench_id,
-        |  round(list_dot_product(a.v, b.v)
-        |    / (sqrt(list_dot_product(a.v, a.v))
-        |       * sqrt(list_dot_product(b.v, b.v))), 6) AS cosine
-        |FROM e0 a JOIN b ON list_dot_product(a.v, b.v)
-        |    / (sqrt(list_dot_product(a.v, a.v))
-        |       * sqrt(list_dot_product(b.v, b.v))) >= 0.9""".stripMargin,
-
-    // identical v2 plants, then the same manifest diff by content:
-    // normalized-md5 fingerprints per version, full-outer join on id,
-    // IS DISTINCT FROM for the changed test (null-text content equality
-    // matches Spark's null-safe <=>)
-    "q76_version_diff" ->
-      """WITH v2 AS (
-        | SELECT doc_id,
-        |   CASE WHEN doc_id % 17 = 3 THEN text || ' graft v2 edit'
-        |        ELSE text END AS text
-        | FROM documents WHERE doc_id % 13 <> 5
-        | UNION ALL
-        | SELECT doc_id + 700000000 AS doc_id,
-        |   'brand new doc number ' || CAST(doc_id AS VARCHAR) AS text
-        | FROM documents WHERE doc_id < 10
-        |),
-        |m1 AS (SELECT doc_id,
-        |  MD5(LOWER(TRIM(REGEXP_REPLACE(text, '\s+', ' ', 'g')))) AS fp
-        |  FROM documents),
-        |m2 AS (SELECT doc_id,
-        |  MD5(LOWER(TRIM(REGEXP_REPLACE(text, '\s+', ' ', 'g')))) AS fp
-        |  FROM v2)
-        |SELECT COALESCE(m1.doc_id, m2.doc_id) AS doc_id,
-        |  CASE WHEN m1.doc_id IS NULL THEN 'added'
-        |       WHEN m2.doc_id IS NULL THEN 'removed'
-        |       ELSE 'changed' END AS status,
-        |  m1.fp AS old_fingerprint, m2.fp AS new_fingerprint
-        |FROM m1 FULL OUTER JOIN m2 ON m1.doc_id = m2.doc_id
-        |WHERE m1.doc_id IS NULL OR m2.doc_id IS NULL
-        |   OR m1.fp IS DISTINCT FROM m2.fp""".stripMargin,
-
-    // the full model replayed: identical plants, identical md5 train
-    // band, identical bigram/context counts with minCount=2 pruning,
-    // identical integer Shannon-bits arithmetic (length(bin(q))-1 is
-    // DuckDB's exact floor-log2 twin of Spark's length(conv(q,10,2))-1)
-    "q79_ngram_perplexity" -> {
-      val sent = "click here to accept cookies and continue to the site"
-      s"""WITH planted AS (
-         | SELECT doc_id,
-         |   CASE WHEN doc_id % 23 = 4 THEN array_to_string(
-         |          list_transform(generate_series(0, 11),
-         |            k -> 'zzq' || CAST((doc_id * 7 + k) % 9999 AS VARCHAR)),
-         |          ' ')
-         |        WHEN doc_id % 29 = 6 THEN '$sent $sent $sent'
-         |        ELSE text END AS text
-         | FROM documents),
-         |train AS (
-         | SELECT doc_id, text FROM planted
-         | WHERE CAST(CONCAT('0x', substr(md5(CAST(doc_id AS VARCHAR)
-         |     || ':split'), 1, 15)) AS BIGINT)
-         |   / 1152921504606846976.0 < 0.75),
-         |tbi AS (
-         | SELECT toks[i] AS w1, toks[i + 1] AS w2
-         | FROM (SELECT toks, unnest(generate_series(1, len(toks) - 1)) AS i
-         |       FROM (SELECT str_split(text, ' ') AS toks FROM train)
-         |       WHERE len(toks) >= 2)),
-         |big AS (SELECT w1, w2, COUNT(*) AS c FROM tbi
-         |        GROUP BY w1, w2 HAVING COUNT(*) >= 2),
-         |ctx AS (SELECT w1, COUNT(*) AS c FROM tbi
-         |        GROUP BY w1 HAVING COUNT(*) >= 2),
-         |voc AS (SELECT COUNT(DISTINCT w) AS v FROM
-         |        (SELECT unnest(str_split(text, ' ')) AS w FROM train)),
-         |sbi AS (
-         | SELECT doc_id, toks[i] AS w1, toks[i + 1] AS w2
-         | FROM (SELECT doc_id, toks,
-         |         unnest(generate_series(1, len(toks) - 1)) AS i
-         |       FROM (SELECT doc_id, str_split(text, ' ') AS toks
-         |             FROM planted)
-         |       WHERE len(toks) >= 2)),
-         |sc AS (
-         | SELECT s.doc_id,
-         |   length(bin((COALESCE(x.c, 0) + voc.v)
-         |     // (COALESCE(b.c, 0) + 1))) - 1 AS bits,
-         |   CASE WHEN b.c IS NULL THEN 1 ELSE 0 END AS oov
-         | FROM sbi s
-         | LEFT JOIN big b ON s.w1 = b.w1 AND s.w2 = b.w2
-         | LEFT JOIN ctx x ON s.w1 = x.w1
-         | CROSS JOIN voc),
-         |agg AS (SELECT doc_id, COUNT(*) AS ngrams,
-         |          CAST(SUM(bits) AS BIGINT) AS bits,
-         |          CAST(SUM(oov) AS BIGINT) AS oov_ngrams
-         |        FROM sc GROUP BY doc_id)
-         |SELECT p.doc_id,
-         |  COALESCE(a.ngrams, 0) AS ngrams,
-         |  COALESCE(a.bits, 0) AS bits,
-         |  COALESCE(a.oov_ngrams, 0) AS oov_ngrams,
-         |  CASE WHEN COALESCE(a.ngrams, 0) = 0 THEN 'unscorable'
-         |       WHEN a.bits >= a.ngrams * 7 THEN 'high_perplexity'
-         |       WHEN a.bits <= a.ngrams * 3 THEN 'low_perplexity'
-         |       ELSE 'mid' END AS band
-         |FROM planted p LEFT JOIN agg a ON p.doc_id = a.doc_id""".stripMargin
-    },
-
-    // the measured watermark state machine replayed in SQL: per-batch
-    // event maxima, the one-batch-LAGGED late-filter watermark (max over
-    // batches ≤ b−2, minus the delay — NULL for batches 0-1, where
-    // nothing can drop), drop iff window end ≤ it, finalized counts over
-    // the survivors plus the dropped total. Event times are engineered
-    // so a window end (:00) never equals a watermark (:30 − 5 min) — the
-    // ≤-vs-< comparator ambiguity cannot bite.
-    "q81_streaming_late_replay" ->
-      """WITH rows0 AS (
-        | SELECT event_id % 4 AS batch,
-        |   'u' || CAST(event_id % 5 AS VARCHAR) AS k,
-        |   1767268800 + ((event_id % 4) * 10 + (event_id % 7)
-        |     + CASE WHEN event_id % 13 = 11 THEN -25
-        |            WHEN event_id % 17 = 3 THEN -8 ELSE 0 END) * 60 + 30
-        |     AS sec
-        | FROM events WHERE event_id IS NOT NULL
-        | UNION ALL SELECT 4, 'flush', 1767268800 + 120 * 60 + 30
-        | UNION ALL SELECT 5, 'flush', 1767268800 + 125 * 60 + 30
-        |),
-        |bmax AS (SELECT batch, MAX(sec) AS mx FROM rows0 GROUP BY batch),
-        |wm AS (SELECT batch,
-        |         MAX(mx) OVER (ORDER BY batch
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 2 PRECEDING) - 300
-        |           AS lag_wm
-        |       FROM bmax),
-        |flagged AS (
-        | SELECT r.batch, r.k, (r.sec // 60) * 60 AS ws,
-        |   CASE WHEN w.lag_wm IS NOT NULL
-        |     AND ((r.sec // 60) + 1) * 60 <= w.lag_wm
-        |     THEN 1 ELSE 0 END AS dropped
-        | FROM rows0 r JOIN wm w ON r.batch = w.batch)
-        |SELECT 'window' AS kind, k,
-        |  strftime(make_timestamp(ws * 1000000), '%Y-%m-%d %H:%M:%S')
-        |    AS window_start,
-        |  CAST(COUNT(*) AS BIGINT) AS n_rows
-        |FROM flagged WHERE dropped = 0 AND k <> 'flush'
-        |GROUP BY k, ws
-        |UNION ALL
-        |SELECT 'late_dropped_groups', NULL, NULL,
-        |  CAST(COUNT(*) AS BIGINT)
-        |FROM (SELECT DISTINCT batch, k, ws FROM flagged WHERE dropped = 1)
-        |""".stripMargin,
-
-    // identical plant, then tokenization replayed with the committed
-    // vocabulary: recursive greedy longest-prefix strip over the DISTINCT
-    // words (the word vocabulary is tiny, so the recursion runs hundreds
-    // of steps, not corpus-size), single-char fallback for unseen
-    // characters, counts joined back to the doc word stream, then q62's
-    // exact packing window on the subword totals
-    "q80_subword_packing" -> {
-      val vocList = bpeVocabFor(sfDir)
-        .map(t => "'" + t.replace("'", "''") + "'").mkString(", ")
-      s"""WITH RECURSIVE
-         |voc(tok) AS (SELECT unnest([$vocList])),
-         |planted AS (
-         | SELECT doc_id,
-         |   CASE WHEN doc_id % 31 = 9
-         |     THEN text || ' tablescan mergejoin fastsort'
-         |     ELSE text END AS text
-         | FROM documents),
-         |w(word) AS (
-         | SELECT DISTINCT unnest(str_split(text, ' '))
-         | FROM planted WHERE text IS NOT NULL),
-         |tk(word, rest, n) AS (
-         | SELECT word, word, 0 FROM w
-         | UNION ALL
-         | SELECT word, substr(rest, length(best) + 1), n + 1
-         | FROM (
-         |   SELECT word, rest, n,
-         |     COALESCE((SELECT tok FROM voc WHERE starts_with(rest, tok)
-         |               ORDER BY length(tok) DESC, tok LIMIT 1),
-         |              substr(rest, 1, 1)) AS best
-         |   FROM tk WHERE rest <> '')),
-         |wn AS (SELECT word, MAX(n) AS toks FROM tk GROUP BY word),
-         |ws AS (SELECT doc_id, unnest(str_split(text, ' ')) AS word
-         |       FROM planted WHERE text IS NOT NULL),
-         |dc AS (SELECT ws.doc_id,
-         |         CAST(SUM(wn.toks) AS BIGINT) AS subword_tokens
-         |       FROM ws JOIN wn ON ws.word = wn.word GROUP BY ws.doc_id),
-         |o AS (
-         | SELECT p.doc_id,
-         |   COALESCE(dc.subword_tokens, 0) AS subword_tokens,
-         |   CAST(COALESCE(SUM(COALESCE(dc.subword_tokens, 0))
-         |     OVER (ORDER BY p.doc_id
-         |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-         |     0) AS BIGINT) AS token_offset
-         | FROM planted p LEFT JOIN dc ON p.doc_id = dc.doc_id)
-         |SELECT doc_id, subword_tokens, token_offset,
-         |  token_offset // 2048 AS chunk_first,
-         |  (token_offset + GREATEST(subword_tokens, 1) - 1) // 2048
-         |    AS chunk_last,
-         |  CAST((token_offset + GREATEST(subword_tokens, 1) - 1) // 2048
-         |    > token_offset // 2048 AS BIGINT) AS crosses_chunk
-         |FROM o""".stripMargin
-    },
-
-    // q83's cluster arithmetic, duplicates only — the streaming monitor
-    // must surface exactly the multi-clip fingerprints with their counts
-    "q87_streaming_content_dedup" ->
-      s"""WITH t AS (
-         | SELECT clip_id, codec,
-         |   CASE WHEN dur_ms <> 200 + (p * 37) % 9800 THEN p + 1 ELSE p END
-         |     AS i
-         | FROM (SELECT clip_id, codec, dur_ms,
-         |         CAST(substr(clip_id, 6) AS BIGINT) AS p FROM $clips)
-         | WHERE p % 5000 <> 17),
-         |e AS (
-         | SELECT codec,
-         |   CASE WHEN i % 10 < 6 THEN 16000
-         |        ELSE [8000, 22050, 44100, 48000][CAST((i // 10) % 4 AS INT)
-         |          + 1] END AS sr,
-         |   'tone:' || CAST(220 + i % 880 AS VARCHAR) || ':d1' AS fingerprint
-         | FROM t)
-         |SELECT fingerprint, CAST(COUNT(*) AS BIGINT) AS dup_count
-         |FROM e WHERE NOT (codec = 'adpcm_ima' AND sr = 8000)
-         |GROUP BY fingerprint HAVING COUNT(*) > 1""".stripMargin,
-
-    // per-partition totals/drops/writes from the q77 action arithmetic;
-    // the act structure (which run validated which partition, final
-    // no-op) and the all-nominal written census are pure predictions
-    "q86_repair_resume" ->
-      s"""WITH acts AS (SELECT
-         |    CASE WHEN m IN (37, 41, 53, 61, 27) THEN 'pcm_s16le'
-         |      ELSE codec END AS partition_value,
-         |    CASE WHEN m = 41 THEN 'drop_all_silence'
-         |         WHEN m = 53 THEN 'drop_would_clip'
-         |         WHEN m = 27 THEN 'drop_clipped'
-         |         WHEN m IN (37, 61) THEN 'repaired'
-         |         WHEN m = 17 AND codec = 'flac' THEN 'drop_undecodable'
-         |         WHEN m = 17 AND codec = 'pcm_mulaw' THEN 'drop_clipped'
-         |         WHEN m = 17 AND codec = 'pcm_alaw' THEN 'drop_dc_bias'
-         |         ELSE 'repaired' END AS action
-         |  FROM (SELECT codec,
-         |          CAST(substr(clip_id, 6) AS BIGINT) % 5000 AS m
-         |        FROM $clips)
-         |  WHERE NOT (m = 17 AND codec = 'adpcm_ima'))
-         |SELECT partition_value,
-         |  CAST(COUNT(*) AS BIGINT) AS total_rows,
-         |  CAST(SUM(CASE WHEN action <> 'repaired' THEN 1 ELSE 0 END)
-         |    AS BIGINT) AS error_rows,
-         |  CAST(SUM(CASE WHEN action = 'repaired' THEN 1 ELSE 0 END)
-         |    AS BIGINT) AS valid_rows,
-         |  CASE WHEN partition_value IN ('pcm_s16le', 'flac') THEN 1
-         |    ELSE 2 END AS validated_in_run,
-         |  TRUE AS resume_noop,
-         |  CAST(SUM(CASE WHEN action = 'repaired' THEN 1 ELSE 0 END)
-         |    AS BIGINT) AS written_nominal
-         |FROM acts GROUP BY partition_value""".stripMargin,
-
-    // the recursive strip carries each TAKEN token (the base row takes
-    // none), so distinct-word tokenization yields the full per-word
-    // token multiset; joined to the word stream, the naive count is the
-    // oracle the exact sketch-then-confirm pass must reproduce
-    "q85_subword_heavy_hitters" -> {
-      val vocList = bpeVocabFor(sfDir)
-        .map(t => "'" + t.replace("'", "''") + "'").mkString(", ")
-      s"""WITH RECURSIVE
-         |voc(tok) AS (SELECT unnest([$vocList])),
-         |w(word) AS (
-         | SELECT DISTINCT unnest(str_split(text, ' '))
-         | FROM documents WHERE text IS NOT NULL),
-         |tk(word, rest, n, took) AS (
-         | SELECT word, word, 0, CAST(NULL AS VARCHAR) FROM w
-         | UNION ALL
-         | SELECT word, substr(rest, length(best) + 1), n + 1, best
-         | FROM (
-         |   SELECT word, rest, n,
-         |     COALESCE((SELECT tok FROM voc WHERE starts_with(rest, tok)
-         |               ORDER BY length(tok) DESC, tok LIMIT 1),
-         |              substr(rest, 1, 1)) AS best
-         |   FROM tk WHERE rest <> '')),
-         |wt AS (SELECT word, took AS token FROM tk WHERE took IS NOT NULL),
-         |ws AS (SELECT unnest(str_split(text, ' ')) AS word
-         |       FROM documents WHERE text IS NOT NULL)
-         |SELECT wt.token, CAST(COUNT(*) AS BIGINT) AS occurrences
-         |FROM ws JOIN wt ON ws.word = wt.word
-         |GROUP BY wt.token HAVING COUNT(*) >= 400""".stripMargin
-    },
-
-    // every cluster by id arithmetic: true index via the dur-mismatch
-    // rule, tone = 220 + i%880, container rate from the generator's sr
-    // arithmetic; Spark must reproduce it from the payloads alone
-    "q83_audio_content_dedup" ->
-      s"""WITH t AS (
-         | SELECT clip_id, codec,
-         |   CASE WHEN dur_ms <> 200 + (p * 37) % 9800 THEN p + 1 ELSE p END
-         |     AS i
-         | FROM (SELECT clip_id, codec, dur_ms,
-         |         CAST(substr(clip_id, 6) AS BIGINT) AS p FROM $clips)
-         | WHERE p % 5000 <> 17),
-         |e AS (
-         | SELECT clip_id, codec,
-         |   CASE WHEN i % 10 < 6 THEN 16000
-         |        ELSE [8000, 22050, 44100, 48000][CAST((i // 10) % 4 AS INT)
-         |          + 1] END AS sr,
-         |   'tone:' || CAST(220 + i % 880 AS VARCHAR) || ':d1' AS fingerprint
-         | FROM t)
-         |SELECT fingerprint, CAST(COUNT(*) AS BIGINT) AS n_clips,
-         |  CAST(COUNT(DISTINCT codec) AS BIGINT) AS n_codecs,
-         |  CAST(COUNT(DISTINCT sr) AS BIGINT) AS n_rates,
-         |  MIN(clip_id) AS keeper_id
-         |FROM e WHERE NOT (codec = 'adpcm_ima' AND sr = 8000)
-         |GROUP BY fingerprint""".stripMargin,
-
-    // the full loop replayed: committed-vocab tokenization (q80's
-    // recursive strip), per-source totals, budget = corpus // 2, dyadic
-    // rates LEAST(budget·p / tokens, 16.0) — bit-identical doubles by
-    // construction — then q63's md5 survival arithmetic over 16 copies
-    "q82_subword_budget_mix" -> {
-      val vocList = bpeVocabFor(sfDir)
-        .map(t => "'" + t.replace("'", "''") + "'").mkString(", ")
-      s"""WITH RECURSIVE
-         |voc(tok) AS (SELECT unnest([$vocList])),
-         |w(word) AS (
-         | SELECT DISTINCT unnest(str_split(text, ' '))
-         | FROM documents WHERE text IS NOT NULL),
-         |tk(word, rest, n) AS (
-         | SELECT word, word, 0 FROM w
-         | UNION ALL
-         | SELECT word, substr(rest, length(best) + 1), n + 1
-         | FROM (
-         |   SELECT word, rest, n,
-         |     COALESCE((SELECT tok FROM voc WHERE starts_with(rest, tok)
-         |               ORDER BY length(tok) DESC, tok LIMIT 1),
-         |              substr(rest, 1, 1)) AS best
-         |   FROM tk WHERE rest <> '')),
-         |wn AS (SELECT word, MAX(n) AS toks FROM tk GROUP BY word),
-         |wst AS (SELECT doc_id, unnest(str_split(text, ' ')) AS word
-         |        FROM documents WHERE text IS NOT NULL),
-         |dc0 AS (SELECT wst.doc_id, CAST(SUM(wn.toks) AS BIGINT) AS t
-         |        FROM wst JOIN wn ON wst.word = wn.word GROUP BY wst.doc_id),
-         |dc AS (SELECT d.doc_id, d.source, COALESCE(dc0.t, 0) AS toks
-         |       FROM documents d LEFT JOIN dc0 ON d.doc_id = dc0.doc_id),
-         |bud AS (SELECT SUM(toks) // 2 AS b FROM dc),
-         |st AS (SELECT source, COUNT(*) AS in_rows,
-         |         CAST(SUM(toks) AS BIGINT) AS in_tokens
-         |       FROM dc GROUP BY source),
-         |rates AS (
-         | SELECT st.source,
-         |   LEAST(CAST(bud.b AS DOUBLE)
-         |     * (CASE st.source WHEN 'src0' THEN 0.5 WHEN 'src1' THEN 0.25
-         |        WHEN 'src2' THEN 0.125 WHEN 'src3' THEN 0.125 END)
-         |     / st.in_tokens, 16.0) AS r
-         | FROM st CROSS JOIN bud
-         | WHERE st.source IN ('src0', 'src1', 'src2', 'src3')),
-         |e AS (
-         | SELECT dc.source, dc.toks, k.k, COALESCE(r.r, 0.0) AS r,
-         |   CAST(CONCAT('0x', substr(md5(CAST(dc.doc_id AS VARCHAR)
-         |     || ':mix:' || CAST(k.k AS VARCHAR)), 1, 15)) AS BIGINT)
-         |     / 1152921504606846976.0 AS u
-         | FROM dc
-         | CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS k) k
-         | LEFT JOIN rates r ON dc.source = r.source),
-         |o AS (
-         | SELECT source,
-         |   CAST(SUM(CASE WHEN u < r - k THEN 1 ELSE 0 END) AS BIGINT)
-         |     AS out_rows,
-         |   CAST(COALESCE(SUM(CASE WHEN u < r - k THEN toks END), 0)
-         |     AS BIGINT) AS out_tokens
-         | FROM e GROUP BY source)
-         |SELECT st.source, CAST(st.in_rows AS BIGINT) AS in_rows,
-         |  st.in_tokens,
-         |  COALESCE(o.out_rows, 0) AS out_rows,
-         |  COALESCE(o.out_tokens, 0) AS out_tokens
-         |FROM st LEFT JOIN o ON st.source = o.source""".stripMargin
-    },
-
-    // the q79 model chain without plants, then the exact tercile
-    // machinery: rank the md5 val band by (double ratio, doc_id) — both
-    // engines compute the one-division ratio identically — pick ranks
-    // ceil(n/3)/ceil(2n/3), bucket by integer cross-multiplication
-    "q84_perplexity_buckets" ->
-      """WITH tbi AS (
-        | SELECT toks[i] AS w1, toks[i + 1] AS w2
-        | FROM (SELECT toks, unnest(generate_series(1, len(toks) - 1)) AS i
-        |       FROM (SELECT str_split(text, ' ') AS toks FROM documents
-        |             WHERE CAST(CONCAT('0x', substr(md5(CAST(doc_id AS
-        |               VARCHAR) || ':split'), 1, 15)) AS BIGINT)
-        |               / 1152921504606846976.0 < 0.75)
-        |       WHERE len(toks) >= 2)),
-        |big AS (SELECT w1, w2, COUNT(*) AS c FROM tbi
-        |        GROUP BY w1, w2 HAVING COUNT(*) >= 2),
-        |ctx AS (SELECT w1, COUNT(*) AS c FROM tbi
-        |        GROUP BY w1 HAVING COUNT(*) >= 2),
-        |voc AS (SELECT COUNT(DISTINCT w) AS v FROM
-        |        (SELECT unnest(str_split(text, ' ')) AS w FROM documents
-        |         WHERE CAST(CONCAT('0x', substr(md5(CAST(doc_id AS VARCHAR)
-        |           || ':split'), 1, 15)) AS BIGINT)
-        |           / 1152921504606846976.0 < 0.75)),
-        |sbi AS (
-        | SELECT doc_id, toks[i] AS w1, toks[i + 1] AS w2
-        | FROM (SELECT doc_id, toks,
-        |         unnest(generate_series(1, len(toks) - 1)) AS i
-        |       FROM (SELECT doc_id, str_split(text, ' ') AS toks
-        |             FROM documents)
-        |       WHERE len(toks) >= 2)),
-        |sco AS (
-        | SELECT s.doc_id,
-        |   length(bin((COALESCE(x.c, 0) + voc.v)
-        |     // (COALESCE(b.c, 0) + 1))) - 1 AS bits
-        | FROM sbi s
-        | LEFT JOIN big b ON s.w1 = b.w1 AND s.w2 = b.w2
-        | LEFT JOIN ctx x ON s.w1 = x.w1
-        | CROSS JOIN voc),
-        |agg AS (SELECT doc_id, COUNT(*) AS ngrams,
-        |          CAST(SUM(bits) AS BIGINT) AS bits
-        |        FROM sco GROUP BY doc_id),
-        |sc AS (SELECT p.doc_id, COALESCE(a.ngrams, 0) AS ngrams,
-        |         COALESCE(a.bits, 0) AS bits
-        |       FROM documents p LEFT JOIN agg a ON p.doc_id = a.doc_id),
-        |ref AS (
-        | SELECT doc_id, ngrams, bits,
-        |   CAST(bits AS DOUBLE) / ngrams AS r
-        | FROM sc WHERE ngrams > 0 AND
-        |   CAST(CONCAT('0x', substr(md5(CAST(doc_id AS VARCHAR)
-        |     || ':split'), 1, 15)) AS BIGINT)
-        |     / 1152921504606846976.0 >= 0.75 AND
-        |   CAST(CONCAT('0x', substr(md5(CAST(doc_id AS VARCHAR)
-        |     || ':split'), 1, 15)) AS BIGINT)
-        |     / 1152921504606846976.0 < 0.875),
-        |rk AS (SELECT bits, ngrams,
-        |         ROW_NUMBER() OVER (ORDER BY r, doc_id) AS rk FROM ref),
-        |nn AS (SELECT COUNT(*) AS n FROM ref),
-        |t1 AS (SELECT bits AS b1, ngrams AS n1 FROM rk, nn
-        |       WHERE rk = (n + 2) // 3),
-        |t2 AS (SELECT bits AS b2, ngrams AS n2 FROM rk, nn
-        |       WHERE rk = (2 * n + 2) // 3)
-        |SELECT sc.doc_id, sc.ngrams, sc.bits,
-        |  CASE WHEN sc.ngrams = 0 THEN 'unscorable'
-        |       WHEN sc.bits * t1.n1 <= t1.b1 * sc.ngrams THEN 'head'
-        |       WHEN sc.bits * t2.n2 <= t2.b2 * sc.ngrams THEN 'middle'
-        |       ELSE 'tail' END AS bucket
-        |FROM sc CROSS JOIN t1 CROSS JOIN t2""".stripMargin,
-
-    // every repair action a pure function of (id arithmetic, container
-    // codec) once the bistable corrupt-adpcm cell is excluded — the
-    // RepairSweep-measured map: plants 41/53/27 drop (all-silence /
-    // would-clip / clipped), 37/61 repair (trim / gain), corrupt flac
-    // fails decode, corrupt µ-law rails clip, corrupt A-law zeros decode
-    // to a DC comb; everything else (clean rows of all five codecs,
-    // lying-sr rows, duplicate-id rows) repairs. Spark earns each cell by
-    // decoding, trimming, gating, resampling, and gain-checking per row.
-    "q77_repair_census" ->
-      s"""SELECT codec,
-         |  CASE WHEN m = 41 THEN 'drop_all_silence'
-         |       WHEN m = 53 THEN 'drop_would_clip'
-         |       WHEN m = 27 THEN 'drop_clipped'
-         |       WHEN m IN (37, 61) THEN 'repaired'
-         |       WHEN m = 17 AND codec0 = 'flac' THEN 'drop_undecodable'
-         |       WHEN m = 17 AND codec0 = 'pcm_mulaw' THEN 'drop_clipped'
-         |       WHEN m = 17 AND codec0 = 'pcm_alaw' THEN 'drop_dc_bias'
-         |       ELSE 'repaired' END AS action,
-         |  COUNT(*) AS clips
-         |FROM (SELECT
-         |    CASE WHEN CAST(substr(clip_id, 6) AS BIGINT) % 5000
-         |      IN (37, 41, 53, 61, 27) THEN 'pcm_s16le' ELSE codec END AS codec,
-         |    codec AS codec0,
-         |    CAST(substr(clip_id, 6) AS BIGINT) % 5000 AS m
-         |  FROM $clips)
-         |WHERE NOT (m = 17 AND codec0 = 'adpcm_ima')
-         |GROUP BY codec, action""".stripMargin,
-
-    // the survivor count is the same arithmetic as q77's 'repaired'
-    // bucket; all three post-repair censuses must land every survivor in
-    // the clean band on the repaired PCM payload
-    "q78_repair_verify" ->
-      s"""WITH acts AS (SELECT
-         |    CASE WHEN m = 41 THEN 'drop_all_silence'
-         |         WHEN m = 53 THEN 'drop_would_clip'
-         |         WHEN m = 27 THEN 'drop_clipped'
-         |         WHEN m IN (37, 61) THEN 'repaired'
-         |         WHEN m = 17 AND codec0 = 'flac' THEN 'drop_undecodable'
-         |         WHEN m = 17 AND codec0 = 'pcm_mulaw' THEN 'drop_clipped'
-         |         WHEN m = 17 AND codec0 = 'pcm_alaw' THEN 'drop_dc_bias'
-         |         ELSE 'repaired' END AS action
-         |  FROM (SELECT codec AS codec0,
-         |          CAST(substr(clip_id, 6) AS BIGINT) % 5000 AS m
-         |        FROM $clips)
-         |  WHERE NOT (m = 17 AND codec0 = 'adpcm_ima')),
-         |s AS (SELECT COUNT(*) AS n FROM acts WHERE action = 'repaired')
-         |SELECT 'quality' AS census, 'pcm_s16le' AS codec,
-         |  'nominal' AS band, n AS clips FROM s
-         |UNION ALL
-         |SELECT 'gain', 'pcm_s16le', 'normalize_ok', n FROM s
-         |UNION ALL
-         |SELECT 'container', 'pcm_s16le', 'ok', n FROM s""".stripMargin,
-    )
-  }
+  /** [[bpeVocabFor]] as a DuckDB list body of quoted string literals. */
+  def bpeVocabSql(sfDir: String): String =
+    bpeVocabFor(sfDir).map(t => "'" + t.replace("'", "''") + "'").mkString(", ")
 }

@@ -1,7 +1,9 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Driver-run correctness dump: each selected query's result → parquet,
+  * plus oracle_sql.json, for the DuckDB compare.
+  * SPARK_GRAFT_ONLY=q33,q34 dumps just those queries
+  * ([[SparkEntry.selected]]). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -9,15 +11,11 @@ object Verify {
     val spark = Bench.builder(cpus).appName("graft-verify").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_ONLY=q33,q34 → dump just those queries (iteration aid,
-    // same filter as Bench)
-    SparkEntry.queries
-      .filter(q => SparkEntry.onlyFilter(q._1))
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    SparkEntry.selected.foreach { c =>
+      try c.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${c.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${c.name} failed: ${e.getMessage}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

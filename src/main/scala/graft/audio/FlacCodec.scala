@@ -70,14 +70,6 @@ object FlacCodec {
   private final class BitReader(bytes: Array[Byte], var pos: Int) {
     private var bit = 0
     def atEnd: Boolean = pos >= bytes.length
-    def readBit(): Int = {
-      if (pos >= bytes.length)
-        throw new IllegalArgumentException("flac: truncated stream")
-      val b = (bytes(pos) >> (7 - bit)) & 1
-      bit += 1
-      if (bit == 8) { bit = 0; pos += 1 }
-      b
-    }
     def readBits(n: Int): Long = {
       var v = 0L; var rem = n
       while (rem > 0) {

@@ -75,7 +75,7 @@ class AvailableNowSpec extends AnyFunSuite {
     "caller's default") {
     withCallerConf(Parts -> Some("3")) {
       val bounded = AvailableNow.drain(spark, "bounded", "complete",
-        statePartitions = graft.SparkEntry.BoundedMonitorStateParts)(counts)
+        statePartitions = graft.queries.StreamingQueries.BoundedMonitorStateParts)(counts)
       val keyScale = AvailableNow.drain(spark, "keyscale", "complete")(counts)
       assert(stateOps(bounded).map(_.numShufflePartitions).toSet === Set(4L))
       assert(stateOps(keyScale).map(_.numShufflePartitions).toSet === Set(3L))
