@@ -39,14 +39,6 @@ object ManifestCheckpoint {
       completed_at_ms: Long,
   )
 
-  /** Order-independent content fingerprint per partition: (rows, xor of
-    * WHOLE-ROW hashes) — one aggregation. Hashing every column (not just
-    * the key) means any in-place edit — a nulled field, corrupted payload
-    * bytes — flips the fingerprint and re-queues the partition; a key-only
-    * hash would silently skip re-validation of rows whose key survived the
-    * change. Cost: the resume check reads the full partition once; on real
-    * Iceberg this whole mechanism is replaced by snapshot/data-file ids
-    * (metadata-only), the adapter seam this emulates. */
   /** NULL partition values get their own manifest key: a raw NULL would
     * fall out of the `isin(pending)` slice filter on every run — a slice
     * the engine silently never validates, the exact failure the checkpoint
@@ -56,6 +48,14 @@ object ManifestCheckpoint {
   private[checkpoint] def partitionKey(partitionCol: String) =
     coalesce(col(partitionCol).cast("string"), lit(NullPartitionKey))
 
+  /** Order-independent content fingerprint per partition: (rows, xor of
+    * WHOLE-ROW hashes) — one aggregation. Hashing every column (not just
+    * the key) means any in-place edit — a nulled field, corrupted payload
+    * bytes — flips the fingerprint and re-queues the partition; a key-only
+    * hash would silently skip re-validation of rows whose key survived the
+    * change. Cost: the resume check reads the full partition once; on real
+    * Iceberg this whole mechanism is replaced by snapshot/data-file ids
+    * (metadata-only), the adapter seam this emulates. */
   def fingerprints(df: DataFrame, partitionCol: String): DataFrame = {
     val allCols = df.columns.map(c => s"`$c`").mkString(", ")
     df.groupBy(partitionKey(partitionCol).as("partition_value"))
@@ -180,6 +180,14 @@ object ManifestCheckpoint {
     }
   }
 
+  /** Upper pending-set size for fusing the per-partition metrics into the
+    * violations-write job as `observe` aggregates (two conditional sums per
+    * pending partition ride the write's single pass — zero extra scans).
+    * Past this, the conditional-sum fan-out stops being free and the
+    * metrics fall back to one grouped aggregation over the slice (still
+    * narrow: the lineage hash is NOT recomputed there, see below). */
+  private val ObserveFuseMaxPartitions = 64
+
   /** Validate only pending partitions; write violations under
     * `outDir/violations/partition_value=<v>/` and append manifest entries.
     * Returns the partitions processed this run. Idempotent: re-running
@@ -195,14 +203,6 @@ object ManifestCheckpoint {
     * fingerprint together — a constant number of jobs regardless of
     * partition count (the per-partition loop ran ~2 jobs × N partitions,
     * serially: ~2000 jobs at 1000 partitions). */
-  /** Upper pending-set size for fusing the per-partition metrics into the
-    * violations-write job as `observe` aggregates (two conditional sums per
-    * pending partition ride the write's single pass — zero extra scans).
-    * Past this, the conditional-sum fan-out stops being free and the
-    * metrics fall back to one grouped aggregation over the slice (still
-    * narrow: the lineage hash is NOT recomputed there, see below). */
-  private val ObserveFuseMaxPartitions = 64
-
   def runResumable(spark: SparkSession, df: DataFrame, spec: TableSpec,
       manifestDir: String, outDir: String,
       fingerprintSource: Option[() => DataFrame] = None): Seq[String] = {

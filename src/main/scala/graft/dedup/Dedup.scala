@@ -9,7 +9,10 @@ import org.apache.spark.sql.functions._
   * MinHash+LSH, SimHash, n-gram Jaccard verification, embedding-cosine.
   * All candidate generation is bucket-local (band hash / bit-chunk /
   * hyperplane bucket): no all-pairs O(n²) stage ever materializes — the only
-  * quadratic work is INSIDE a bucket, and every bucketed self-join is
+  * quadratic work is INSIDE a bucket. Every bucketed self-join (minhash,
+  * simhash, embedding, and the in-batch side of [[Dedup.incrementalMinhash]])
+  * is the one private `bucketPairs`, and every exact pair verify (Jaccard,
+  * cosine) is the one private `verifyPairs`. Each self-join is
   * skew-guarded by [[Dedup.capBuckets]]: buckets larger than `maxBucketSize`
   * are dropped (the standard LSH guard — one degenerate bucket of empty or
   * boilerplate documents would otherwise go quadratic at 10^12 rows). The
@@ -99,12 +102,6 @@ object Dedup {
       .select(col(idCol))
     df.join(keepers, Seq(idCol), "left_semi")
   }
-
-  /** Duplicate groups: (text_hash, dup_count, keeper_id). */
-  def exactGroups(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.groupBy(TextAnalysis.fingerprint(col(textCol)).as("text_hash"))
-      .agg(count(lit(1)).as("dup_count"), min(col(idCol)).as("keeper_id"))
-      .where(col("dup_count") > 1)
 
   /** Cross-corpus LINE dedup report — the C4 rule (Raffel et al. 2020
     * §2.2 discard every repeated three-sentence span corpus-wide; modern
@@ -304,10 +301,6 @@ object Dedup {
       MinHashSignature(ColumnBridge.expression(shinglesCol), numHashes))
   }
 
-  /** LSH candidate pairs: signatures banded into `bands`; docs sharing any
-    * band hash become candidates. Returns (id_a, id_b) with id_a < id_b,
-    * deduped. Collision probability for Jaccard s: 1-(1-s^r)^b. Buckets
-    * larger than `maxBucketSize` are dropped (skew guard, see object doc). */
   /** The exploded (id, band, band-hash) frame behind [[minhashCandidates]] —
     * exposed for the skew-cap audit: `oversizedBuckets(minhashBanded(...),
     * Seq("_band", "_bandhash"), cap)` reports exactly what the capped
@@ -327,17 +320,47 @@ object Dedup {
       .select(col("_id"), col("pos").as("_band"), col("col").as("_bandhash"))
   }
 
+  /** The one bucketed self-join behind every LSH path: caps `banded` (an
+    * exploded frame with an `_id` column) per bucket, joins it with itself
+    * on `bucketCols` and keeps each pair once as `id_a < id_b`. Returns
+    * `(id_a, carry_a..., id_b, carry_b...)`: every `carry` column comes out
+    * suffixed `_a`/`_b`. Not deduped: a pair sharing several buckets
+    * repeats, and each caller filters before its own `distinct`. */
+  private def bucketPairs(banded: DataFrame, bucketCols: Seq[String],
+      maxBucket: Int, carry: Seq[String] = Nil): DataFrame = {
+    val capped = capBuckets(banded, bucketCols, maxBucket)
+    def side(s: String): DataFrame = capped.select(bucketCols.map(col) ++
+      (col("_id").as(s"id_$s") +: carry.map(c => col(c).as(s"${c}_$s"))): _*)
+    side("a").join(side("b"), bucketCols)
+      .where(col("id_a") < col("id_b"))
+      .drop(bucketCols: _*)
+  }
+
+  /** The one exact pair verify: joins the two-column `(id, payload)` `side`
+    * to both ends of the `(id_a, id_b)` candidates, scores the payloads,
+    * keeps scores ≥ `threshold` and returns `(id_a, id_b, name)` rounded
+    * to 6 places. */
+  private def verifyPairs(cands: DataFrame, side: DataFrame,
+      score: (Column, Column) => Column, name: String,
+      threshold: Double): DataFrame = {
+    val Array(id, p) = side.columns
+    cands
+      .join(side.select(col(id).as("id_a"), col(p).as(s"${p}_a")), Seq("id_a"))
+      .join(side.select(col(id).as("id_b"), col(p).as(s"${p}_b")), Seq("id_b"))
+      .withColumn(name, score(col(s"${p}_a"), col(s"${p}_b")))
+      .where(col(name) >= threshold)
+      .select(col("id_a"), col("id_b"), round(col(name), 6).as(name))
+  }
+
+  /** LSH candidate pairs: signatures banded into `bands`; docs sharing any
+    * band hash become candidates. Returns (id_a, id_b) with id_a < id_b,
+    * deduped. Collision probability for Jaccard s: 1-(1-s^r)^b. Buckets
+    * larger than `maxBucketSize` are dropped (skew guard, see object doc). */
   def minhashCandidates(df: DataFrame, idCol: String, textCol: String,
       shingleLen: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
-    val banded = minhashBanded(df, idCol, textCol, shingleLen, numHashes, bands)
-    val capped = capBuckets(banded, Seq("_band", "_bandhash"), maxBucketSize)
-    val a = capped.select(col("_band"), col("_bandhash"), col("_id").as("id_a"))
-    val b = capped.select(col("_band"), col("_bandhash"), col("_id").as("id_b"))
-    a.join(b, Seq("_band", "_bandhash"))
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-  }
+      maxBucketSize: Int = DefaultMaxBucketSize): DataFrame =
+    bucketPairs(minhashBanded(df, idCol, textCol, shingleLen, numHashes, bands),
+      Seq("_band", "_bandhash"), maxBucketSize).distinct()
 
   /** MinHash LSH near-dup pairs, verified with exact shingle Jaccard:
     * (id_a, id_b, jaccard). The verify join re-reads only (id, text) —
@@ -346,42 +369,24 @@ object Dedup {
     * in some LSH candidate pair, a tiny fraction of the corpus, so the
     * candidate-id set (materialized ids-only via `localCheckpoint`, the
     * cascade lineage discipline) is broadcast as a left-semi prefilter
-    * under the set projection (guide §3.2's semi-join shape). The
-    * previous form computed shingle sets for EVERY corpus row and fed
-    * them into both verify joins — two full-corpus set materializations
-    * whose rows were then almost all discarded (measured r9: see
-    * OPTIMIZATION_r09.md). Candidate ids are pair-bounded; a corpus whose
-    * candidate set outgrows broadcast needs the Bloom-prefilter variant
-    * instead (the decontaminateBloom shape).
-    *
-    * `verifyPrefilter = false` keeps the original lazy single-action plan
-    * (shingle sets computed for every input row): right when the INPUT is
-    * already bounded small by the caller's contract — e.g.
-    * [[incrementalMinhash]]'s append batch — where the prefilter's extra
-    * materialization job outweighs the skipped set computation (measured
-    * r9: q58's ~100-row batch paid 0.45 → 1.0 s under the prefilter;
-    * OPTIMIZATION_r09.md). Identical results either way. */
+    * under the set projection (guide §3.2's semi-join shape; PlanShapeSpec
+    * pins it). The previous form computed shingle sets for EVERY corpus
+    * row and fed them into both verify joins — two full-corpus set
+    * materializations whose rows were then almost all discarded (measured
+    * r9: see OPTIMIZATION_r09.md). Candidate ids are pair-bounded; a
+    * corpus whose candidate set outgrows broadcast needs the
+    * Bloom-prefilter variant instead (the decontaminateBloom shape). */
   def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.8, shingleLen: Int = 3,
       numHashes: Int = 64, bands: Int = 16,
-      maxBucketSize: Int = DefaultMaxBucketSize,
-      verifyPrefilter: Boolean = true): DataFrame = {
-    val cands0 = minhashCandidates(df, idCol, textCol, shingleLen, numHashes,
-      bands, maxBucketSize)
-    val cands = if (verifyPrefilter) cands0.localCheckpoint() else cands0
-    val sh0 = ensureParallelism(df)
-    val sh = (if (verifyPrefilter) {
-      val candIds = cands.select(col("id_a").as(idCol))
-        .unionByName(cands.select(col("id_b").as(idCol))).distinct()
-      sh0.join(broadcast(candIds), Seq(idCol), "left_semi")
-    } else sh0)
+      maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
+    val cands = minhashCandidates(df, idCol, textCol, shingleLen, numHashes,
+      bands, maxBucketSize).localCheckpoint()
+    val candIds = cands.select(col("id_a").as(idCol))
+      .unionByName(cands.select(col("id_b").as(idCol))).distinct()
+    val sh = ensureParallelism(df).join(broadcast(candIds), Seq(idCol), "left_semi")
       .select(col(idCol), shingleSet(col(textCol), shingleLen).as("_sh"))
-    cands
-      .join(sh.select(col(idCol).as("id_a"), col("_sh").as("_sh_a")), Seq("id_a"))
-      .join(sh.select(col(idCol).as("id_b"), col("_sh").as("_sh_b")), Seq("id_b"))
-      .withColumn("jaccard", jaccard(col("_sh_a"), col("_sh_b")))
-      .where(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
+    verifyPairs(cands, sh, jaccard, "jaccard", threshold)
   }
 
   // ------------------------------------------------------------- simhash
@@ -443,18 +448,9 @@ object Dedup {
       case TokenHashFamily.Custom(hash) => simhashSigColumnForm(c, bits, hash)
     }
 
-  /** 64-bit SimHash (xxhash64 token hashes — the fast default, native). */
-  def simhash64(c: Column): Column = simhashSig(c, 64)
-
   /** Hamming distance between two simhashes. */
   def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
-  /** SimHash near-dup pairs with Hamming ≤ maxHamming, found by the
-    * pigeonhole chunk trick: split the `bits`-wide hash into `maxHamming+1`
-    * chunks — any pair within the bound must agree on ≥1 whole chunk, so
-    * bucketing by (chunk_idx, chunk_value) finds ALL of them (exact recall)
-    * without an all-pairs join. Oversized chunk buckets are dropped
-    * (skew guard — see object doc). */
   /** The exploded (id, sim, chunk, chunk-value) frame behind
     * [[simhashNearDups]] — exposed for the skew-cap audit (see
     * [[minhashBanded]]). */
@@ -476,23 +472,22 @@ object Dedup {
       .select(col("_id"), col("_sim"), col("pos").as("_chunk"), col("col").as("_cv"))
   }
 
+  /** SimHash near-dup pairs with Hamming ≤ maxHamming, found by the
+    * pigeonhole chunk trick: split the `bits`-wide hash into `maxHamming+1`
+    * chunks — any pair within the bound must agree on ≥1 whole chunk, so
+    * bucketing by (chunk_idx, chunk_value) finds ALL of them (exact recall)
+    * without an all-pairs join. Oversized chunk buckets are dropped
+    * (skew guard — see object doc). */
   def simhashNearDups(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3, bits: Int = 64,
       family: TokenHashFamily = TokenHashFamily.XxHash64,
-      maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
-    val banded = simhashBanded(df, idCol, textCol, maxHamming, bits, family)
-    val capped = capBuckets(banded, Seq("_chunk", "_cv"), maxBucketSize)
-    val a = capped.select(col("_chunk"), col("_cv"),
-      col("_id").as("id_a"), col("_sim").as("_sim_a"))
-    val b = capped.select(col("_chunk"), col("_cv"),
-      col("_id").as("id_b"), col("_sim").as("_sim_b"))
-    a.join(b, Seq("_chunk", "_cv"))
-      .where(col("id_a") < col("id_b"))
+      maxBucketSize: Int = DefaultMaxBucketSize): DataFrame =
+    bucketPairs(simhashBanded(df, idCol, textCol, maxHamming, bits, family),
+        Seq("_chunk", "_cv"), maxBucketSize, carry = Seq("_sim"))
       .select(col("id_a"), col("id_b"),
         hamming64(col("_sim_a"), col("_sim_b")).cast("int").as("hamming"))
       .where(col("hamming") <= maxHamming)
       .distinct()
-  }
 
   // ------------------------------------------------- decontamination
 
@@ -517,18 +512,28 @@ object Dedup {
     * scan total, no corpus shuffle. */
   def decontaminate(corpus: DataFrame, idCol: String, textCol: String,
       benchmark: DataFrame, benchIdCol: String, benchTextCol: String,
-      n: Int = 8): DataFrame = {
-    val bng = broadcast(benchmark
-      .select(col(benchIdCol).as("_bench_id"),
-        explode(shingleSet(col(benchTextCol), n)).as("_ng"))
-      .distinct())
-    val cng = ensureParallelism(corpus)
-      .select(col(idCol), explode(shingleSet(col(textCol), n)).as("_ng"))
+      n: Int = 8): DataFrame =
+    ngramHits(ngrams(ensureParallelism(corpus), col(idCol), textCol, n),
+      broadcast(ngrams(benchmark, col(benchIdCol).as("_bench_id"),
+        benchTextCol, n).distinct()), idCol)
+
+  /** The `(id, _ng)` explode every n-gram decontamination variant runs on
+    * both its corpus side and its suite side: one row per distinct
+    * shingle of each text. */
+  private def ngrams(df: DataFrame, id: Column, textCol: String,
+      n: Int): DataFrame =
+    df.select(id, explode(shingleSet(col(textCol), n)).as("_ng"))
+
+  /** `(idCol, benchmarks_hit, ngrams_hit)` over the exact corpus × suite
+    * n-gram equi-join — shared by [[decontaminate]] and
+    * [[decontaminateBloom]], which differ only in how each side reaches
+    * it. */
+  private def ngramHits(cng: DataFrame, bng: DataFrame,
+      idCol: String): DataFrame =
     cng.join(bng, Seq("_ng"))
       .groupBy(col(idCol))
       .agg(countDistinct(col("_bench_id")).as("benchmarks_hit"),
         countDistinct(col("_ng")).as("ngrams_hit"))
-  }
 
   /** [[decontaminate]] for benchmark suites TOO BIG TO BROADCAST-JOIN —
     * same output, different scale path. The exact variant's broadcast
@@ -556,9 +561,7 @@ object Dedup {
     // feeds three consumers — the size count, the bloom build, and the
     // exact confirm join — and un-materialized each would re-run the
     // explode + shuffle-distinct over the full suite
-    val bng = benchmark
-      .select(col(benchIdCol).as("_bench_id"),
-        explode(shingleSet(col(benchTextCol), n)).as("_ng"))
+    val bng = ngrams(benchmark, col(benchIdCol).as("_bench_id"), benchTextCol, n)
       .distinct()
       .localCheckpoint()
     val grams = bng.select("_ng").distinct()
@@ -566,13 +569,9 @@ object Dedup {
     val bloom = grams.stat.bloomFilter("_ng", expected, fpp)
     val bc = corpus.sparkSession.sparkContext.broadcast(bloom)
     val mightContain = udf((s: String) => s != null && bc.value.mightContain(s))
-    val cng = ensureParallelism(corpus)
-      .select(col(idCol), explode(shingleSet(col(textCol), n)).as("_ng"))
+    val cng = ngrams(ensureParallelism(corpus), col(idCol), textCol, n)
       .where(mightContain(col("_ng"))) // map-side kill, no exchange above
-    cng.join(bng, Seq("_ng")) // exact confirm — strategy up to Catalyst
-      .groupBy(col(idCol))
-      .agg(countDistinct(col("_bench_id")).as("benchmarks_hit"),
-        countDistinct(col("_ng")).as("ngrams_hit"))
+    ngramHits(cng, bng, idCol) // exact confirm — strategy up to Catalyst
   }
 
   /** CONTAINMENT decontamination — the asymmetric complement of the
@@ -597,15 +596,12 @@ object Dedup {
       minContainment: Double = 0.8): DataFrame = {
     require(minContainment > 0 && minContainment <= 1,
       s"minContainment must be in (0,1]: $minContainment")
-    val bng = broadcast(benchmark
-      .select(col(benchIdCol).as("bench_id"),
-        explode(shingleSet(col(benchTextCol), n)).as("_ng"))
-      .distinct())
+    val bng = broadcast(ngrams(benchmark, col(benchIdCol).as("bench_id"),
+      benchTextCol, n).distinct())
     val sizes = broadcast(bng.groupBy(col("bench_id"))
       .agg(count(lit(1)).as("bench_ngrams")))
-    val cng = ensureParallelism(corpus)
-      .select(col(idCol), explode(shingleSet(col(textCol), n)).as("_ng"))
-    cng.join(bng, Seq("_ng"))
+    ngrams(ensureParallelism(corpus), col(idCol), textCol, n)
+      .join(bng, Seq("_ng"))
       .groupBy(col(idCol), col("bench_id"))
       .agg(countDistinct(col("_ng")).as("ngrams_hit"))
       .join(sizes, Seq("bench_id"))
@@ -833,40 +829,37 @@ object Dedup {
     * bucketed by id. At 10¹²-doc scale the diff never touches a payload
     * byte. */
   def versionDiff(oldManifest: DataFrame, newManifest: DataFrame,
+      idCol: String): DataFrame =
+    versionStatus(oldManifest, newManifest, idCol)
+      .where(col("status") =!= "unchanged")
+
+  /** One-row-per-status census over the same diff, INCLUDING 'unchanged'
+    * — the headline release-notes table. Same manifests-only contract as
+    * [[versionDiff]]. */
+  def versionDiffSummary(oldManifest: DataFrame, newManifest: DataFrame,
+      idCol: String): DataFrame =
+    versionStatus(oldManifest, newManifest, idCol)
+      .groupBy(col("status"))
+      .agg(count(lit(1)).as("docs"))
+
+  /** Every doc of either manifest with its status — `(idCol, status,
+    * old_fingerprint, new_fingerprint)`, status ∈ {'added', 'removed',
+    * 'changed', 'unchanged'} — from the one id-keyed full-outer join.
+    * Unchanged is null-safe equality, so a NULL-text doc on both sides is
+    * unchanged. */
+  private def versionStatus(oldManifest: DataFrame, newManifest: DataFrame,
       idCol: String): DataFrame = {
     val o = oldManifest.select(col(idCol).as("_oid"),
       col("fingerprint").as("old_fingerprint"))
     val n = newManifest.select(col(idCol).as("_nid"),
       col("fingerprint").as("new_fingerprint"))
     o.join(n, col("_oid") === col("_nid"), "full_outer")
-      .withColumn(idCol, coalesce(col("_oid"), col("_nid")))
-      .withColumn("status",
+      .select(coalesce(col("_oid"), col("_nid")).as(idCol),
         when(col("_oid").isNull, "added")
           .when(col("_nid").isNull, "removed")
-          .otherwise("changed"))
-      .where(col("_oid").isNull || col("_nid").isNull ||
-        !(col("old_fingerprint") <=> col("new_fingerprint")))
-      .select(col(idCol), col("status"), col("old_fingerprint"),
-        col("new_fingerprint"))
-  }
-
-  /** One-row-per-status census over the same diff, INCLUDING 'unchanged'
-    * — the headline release-notes table. Same manifests-only contract as
-    * [[versionDiff]]. */
-  def versionDiffSummary(oldManifest: DataFrame, newManifest: DataFrame,
-      idCol: String): DataFrame = {
-    val o = oldManifest.select(col(idCol).as("_oid"),
-      col("fingerprint").as("_ofp"))
-    val n = newManifest.select(col(idCol).as("_nid"),
-      col("fingerprint").as("_nfp"))
-    o.join(n, col("_oid") === col("_nid"), "full_outer")
-      .select(
-        when(col("_oid").isNull, "added")
-          .when(col("_nid").isNull, "removed")
-          .when(col("_ofp") <=> col("_nfp"), "unchanged")
-          .otherwise("changed").as("status"))
-      .groupBy(col("status"))
-      .agg(count(lit(1)).as("docs"))
+          .when(col("old_fingerprint") <=> col("new_fingerprint"), "unchanged")
+          .otherwise("changed").as("status"),
+        col("old_fingerprint"), col("new_fingerprint"))
   }
 
   /** Incremental (append-batch) exact dedup — the production ingest shape:
@@ -974,14 +967,20 @@ object Dedup {
     * cap discipline), verification joins ids-only candidates to the two
     * shingle sources, and the final classification is two left joins on
     * the batch id. With the stores bucketed by their keys only the batch
-    * ever shuffles. */
+    * ever shuffles.
+    *
+    * The batch's shingle sets are computed for every batch row, with no
+    * [[minhashNearDups]]-style candidate-id prefilter: the batch is the
+    * bounded ingest increment by this operator's contract, and on a
+    * bounded input the prefilter's extra materialization job costs more
+    * than the sets it skips (measured r9: q58's ~100-row batch went
+    * 0.45 → 1.0 s under the prefilter; OPTIMIZATION_r09.md). */
   def incrementalMinhash(batch: DataFrame, idCol: String, textCol: String,
       bandedStore: DataFrame, shStore: DataFrame, threshold: Double = 0.8,
       shingleLen: Int = 3, numHashes: Int = 64, bands: Int = 16,
       maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
-    val batchBanded = capBuckets(
-      minhashBanded(batch, idCol, textCol, shingleLen, numHashes, bands),
-      Seq("_band", "_bandhash"), maxBucketSize)
+    val banded = minhashBanded(batch, idCol, textCol, shingleLen, numHashes, bands)
+    val batchBanded = capBuckets(banded, Seq("_band", "_bandhash"), maxBucketSize)
     val corpusCands = batchBanded
       .join(bandedStore.select(col(idCol).as("_cid"),
         col("band").as("_band"), col("bandhash").as("_bandhash")),
@@ -999,13 +998,11 @@ object Dedup {
       .agg(min(struct(col("_cid"), col("_j"))).as("_best"))
       .select(col("_id").as(idCol), col("_best._cid").as("_corpus_keeper"),
         col("_best._j").as("_cj"))
-    // verifyPrefilter OFF: the batch is the bounded ingest increment by
-    // this operator's contract — the prefilter's extra materialization
-    // job costs more than it saves on a bounded input (see the
-    // minhashNearDups scaladoc)
-    val batchBest = minhashNearDups(batch, idCol, textCol, threshold,
-        shingleLen, numHashes, bands, maxBucketSize,
-        verifyPrefilter = false)
+    // in-batch pairs verify against batchSh with no candidate-id prefilter
+    // (see the scaladoc); bucketPairs caps the uncapped `banded` itself
+    val batchBest = verifyPairs(
+        bucketPairs(banded, Seq("_band", "_bandhash"), maxBucketSize).distinct(),
+        batchSh, jaccard, "jaccard", threshold)
       .groupBy(col("id_b"))
       .agg(min(struct(col("id_a"), col("jaccard"))).as("_best"))
       .select(col("id_b").as(idCol), col("_best.id_a").as("_batch_keeper"),
@@ -1117,12 +1114,7 @@ object Dedup {
       .select(col("_id"),
         posexplode(Similarity.tableBuckets(col("_v"), dim, planes, tables, seed)))
       .select(col("_id"), struct(col("pos").as("t"), col("col").as("b")).as("_tb"))
-    val capped = capBuckets(banded, Seq("_tb"), maxBucketSize)
-    val a = capped.select(col("_tb"), col("_id").as("id_a"))
-    val b = capped.select(col("_tb"), col("_id").as("id_b"))
-    val candIds = a.join(b, Seq("_tb"))
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
+    val candIds = bucketPairs(banded, Seq("_tb"), maxBucketSize).distinct()
     // NOTE (r9): a minhash-style candidate-id semi-join prefilter was
     // tried here and REVERTED after measurement — unlike the shingle-set
     // verify (where the prefilter saves an O(len²) per-row computation
@@ -1133,11 +1125,6 @@ object Dedup {
     // plain join degrades gracefully to SMJ. The prefilter only added an
     // eager materialization job (q18 0.64 → 1.07 s measured). See
     // OPTIMIZATION_r09.md.
-    candIds
-      .join(base.select(col("_id").as("id_a"), col("_v").as("_va")), Seq("id_a"))
-      .join(base.select(col("_id").as("id_b"), col("_v").as("_vb")), Seq("id_b"))
-      .withColumn("cosine", Similarity.cosine(col("_va"), col("_vb")))
-      .where(col("cosine") >= cosThreshold)
-      .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))
+    verifyPairs(candIds, base, Similarity.cosine, "cosine", cosThreshold)
   }
 }

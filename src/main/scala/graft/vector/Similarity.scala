@@ -221,13 +221,6 @@ object Similarity {
     -best.getField("ni")
   }
 
-  /** Deterministic hash-selected training sample: rows whose
-    * xxhash64(id) ≡ 0 (mod K), K sized from one ids-only count so the
-    * expected sample is ~`sampleSize` rows. Layout-INDEPENDENT (a pure
-    * function of the id, unlike `df.sample`, which depends on partition
-    * boundaries), so the trained centroids are reproducible regardless of
-    * how the corpus is partitioned. Exposed for the IvfSpec scan-size
-    * assertion. */
   /** (id, vector) projection + the hash-mod selector — the ONE definition
     * of the sampling predicate (trainCentroids' oversample retry reuses it
     * with a smaller modulus). */
@@ -236,6 +229,13 @@ object Similarity {
   private def hashSample(ids: DataFrame, k: Long): DataFrame =
     if (k <= 1L) ids else ids.where(pmod(xxhash64(col("_id")), lit(k)) === 0)
 
+  /** Deterministic hash-selected training sample: rows whose
+    * xxhash64(id) ≡ 0 (mod K), K sized from one ids-only count so the
+    * expected sample is ~`sampleSize` rows. Layout-INDEPENDENT (a pure
+    * function of the id, unlike `df.sample`, which depends on partition
+    * boundaries), so the trained centroids are reproducible regardless of
+    * how the corpus is partitioned. Exposed for the IvfSpec scan-size
+    * assertion. */
   private[vector] def trainingSample(corpus: DataFrame, idCol: String,
       vecCol: String, sampleSize: Int): DataFrame = {
     val ids = idProjection(corpus, idCol, vecCol)

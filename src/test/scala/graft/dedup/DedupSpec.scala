@@ -23,10 +23,6 @@ class DedupSpec extends AnyFunSuite {
     val kept = Dedup.exactKeep(docs, "doc_id", "text")
     // 1==2 exactly; 5 differs only by case → same normalized fingerprint
     assert(kept.select("doc_id").as[Long].collect().sorted === Array(1L, 3L, 4L))
-    val groups = Dedup.exactGroups(docs, "doc_id", "text").collect()
-    assert(groups.length === 1)
-    assert(groups.head.getAs[Long]("dup_count") === 3)
-    assert(groups.head.getAs[Long]("keeper_id") === 1L)
   }
 
   test("shingle Jaccard: near pair high, unrelated pair ~0") {
@@ -52,7 +48,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("simhash: identical texts collide, near texts within small hamming") {
-    val sims = docs.select($"doc_id", Dedup.simhash64($"text").as("sim"))
+    val sims = docs.select($"doc_id", Dedup.simhashSig($"text", 64).as("sim"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(sims(1L) === sims(2L))
     assert(java.lang.Long.bitCount(sims(1L) ^ sims(3L)) <= 16)
@@ -675,6 +671,39 @@ class DedupSpec extends AnyFunSuite {
       .collect()
     assert(out.length === 1)
     assert(out.head.getAs[String]("status") === "new", out.head.toString)
+  }
+
+  test("incrementalMinhash in-batch matches are minhashNearDups' per-id_b minimum") {
+    // chain 20 ~ 21 (J = 27/29) and 21 ~ 22 (J = 25/31); 20 vs 22 (J = 24/32)
+    // is a band candidate below the 0.8 line. The corpus shares nothing, so
+    // every match is in-batch.
+    val words = (1 to 30).map(i => s"w$i")
+    val d20 = words
+    val d21 = words.init :+ "x30"
+    val d22 = Seq("y1", "y2", "y3") ++ d21.drop(3)
+    val batch = Seq(
+      (20L, d20.mkString(" ")), (21L, d21.mkString(" ")),
+      (22L, d22.mkString(" ")),
+      (23L, "completely different words entirely here nothing shared at all"))
+      .toDF("doc_id", "text")
+    val corpus = Seq((1L, "alpha beta gamma delta epsilon zeta eta theta iota"))
+      .toDF("doc_id", "text")
+    val cands = Dedup.minhashCandidates(batch, "doc_id", "text")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(cands.contains((20L, 22L)), s"no below-threshold candidate: $cands")
+    val expected = Dedup.minhashNearDups(batch, "doc_id", "text")
+      .groupBy($"id_b").agg(min(struct($"id_a", $"jaccard")).as("m"))
+      .select($"id_b", $"m.id_a", $"m.jaccard").collect()
+      .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
+    val got = Dedup.incrementalMinhash(batch, "doc_id", "text",
+        Dedup.minhashStore(corpus, "doc_id", "text"),
+        Dedup.shingleStore(corpus, "doc_id", "text"))
+      .where($"status" === "near_dup_in_batch")
+      .select($"doc_id", $"dup_of", $"jaccard").collect()
+      .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
+    assert(expected === Map(21L -> ((20L, 0.931034)), 22L -> ((21L, 0.806452))),
+      expected.toString)
+    assert(got === expected)
   }
 
   test("line dedup: the first-occurrence rule is an aggregate, not a window") {

@@ -403,6 +403,29 @@ class PlanShapeSpec extends AnyFunSuite {
       s"cap added exchanges: capped=$capped uncapped=$uncapped")
   }
 
+  test("minhash verify computes shingle sets only above the candidate-id semi-join") {
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val plan = Dedup.minhashNearDups(docs, "doc_id", "text")
+        .queryExecution.executedPlan
+      // the O(len²) array_distinct projection: every instance must have the
+      // left-semi join on the candidate ids below it, so shingle sets are
+      // computed for candidate rows only
+      val setProjects = plan.collect {
+        case p: org.apache.spark.sql.execution.ProjectExec
+            if p.projectList.exists(_.exists(
+              _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.ArrayDistinct])) => p
+      }
+      assert(setProjects.nonEmpty, s"no shingle-set projection:\n$plan")
+      assert(setProjects.forall(_.collectFirst {
+        case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+            if j.joinType.sql == "LEFT SEMI" &&
+              j.leftKeys.exists(_.references.exists(_.name == "doc_id")) => j
+      }.isDefined), s"a shingle-set projection without the semi-join below it:\n$plan")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
   test("oversizedBuckets reports dropped buckets for monitoring") {
     import spark.implicits._
     val df = Seq.fill(30)("k").zipWithIndex.map(_.swap).toDF("id", "k")
